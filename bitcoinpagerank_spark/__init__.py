@@ -10,8 +10,7 @@ pipeline, see /root/reference) as an idiomatic Spark SQL engine:
 - ``functions`` — vectorized pandas/Arrow UDFs (HTML → text+links extractor),
                   vertex-id hashing, text-analysis and similarity helpers.
 - ``operators`` — edge-table construction (dedup, filters, dangling-vertex
-                  discovery, degrees, salting), CSR adjacency blocks,
-                  PageRank / connected components / label propagation /
+                  discovery, degrees, salting), PageRank / connected components / label propagation /
                   triangle counting, top-k & checksum reports, dedup and
                   ANN similarity operators for training-data pipelines.
 - ``plans``     — the reference's relational join chain re-expressed as

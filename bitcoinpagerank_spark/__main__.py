@@ -46,7 +46,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--tol", type=float, default=1e-6)
     ap.add_argument("--max-iter", type=int, default=100)
     ap.add_argument("--partitions", type=int, default=None)
-    ap.add_argument("--strategy", default="edges", choices=["edges", "csr"])
     ap.add_argument("--checkpoint-dir", default=None,
                     help="snapshot dir; any Hadoop FS scheme works "
                          "(file://, hdfs://, s3a://) — snapshots are Iceberg "
@@ -126,7 +125,7 @@ def main(argv: list[str] | None = None) -> int:
 
         edges = spark.read.parquet(args.input)
         kw = dict(alpha=args.alpha, tol=args.tol, max_iter=args.max_iter,
-                  num_partitions=args.partitions, strategy=args.strategy,
+                  num_partitions=args.partitions,
                   checkpoint_interval=args.checkpoint_interval)
         if args.resume and args.checkpoint_dir:
             res = resume_pagerank(spark, edges, args.checkpoint_dir, **kw)

@@ -25,14 +25,13 @@ State is O(|S|·|V|) rows like labeled BFS — seeds are a sample.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .edges import BROADCAST_HINT_MAX, DST, SRC
-from .lineage import group_shuffle_bytes, job_group, next_group
+from .lineage import run_round
 
 
 @dataclass
@@ -62,37 +61,27 @@ def _forward(spark, e, sources, num_partitions, max_iter, metrics):
     it = 0
     converged = False
     while it < max_iter:
-        t0 = time.monotonic()
-        # deterministic broadcast hints on the loop-tracked small sides
-        # (edges.py BROADCAST_HINT_MAX rationale — the bfs.py pattern)
-        f_side = frontier.select(F.col("id").alias(SRC), "src", "dist", "sigma")
-        if f_cnt <= BROADCAST_HINT_MAX:
-            f_side = F.broadcast(f_side)
-        anti_side = dist.select("src", "id")
-        if settled <= BROADCAST_HINT_MAX:
-            anti_side = F.broadcast(anti_side)
-        reached = (
-            e.join(f_side, SRC)
-            .select("src", F.col(DST).alias("id"),
-                    (F.col("dist") + 1).alias("dist"), "sigma")
-            .join(anti_side, ["src", "id"], "left_anti")
-            .groupBy("src", "id", "dist")
-            .agg(F.sum("sigma").alias("sigma"))
-        )
-        obs = Observation(f"btw_fwd_{it}")
-        grp = next_group("btw_fwd", it)
-        with job_group(spark, grp, "betweenness forward round"):
-            new_frontier = reached.observe(
-                obs, F.count(F.lit(1)).alias("cnt")
-            ).localCheckpoint(eager=True)
-            cnt = int(obs.get["cnt"] or 0)
-        srb, swb = group_shuffle_bytes(spark, grp)
+        with run_round(spark, "btw_fwd", it, "betweenness forward round") as rnd:
+            # deterministic broadcast hints on the loop-tracked small sides
+            # (edges.py BROADCAST_HINT_MAX rationale — the bfs.py pattern)
+            f_side = frontier.select(F.col("id").alias(SRC), "src", "dist", "sigma")
+            if f_cnt <= BROADCAST_HINT_MAX:
+                f_side = F.broadcast(f_side)
+            anti_side = dist.select("src", "id")
+            if settled <= BROADCAST_HINT_MAX:
+                anti_side = F.broadcast(anti_side)
+            reached = (
+                e.join(f_side, SRC)
+                .select("src", F.col(DST).alias("id"),
+                        (F.col("dist") + 1).alias("dist"), "sigma")
+                .join(anti_side, ["src", "id"], "left_anti")
+                .groupBy("src", "id", "dist")
+                .agg(F.sum("sigma").alias("sigma"))
+            )
+            new_frontier = rnd.checkpoint(reached, frontier=F.count(F.lit(1)))
+        cnt = rnd["frontier"]
         it += 1
-        metrics.append(
-            {"phase": "forward", "iteration": it, "frontier": cnt,
-             "wall_sec": time.monotonic() - t0,
-             "shuffle_read_bytes": srb, "shuffle_write_bytes": swb}
-        )
+        metrics.append({"phase": "forward", "iteration": it, **rnd})
         if cnt == 0:
             converged = True
             break
@@ -143,48 +132,36 @@ def betweenness_centrality(
         "delta", F.lit(0.0)
     ).localCheckpoint(eager=True)
     for level in range(max_d, 0, -1):
-        t0 = time.monotonic()
-        # successors at `level` push (sigma_v/sigma_w)·(1+delta_w) to
-        # their same-seed predecessors at level-1
-        succ = delta.where(F.col("dist") == level).select(
-            "src", F.col("id").alias("w"), F.col("sigma").alias("sigma_w"),
-            F.col("delta").alias("delta_w"),
-        )
-        contrib = (
-            e.join(succ.withColumnRenamed("w", DST), DST)
-            .select("src", F.col(SRC).alias("id"),
-                    (F.lit(1.0) + F.col("delta_w")).alias("t"),
-                    "sigma_w")
-            .join(
-                delta.where(F.col("dist") == level - 1)
-                .select("src", "id", F.col("sigma").alias("sigma_v")),
-                ["src", "id"],
+        with run_round(spark, "btw_bwd", level, "betweenness backward level") as rnd:
+            # successors at `level` push (sigma_v/sigma_w)·(1+delta_w) to
+            # their same-seed predecessors at level-1
+            succ = delta.where(F.col("dist") == level).select(
+                "src", F.col("id").alias("w"), F.col("sigma").alias("sigma_w"),
+                F.col("delta").alias("delta_w"),
             )
-            .groupBy("src", "id")
-            .agg(F.sum(F.col("sigma_v") / F.col("sigma_w") * F.col("t"))
-                 .alias("add"))
-        )
-        obs = Observation(f"btw_bwd_{level}")
-        grp = next_group("btw_bwd", level)
-        with job_group(spark, grp, "betweenness backward level"):
-            new_delta = (
-                delta.join(contrib, ["src", "id"], "left")
-                .select(
+            contrib = (
+                e.join(succ.withColumnRenamed("w", DST), DST)
+                .select("src", F.col(SRC).alias("id"),
+                        (F.lit(1.0) + F.col("delta_w")).alias("t"),
+                        "sigma_w")
+                .join(
+                    delta.where(F.col("dist") == level - 1)
+                    .select("src", "id", F.col("sigma").alias("sigma_v")),
+                    ["src", "id"],
+                )
+                .groupBy("src", "id")
+                .agg(F.sum(F.col("sigma_v") / F.col("sigma_w") * F.col("t"))
+                     .alias("add"))
+            )
+            delta = rnd.checkpoint(
+                delta.join(contrib, ["src", "id"], "left").select(
                     "src", "id", "dist", "sigma",
                     (F.col("delta") + F.coalesce(F.col("add"), F.lit(0.0)))
                     .alias("delta"),
-                )
-                .observe(obs, F.count(F.lit(1)).alias("cnt"))
-                .localCheckpoint(eager=True)
+                ),
+                rows=F.count(F.lit(1)),
             )
-            int(obs.get["cnt"] or 0)
-        srb, swb = group_shuffle_bytes(spark, grp)
-        metrics.append(
-            {"phase": "backward", "level": level,
-             "wall_sec": time.monotonic() - t0,
-             "shuffle_read_bytes": srb, "shuffle_write_bytes": swb}
-        )
-        delta = new_delta
+        metrics.append({"phase": "backward", "level": level, **rnd})
 
     scores = (
         delta.where(F.col("dist") > 0)  # v == s contributes nothing

@@ -13,14 +13,13 @@ by src once and reused.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .edges import BROADCAST_HINT_MAX, DST, SRC
-from .lineage import group_shuffle_bytes, job_group, next_group
+from .lineage import run_round
 
 
 @dataclass
@@ -78,34 +77,24 @@ def bfs_distances(
     it = 0
     metrics: list[dict] = []
     while it < max_iter:
-        t0 = time.monotonic()
-        # expand: out-neighbors of the frontier not yet settled
-        f_side = frontier.select(F.col("id").alias(SRC), "dist")
-        if broadcast_hints and f_cnt <= BROADCAST_HINT_MAX:
-            f_side = F.broadcast(f_side)
-        anti_side = dist.select("id")
-        if broadcast_hints and settled <= BROADCAST_HINT_MAX:
-            anti_side = F.broadcast(anti_side)
-        reached = (
-            e.join(f_side, SRC, "inner")
-            .select(F.col(DST).alias("id"), (F.col("dist") + 1).alias("dist"))
-            .distinct()
-            .join(anti_side, "id", "left_anti")
-        )
-        obs = Observation(f"bfs_round_{it}")
-        grp = next_group("bfs", it)
-        with job_group(spark, grp, "BFS frontier round"):
-            new_frontier = reached.observe(
-                obs, F.count(F.lit(1)).alias("cnt")
-            ).localCheckpoint(eager=True)
-            cnt = int(obs.get["cnt"] or 0)
-        srb, swb = group_shuffle_bytes(spark, grp)
+        with run_round(spark, "bfs", it, "BFS frontier round") as rnd:
+            # expand: out-neighbors of the frontier not yet settled
+            f_side = frontier.select(F.col("id").alias(SRC), "dist")
+            if broadcast_hints and f_cnt <= BROADCAST_HINT_MAX:
+                f_side = F.broadcast(f_side)
+            anti_side = dist.select("id")
+            if broadcast_hints and settled <= BROADCAST_HINT_MAX:
+                anti_side = F.broadcast(anti_side)
+            reached = (
+                e.join(f_side, SRC, "inner")
+                .select(F.col(DST).alias("id"), (F.col("dist") + 1).alias("dist"))
+                .distinct()
+                .join(anti_side, "id", "left_anti")
+            )
+            new_frontier = rnd.checkpoint(reached, frontier=F.count(F.lit(1)))
+        cnt = rnd["frontier"]
         it += 1
-        metrics.append(
-            {"iteration": it, "frontier": cnt,
-             "wall_sec": time.monotonic() - t0,
-             "shuffle_read_bytes": srb, "shuffle_write_bytes": swb}
-        )
+        metrics.append({"iteration": it, **rnd})
         if cnt == 0:
             converged = True
             break
@@ -156,33 +145,23 @@ def labeled_bfs(
     it = 0
     metrics: list[dict] = []
     while it < max_iter:
-        t0 = time.monotonic()
-        f_side = frontier.select(F.col("id").alias(SRC), "src", "dist")
-        if broadcast_hints and f_cnt <= BROADCAST_HINT_MAX:
-            f_side = F.broadcast(f_side)
-        anti_side = dist.select("src", "id")
-        if broadcast_hints and settled <= BROADCAST_HINT_MAX:
-            anti_side = F.broadcast(anti_side)
-        reached = (
-            e.join(f_side, SRC)
-            .select("src", F.col(DST).alias("id"), (F.col("dist") + 1).alias("dist"))
-            .distinct()
-            .join(anti_side, ["src", "id"], "left_anti")
-        )
-        obs = Observation(f"lbfs_round_{it}")
-        grp = next_group("lbfs", it)
-        with job_group(spark, grp, "labeled BFS frontier round"):
-            new_frontier = reached.observe(
-                obs, F.count(F.lit(1)).alias("cnt")
-            ).localCheckpoint(eager=True)
-            cnt = int(obs.get["cnt"] or 0)
-        srb, swb = group_shuffle_bytes(spark, grp)
+        with run_round(spark, "lbfs", it, "labeled BFS frontier round") as rnd:
+            f_side = frontier.select(F.col("id").alias(SRC), "src", "dist")
+            if broadcast_hints and f_cnt <= BROADCAST_HINT_MAX:
+                f_side = F.broadcast(f_side)
+            anti_side = dist.select("src", "id")
+            if broadcast_hints and settled <= BROADCAST_HINT_MAX:
+                anti_side = F.broadcast(anti_side)
+            reached = (
+                e.join(f_side, SRC)
+                .select("src", F.col(DST).alias("id"), (F.col("dist") + 1).alias("dist"))
+                .distinct()
+                .join(anti_side, ["src", "id"], "left_anti")
+            )
+            new_frontier = rnd.checkpoint(reached, frontier=F.count(F.lit(1)))
+        cnt = rnd["frontier"]
         it += 1
-        metrics.append(
-            {"iteration": it, "frontier": cnt,
-             "wall_sec": time.monotonic() - t0,
-             "shuffle_read_bytes": srb, "shuffle_write_bytes": swb}
-        )
+        metrics.append({"iteration": it, **rnd})
         if cnt == 0:
             converged = True
             break

@@ -33,14 +33,13 @@ unroll them as chained CTEs):
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .edges import SRC, DST, default_partitions, in_degrees, out_degrees, vertices
-from .lineage import group_shuffle_bytes, job_group, next_group
+from .lineage import run_round
 
 
 @dataclass
@@ -89,42 +88,30 @@ def katz_centrality(
     c = verts.withColumn("score", F.lit(float(beta))).localCheckpoint(eager=True)
     metrics: list[dict] = []
     for it in range(1, max_iter + 1):
-        t0 = time.monotonic()
-        grp = next_group("katz", it)
-        obs = Observation(f"katz_{it}")
         # ONE job per iteration: unlike eigenvector/HITS, Katz's update
         # uses only the constants alpha/beta — the observed total_recv is
         # a metrics row, not a plan input — so the receive aggregate and
         # the vertex update fuse into a single checkpointed plan (the
         # pagerank.py shape). F.sum skips nulls, so observing the fused
         # left join gives exactly the old recv-table total.
-        with job_group(spark, grp, "Katz step"):
+        with run_round(spark, "katz", it, "Katz step") as rnd:
             recv = (
                 e.join(c.select(F.col("id").alias(SRC), "score"), SRC)
                 .groupBy(F.col(DST).alias("id"))
                 .agg(F.sum("score").alias("recv"))
             )
-            c = (
-                verts.join(recv, "id", "left")
-                .select(
+            c = rnd.checkpoint(
+                verts.join(recv, "id", "left").select(
                     "id",
                     (
                         F.lit(float(beta))
                         + F.lit(float(alpha)) * F.coalesce("recv", F.lit(0.0))
                     ).alias("score"),
                     F.col("recv"),
-                )
-                .observe(obs, F.sum("recv").alias("total_recv"))
-                .localCheckpoint(eager=True)
-            )
-            total = float(obs.get["total_recv"] or 0.0)
-        c = c.select("id", "score")
-        srb, swb = group_shuffle_bytes(spark, grp)
-        metrics.append(
-            {"iteration": it, "total_recv": total,
-             "wall_sec": time.monotonic() - t0,
-             "shuffle_read_bytes": srb, "shuffle_write_bytes": swb}
-        )
+                ),
+                total_recv=F.sum("recv"),
+            ).select("id", "score")
+        metrics.append({"iteration": it, **rnd})
     e.unpersist()
     verts.unpersist()
     return CentralityResult(c, max_iter, metrics)
@@ -151,27 +138,18 @@ def eigenvector_centrality(
     x = verts.withColumn("score", F.lit(1.0 / n)).localCheckpoint(eager=True)
     metrics: list[dict] = []
     for it in range(1, max_iter + 1):
-        t0 = time.monotonic()
-        grp = next_group("eigen", it)
-        obs = Observation(f"eigen_{it}")
-        with job_group(spark, grp, "eigenvector power step"):
-            raw = (
+        with run_round(spark, "eigen", it, "eigenvector power step") as rnd:
+            raw = rnd.checkpoint(
                 e.join(x.select(F.col("id").alias(SRC), "score"), SRC)
                 .groupBy(F.col(DST).alias("id"))
-                .agg(F.sum("score").alias("raw"))
-                .observe(obs, F.sum("raw").alias("s"))
-                .localCheckpoint(eager=True)
+                .agg(F.sum("score").alias("raw")),
+                l1_norm=F.sum("raw"),
             )
-            s = float(obs.get["s"] or 0.0) or 1.0
+            s = rnd["l1_norm"] = float(rnd["l1_norm"]) or 1.0
         x = verts.join(raw, "id", "left").select(
             "id", (F.coalesce("raw", F.lit(0.0)) / F.lit(s)).alias("score")
         )
-        srb, swb = group_shuffle_bytes(spark, grp)
-        metrics.append(
-            {"iteration": it, "l1_norm": s,
-             "wall_sec": time.monotonic() - t0,
-             "shuffle_read_bytes": srb, "shuffle_write_bytes": swb}
-        )
+        metrics.append({"iteration": it, **rnd})
     e.unpersist()
     verts.unpersist()
     return CentralityResult(x, max_iter, metrics)
@@ -221,40 +199,28 @@ def salsa(
     a = None
     metrics: list[dict] = []
     for it in range(1, max_iter + 1):
-        t0 = time.monotonic()
-        grp = next_group("salsa", it)
-        obs_a = Observation(f"salsa_a_{it}")
-        with job_group(spark, grp, "SALSA authority half-step"):
-            a_raw = (
+        with run_round(spark, "salsa", it, "SALSA half-steps") as rnd:
+            a_raw = rnd.checkpoint(
                 e.join(h.select(F.col("id").alias(SRC), "score"), SRC)
                 .groupBy(F.col(DST).alias("id"))
-                .agg(F.sum(F.col("score") * F.col("inv_od")).alias("raw"))
-                .observe(obs_a, F.sum("raw").alias("s"))
-                .localCheckpoint(eager=True)
+                .agg(F.sum(F.col("score") * F.col("inv_od")).alias("raw")),
+                authority_norm=F.sum("raw"),
             )
-            sa = float(obs_a.get["s"] or 0.0) or 1.0
-        a = verts.join(a_raw, "id", "left").select(
-            "id", (F.coalesce("raw", F.lit(0.0)) / F.lit(sa)).alias("score")
-        )
-        obs_h = Observation(f"salsa_h_{it}")
-        with job_group(spark, grp, "SALSA hub half-step"):
-            h_raw = (
+            sa = rnd["authority_norm"] = float(rnd["authority_norm"]) or 1.0
+            a = verts.join(a_raw, "id", "left").select(
+                "id", (F.coalesce("raw", F.lit(0.0)) / F.lit(sa)).alias("score")
+            )
+            h_raw = rnd.checkpoint(
                 e.join(a.select(F.col("id").alias(DST), "score"), DST)
                 .groupBy(F.col(SRC).alias("id"))
-                .agg(F.sum(F.col("score") * F.col("inv_id")).alias("raw"))
-                .observe(obs_h, F.sum("raw").alias("s"))
-                .localCheckpoint(eager=True)
+                .agg(F.sum(F.col("score") * F.col("inv_id")).alias("raw")),
+                hub_norm=F.sum("raw"),
             )
-            sh = float(obs_h.get["s"] or 0.0) or 1.0
+            sh = rnd["hub_norm"] = float(rnd["hub_norm"]) or 1.0
         h = verts.join(h_raw, "id", "left").select(
             "id", (F.coalesce("raw", F.lit(0.0)) / F.lit(sh)).alias("score")
         )
-        srb, swb = group_shuffle_bytes(spark, grp)
-        metrics.append(
-            {"iteration": it, "authority_norm": sa, "hub_norm": sh,
-             "wall_sec": time.monotonic() - t0,
-             "shuffle_read_bytes": srb, "shuffle_write_bytes": swb}
-        )
+        metrics.append({"iteration": it, **rnd})
 
     scores = (
         h.select("id", F.col("score").alias("hub"))

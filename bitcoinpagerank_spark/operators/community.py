@@ -113,7 +113,7 @@ def _weighted_move_loop(
     half keeps its community that round. Convergence = two consecutive
     rounds with zero moves. Per round: two hash aggs + one bounded argmax
     window; move counts ride observe() on the round's checkpoint."""
-    from .lineage import eager_checkpoint, group_shuffle_bytes, job_group, next_group
+    from .lineage import eager_checkpoint, run_round
 
     sym = eager_checkpoint(
         sym_w.select(SRC, DST, F.col("w").cast("long").alias("w"))
@@ -125,7 +125,7 @@ def _weighted_move_loop(
     # separate full-sym aggregation job. `or 0` guards the empty set
     # (F.sum over zero rows is NULL — same guard as louvain_levels,
     # ADVICE r4 #1).
-    obs_m = Observation(f"{tag}_m_{next_group(tag, 0)}")
+    obs_m = Observation()
     deg = (
         sym.groupBy(F.col(SRC).alias("id"))
         .agg(F.sum("w").alias("k"))
@@ -140,59 +140,56 @@ def _weighted_move_loop(
     converged = False
     rounds = 0
     for r in range(max_rounds):
-        t0 = time.monotonic()
-        grp = next_group(tag, r)
-        csum = comm.join(deg, "id").groupBy("community").agg(
-            F.sum("k").alias("ctot")
-        )
-        # k_{i,c}: edge weight from i into each neighbor community
-        # (self-loops excluded — they relocate with i and cancel out)
-        kic = (
-            sym.where(F.col(SRC) != F.col(DST))
-            .join(
-                comm.select(F.col("id").alias(DST), F.col("community").alias("c")),
-                DST,
+        with run_round(spark, tag, r, "Louvain move round") as rnd:
+            csum = comm.join(deg, "id").groupBy("community").agg(
+                F.sum("k").alias("ctot")
             )
-            .groupBy(F.col(SRC).alias("id"), "c")
-            .agg(F.sum("w").alias("kic"))
-        )
-        cur = comm.select("id", F.col("community").alias("cur"))
-        # candidate set = neighbor communities ∪ current (kic=0 if absent)
-        kc = kic.join(cur, "id")  # (id, c, kic, cur)
-        have_cur = kc.where(F.col("c") == F.col("cur")).select("id")
-        stay = cur.join(have_cur, "id", "left_anti").select(
-            "id",
-            F.col("cur").alias("c"),
-            F.lit(0).cast("long").alias("kic"),
-            "cur",
-        )
-        cand = kc.unionByName(stay)
-        scored = (
-            cand.join(deg, "id")
-            .join(csum.select(F.col("community").alias("c"), "ctot"), "c")
-            .select(
+            # k_{i,c}: edge weight from i into each neighbor community
+            # (self-loops excluded — they relocate with i and cancel out)
+            kic = (
+                sym.where(F.col(SRC) != F.col(DST))
+                .join(
+                    comm.select(F.col("id").alias(DST), F.col("community").alias("c")),
+                    DST,
+                )
+                .groupBy(F.col(SRC).alias("id"), "c")
+                .agg(F.sum("w").alias("kic"))
+            )
+            cur = comm.select("id", F.col("community").alias("cur"))
+            # candidate set = neighbor communities ∪ current (kic=0 if absent)
+            kc = kic.join(cur, "id")  # (id, c, kic, cur)
+            have_cur = kc.where(F.col("c") == F.col("cur")).select("id")
+            stay = cur.join(have_cur, "id", "left_anti").select(
                 "id",
-                "c",
+                F.col("cur").alias("c"),
+                F.lit(0).cast("long").alias("kic"),
                 "cur",
-                (
-                    2 * m * F.col("kic")
-                    - F.col("k")
-                    * (
-                        F.col("ctot")
-                        - F.when(F.col("c") == F.col("cur"), F.col("k")).otherwise(0)
-                    )
-                ).alias("score2"),
             )
-        )
-        w = Window.partitionBy("id").orderBy(
-            F.desc("score2"),
-            F.when(F.col("c") == F.col("cur"), 0).otherwise(1),
-            F.asc("c"),
-        )
-        obs = Observation(f"{tag}_{r}")
-        eligible = (F.col("id") + r) % 2 == 0
-        with job_group(spark, grp, "Louvain move round"):
-            new_comm = (
+            cand = kc.unionByName(stay)
+            scored = (
+                cand.join(deg, "id")
+                .join(csum.select(F.col("community").alias("c"), "ctot"), "c")
+                .select(
+                    "id",
+                    "c",
+                    "cur",
+                    (
+                        2 * m * F.col("kic")
+                        - F.col("k")
+                        * (
+                            F.col("ctot")
+                            - F.when(F.col("c") == F.col("cur"), F.col("k")).otherwise(0)
+                        )
+                    ).alias("score2"),
+                )
+            )
+            w = Window.partitionBy("id").orderBy(
+                F.desc("score2"),
+                F.when(F.col("c") == F.col("cur"), 0).otherwise(1),
+                F.asc("c"),
+            )
+            eligible = (F.col("id") + r) % 2 == 0
+            comm = rnd.checkpoint(
                 scored.withColumn("rn", F.row_number().over(w))
                 .where(F.col("rn") == 1)
                 .select(
@@ -203,20 +200,13 @@ def _weighted_move_loop(
                     (eligible & (F.col("c") != F.col("cur")))
                     .cast("int")
                     .alias("moved"),
-                )
-                .observe(obs, F.sum("moved").alias("n_moved"))
-            )
-            new_comm = eager_checkpoint(new_comm)
-            n_moved = int(obs.get["n_moved"] or 0)
-        comm = new_comm.select("id", "community")
-        srb, swb = group_shuffle_bytes(spark, grp)
+                ),
+                reset_stats=True,
+                moved=F.sum("moved"),
+            ).select("id", "community")
         rounds = r + 1
-        metrics.append(
-            {"round": rounds, "moved": n_moved,
-             "wall_sec": time.monotonic() - t0,
-             "shuffle_read_bytes": srb, "shuffle_write_bytes": swb}
-        )
-        if n_moved == 0 and r > 0 and metrics[-2]["moved"] == 0:
+        metrics.append({"round": rounds, **rnd})
+        if rnd["moved"] == 0 and r > 0 and metrics[-2]["moved"] == 0:
             converged = True
             break
     return LouvainResult(comm, rounds, converged, metrics)

@@ -26,7 +26,7 @@ Both steps preserve connectivity and the invariant a > b; the pair set is
 a star forest rooted at component minima at the fixpoint. Convergence is
 detected with ZERO extra jobs: (count, XOR of xxhash64(a,b)) of the new
 pair set ride the per-round eager localCheckpoint via observe() — the
-pattern pagerank.py:272 established — and an unchanged signature means
+pattern lineage.run_round provides — and an unchanged signature means
 the set reached its fixpoint (bit_xor is order-independent and cannot
 overflow, unlike a hash SUM under ANSI mode; pairs are distinct so XOR
 cancellation cannot hide a change of two identical rows).
@@ -34,14 +34,13 @@ cancellation cannot hide a change of two identical rows).
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Observation
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .edges import SRC, DST, vertices
-from .lineage import group_shuffle_bytes, job_group, next_group
+from .lineage import run_round
 
 
 @dataclass
@@ -155,26 +154,15 @@ def connected_components(
     prev_sig: tuple | None = tuple(start_sig) if start_sig else None
     metrics: list[dict] = list(prior_metrics or [])
     while it < max_iter:
-        t0 = time.monotonic()
-        stepped = _small_star(_large_star(pairs))
-        obs = Observation(f"cc_round_{it}")
-        grp = next_group("cc", it)
-        with job_group(spark, grp, "connected-components round"):
-            new_pairs = stepped.observe(
-                obs,
-                F.count(F.lit(1)).alias("cnt"),
-                F.bit_xor(F.xxhash64("a", "b")).alias("hxor"),
-            ).localCheckpoint(eager=True)
-            agg = obs.get
-        srb, swb = group_shuffle_bytes(spark, grp)
-        sig = (agg["cnt"], agg["hxor"])
+        with run_round(spark, "cc", it, "connected-components round") as rnd:
+            pairs = rnd.checkpoint(
+                _small_star(_large_star(pairs)),
+                pairs=F.count(F.lit(1)),
+                hxor=F.bit_xor(F.xxhash64("a", "b")),
+            )
+        sig = (rnd["pairs"], rnd.pop("hxor"))
         it += 1
-        metrics.append(
-            {"iteration": it, "pairs": int(agg["cnt"] or 0),
-             "wall_sec": time.monotonic() - t0,
-             "shuffle_read_bytes": srb, "shuffle_write_bytes": swb}
-        )
-        pairs = new_pairs
+        metrics.append({"iteration": it, **rnd})
         if checkpoint_dir and (it - start_iteration) % checkpoint_interval == 0:
             _write_cc_snapshot(pairs, metrics, it, sig, checkpoint_dir,
                                input_sig=input_sig)
@@ -220,18 +208,15 @@ def _write_cc_snapshot(
 ) -> None:
     from ..sources.tablestore import TableStore
 
-    store = TableStore(pairs.sparkSession, checkpoint_dir)
-    loc = store.write_table(pairs.select("a", "b"), f"cc_iter{iteration:04d}")
-    store.write_manifest({
-        "kind": "components",
-        "iteration": iteration,
-        "final": final,
-        "pairs_path": loc,
-        "backend": store.backend,
-        "sig": list(sig) if sig else None,
-        "input_sig": list(input_sig) if input_sig else None,
-        "metrics": metrics,
-    })
+    TableStore(pairs.sparkSession, checkpoint_dir).write_snapshot(
+        pairs.select("a", "b"), f"cc_iter{iteration:04d}", "pairs_path",
+        kind="components",
+        iteration=iteration,
+        final=final,
+        sig=list(sig) if sig else None,
+        input_sig=list(input_sig) if input_sig else None,
+        metrics=metrics,
+    )
 
 
 def resume_components(

@@ -175,7 +175,8 @@ def lsh_candidate_pairs(
     unchanged, only spread. ``salt=1`` disables tiling."""
     sig_cols = [c for c in signatures.columns if c.startswith("mh_")]
     k = len(sig_cols)
-    assert k % bands == 0, "k must divide evenly into bands"
+    if k % bands:
+        raise ValueError(f"k={k} must divide evenly into bands={bands}")
     r = k // bands
     band_structs = [
         F.struct(
@@ -424,9 +425,11 @@ def simhash_neardup_pairs(
     the shuffle key — and only candidates pay the bit_count(xor) check.
     Input: (id, simhash) from ``simhash``."""
     n_blocks = bits // block_bits
-    assert n_blocks > max_hamming, (
-        "need more blocks than max_hamming for the pigeonhole guarantee"
-    )
+    if n_blocks <= max_hamming:
+        raise ValueError(
+            f"need more blocks ({n_blocks}) than max_hamming={max_hamming} "
+            "for the pigeonhole guarantee"
+        )
     mask = (1 << block_bits) - 1
     blocks = [
         F.struct(

@@ -8,7 +8,7 @@ SQL-portable — the classical L2 variant differs only by the norm):
 
 Execution shape: two jobs per iteration — each half-step is one
 edge-table join + by-key sum whose GLOBAL normalizer rides the eager
-localCheckpoint via observe() (the pagerank.py:272 pattern), and the
+localCheckpoint via observe() (the lineage.run_round pattern), and the
 division by that scalar folds lazily into the next half-step's scan, so
 normalization costs zero extra passes. The edge table is partitioned once
 by src (the authority step's join key); only vertex-sized tables move.
@@ -20,14 +20,13 @@ Vertices with no in-links get authority 0; no out-links → hub 0.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .edges import SRC, DST, default_partitions, vertices
-from .lineage import eager_checkpoint, group_shuffle_bytes, job_group, next_group
+from .lineage import run_round
 
 
 @dataclass
@@ -64,46 +63,36 @@ def hits(
     a = None
     metrics: list[dict] = []
     for it in range(1, max_iter + 1):
-        t0 = time.monotonic()
-        grp = next_group("hits", it)
-        # authority half-step: raw in-sums, normalizer observed on the
-        # checkpoint, division applied lazily on the checkpointed rows
-        obs_a = Observation(f"hits_a_{it}")
-        with job_group(spark, grp, "HITS authority half-step"):
-            a_raw = (
-                e.join(h.select(F.col("id").alias(SRC), "score"), SRC)
-                .groupBy(F.col(DST).alias("id"))
-                .agg(F.sum("score").alias("raw"))
-                .observe(obs_a, F.sum("raw").alias("s"))
-            )
-            # stats-resetting checkpoint: each half-step references the
+        with run_round(spark, "hits", it, "HITS half-steps") as rnd:
+            # authority half-step: raw in-sums, normalizer observed on the
+            # checkpoint, division applied lazily on the checkpointed rows.
+            # Stats-resetting checkpoints: each half-step references the
             # other table's checkpoint, compounding the size estimate
             # x2/iteration (236 digits after 8 iters measured)
-            a_raw = eager_checkpoint(a_raw)
-            sa = float(obs_a.get["s"] or 0.0) or 1.0
-        a = verts.join(a_raw, "id", "left").select(
-            "id", (F.coalesce(F.col("raw"), F.lit(0.0)) / F.lit(sa)).alias("score")
-        )
-        # hub half-step
-        obs_h = Observation(f"hits_h_{it}")
-        with job_group(spark, grp, "HITS hub half-step"):
-            h_raw = (
+            a_raw = rnd.checkpoint(
+                e.join(h.select(F.col("id").alias(SRC), "score"), SRC)
+                .groupBy(F.col(DST).alias("id"))
+                .agg(F.sum("score").alias("raw")),
+                reset_stats=True,
+                authority_norm=F.sum("raw"),
+            )
+            sa = rnd["authority_norm"] = float(rnd["authority_norm"]) or 1.0
+            a = verts.join(a_raw, "id", "left").select(
+                "id", (F.coalesce(F.col("raw"), F.lit(0.0)) / F.lit(sa)).alias("score")
+            )
+            # hub half-step
+            h_raw = rnd.checkpoint(
                 e.join(a.select(F.col("id").alias(DST), "score"), DST)
                 .groupBy(F.col(SRC).alias("id"))
-                .agg(F.sum("score").alias("raw"))
-                .observe(obs_h, F.sum("raw").alias("s"))
+                .agg(F.sum("score").alias("raw")),
+                reset_stats=True,
+                hub_norm=F.sum("raw"),
             )
-            h_raw = eager_checkpoint(h_raw)
-            sh = float(obs_h.get["s"] or 0.0) or 1.0
-        srb, swb = group_shuffle_bytes(spark, grp)
+            sh = rnd["hub_norm"] = float(rnd["hub_norm"]) or 1.0
         h = verts.join(h_raw, "id", "left").select(
             "id", (F.coalesce(F.col("raw"), F.lit(0.0)) / F.lit(sh)).alias("score")
         )
-        metrics.append(
-            {"iteration": it, "authority_norm": sa, "hub_norm": sh,
-             "wall_sec": time.monotonic() - t0,
-             "shuffle_read_bytes": srb, "shuffle_write_bytes": swb}
-        )
+        metrics.append({"iteration": it, **rnd})
 
     scores = (
         h.select("id", F.col("score").alias("hub"))

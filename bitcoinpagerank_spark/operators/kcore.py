@@ -8,19 +8,18 @@ formulation (each round: one degree aggregate + two semi-joins, all
 Catalyst). Rounds = peeling depth (worst case O(n) on a path with k=2;
 typically a handful on web graphs). Convergence detection rides the
 per-round eager localCheckpoint via observe() — zero extra jobs, the
-pagerank.py:272 pattern.
+lineage.run_round pattern.
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .edges import SRC, DST, undirected_view
-from .lineage import group_shuffle_bytes, job_group, next_group
+from .lineage import run_round
 
 
 @dataclass
@@ -57,31 +56,21 @@ def k_core(
     prev_cnt: int | None = None
     metrics: list[dict] = []
     while it < max_iter:
-        t0 = time.monotonic()
-        keep = (
-            pairs.groupBy(F.col(SRC).alias("id"))
-            .agg(F.count("*").alias("deg"))
-            .where(F.col("deg") >= k)
-            .select("id")
-        )
-        obs = Observation(f"kcore_round_{it}")
-        grp = next_group("kcore", it)
-        with job_group(spark, grp, "k-core peel round"):
-            new_pairs = (
-                pairs.join(keep.withColumnRenamed("id", SRC), SRC, "left_semi")
-                .join(keep.withColumnRenamed("id", DST), DST, "left_semi")
-                .observe(obs, F.count(F.lit(1)).alias("cnt"))
-                .localCheckpoint(eager=True)
+        with run_round(spark, "kcore", it, "k-core peel round") as rnd:
+            keep = (
+                pairs.groupBy(F.col(SRC).alias("id"))
+                .agg(F.count("*").alias("deg"))
+                .where(F.col("deg") >= k)
+                .select("id")
             )
-            cnt = int(obs.get["cnt"] or 0)
-        srb, swb = group_shuffle_bytes(spark, grp)
+            pairs = rnd.checkpoint(
+                pairs.join(keep.withColumnRenamed("id", SRC), SRC, "left_semi")
+                .join(keep.withColumnRenamed("id", DST), DST, "left_semi"),
+                pairs=F.count(F.lit(1)),
+            )
+        cnt = rnd["pairs"]
         it += 1
-        metrics.append(
-            {"iteration": it, "pairs": cnt,
-             "wall_sec": time.monotonic() - t0,
-             "shuffle_read_bytes": srb, "shuffle_write_bytes": swb}
-        )
-        pairs = new_pairs
+        metrics.append({"iteration": it, **rnd})
         if cnt == prev_cnt or cnt == 0:
             converged = True
             break
@@ -138,49 +127,31 @@ def core_numbers(
     it = 0
     metrics: list[dict] = []
     while it < max_iter:
-        t0 = time.monotonic()
-        nbr = und.join(
-            core.select(F.col("id").alias(SRC), "core"), SRC
-        ).select(
-            F.col(DST).alias("vid"),
-            F.col(SRC).alias("nid"),
-            F.col("core").alias("c"),
-        )
-        h = (
-            nbr.withColumn("rn", F.row_number().over(w))
-            .select("vid", F.least(F.col("rn"), F.col("c")).alias("cand"))
-            .groupBy("vid")
-            .agg(F.max("cand").alias("h"))
-        )
-        obs = Observation(f"coreness_round_{it}")
-        grp = next_group("coreness", it)
-        with job_group(spark, grp, "coreness h-index round"):
-            new_core = (
-                core.join(h, core["id"] == h["vid"], "inner")
-                .select(
+        with run_round(spark, "coreness", it, "coreness h-index round") as rnd:
+            nbr = und.join(
+                core.select(F.col("id").alias(SRC), "core"), SRC
+            ).select(
+                F.col(DST).alias("vid"),
+                F.col(SRC).alias("nid"),
+                F.col("core").alias("c"),
+            )
+            h = (
+                nbr.withColumn("rn", F.row_number().over(w))
+                .select("vid", F.least(F.col("rn"), F.col("c")).alias("cand"))
+                .groupBy("vid")
+                .agg(F.max("cand").alias("h"))
+            )
+            core = rnd.checkpoint(
+                core.join(h, core["id"] == h["vid"], "inner").select(
                     "id",
                     F.least(F.col("core"), F.col("h")).alias("core"),
                     F.col("core").alias("old"),
-                )
-                .observe(
-                    obs,
-                    F.sum(
-                        (F.col("core") != F.col("old")).cast("long")
-                    ).alias("changed"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            changed = int(obs.get["changed"] or 0)
-        srb, swb = group_shuffle_bytes(spark, grp)
-        new_core = new_core.select("id", "core")
+                ),
+                changed=F.sum((F.col("core") != F.col("old")).cast("long")),
+            ).select("id", "core")
         it += 1
-        metrics.append(
-            {"iteration": it, "changed": changed,
-             "wall_sec": time.monotonic() - t0,
-             "shuffle_read_bytes": srb, "shuffle_write_bytes": swb}
-        )
-        core = new_core
-        if changed == 0:
+        metrics.append({"iteration": it, **rnd})
+        if rnd["changed"] == 0:
             converged = True
             break
     und.unpersist()

@@ -14,14 +14,13 @@ per-round shuffle bytes land in the lineage metrics (the
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .edges import SRC, DST, undirected_view
-from .lineage import group_shuffle_bytes, job_group, next_group
+from .lineage import run_round
 
 
 @dataclass
@@ -80,25 +79,15 @@ def k_truss(
     prev_cnt: int | None = None
     metrics: list[dict] = []
     while it < max_iter:
-        t0 = time.monotonic()
-        keep = _supports(canon).where(F.col("support") >= k - 2).select("u", "v")
-        obs = Observation(f"ktruss_round_{it}")
-        grp = next_group("ktruss", it)
-        with job_group(spark, grp, "k-truss peel round"):
-            new_canon = (
-                canon.join(keep, ["u", "v"], "left_semi")
-                .observe(obs, F.count(F.lit(1)).alias("cnt"))
-                .localCheckpoint(eager=True)
+        with run_round(spark, "ktruss", it, "k-truss peel round") as rnd:
+            keep = _supports(canon).where(F.col("support") >= k - 2).select("u", "v")
+            canon = rnd.checkpoint(
+                canon.join(keep, ["u", "v"], "left_semi"),
+                edges=F.count(F.lit(1)),
             )
-            cnt = int(obs.get["cnt"] or 0)
-        srb, swb = group_shuffle_bytes(spark, grp)
+        cnt = rnd["edges"]
         it += 1
-        metrics.append(
-            {"iteration": it, "edges": cnt,
-             "wall_sec": time.monotonic() - t0,
-             "shuffle_read_bytes": srb, "shuffle_write_bytes": swb}
-        )
-        canon = new_canon
+        metrics.append({"iteration": it, **rnd})
         if cnt == prev_cnt or cnt == 0:
             converged = True
             break

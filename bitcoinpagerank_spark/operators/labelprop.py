@@ -10,20 +10,19 @@ and ``changed == 0`` exits early).
 Plan shape per iteration: join(labels) → groupBy(vertex,label).count →
 window row_number over (count desc, label asc) — all Catalyst built-ins.
 Convergence detection costs zero extra jobs: the changed-count rides the
-per-iteration eager localCheckpoint via observe() (the pagerank.py:272
+per-iteration eager localCheckpoint via observe() (the lineage.run_round
 pattern), so the Spark UI shows exactly one job per iteration.
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .edges import SRC, DST, undirected_view, vertices
-from .lineage import eager_checkpoint, group_shuffle_bytes, job_group, next_group
+from .lineage import run_round
 
 
 @dataclass
@@ -59,51 +58,35 @@ def label_propagation(
     it = 0
     metrics: list[dict] = []
     while it < max_iter:
-        t0 = time.monotonic()
-        nbr = (
-            und.join(labels, und[SRC] == labels["id"], "inner")
-            .select(F.col(DST).alias("vid"), "label")
-            .groupBy("vid", "label")
-            .agg(F.count("*").alias("cnt"))
-        )
-        best = (
-            nbr.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select("vid", F.col("label").alias("new_label"))
-        )
-        obs = Observation(f"lpa_iter_{it}")
-        grp = next_group("lpa", it)
-        with job_group(spark, grp, "label-propagation round"):
-            new_labels = (
+        with run_round(spark, "lpa", it, "label-propagation round") as rnd:
+            nbr = (
+                und.join(labels, und[SRC] == labels["id"], "inner")
+                .select(F.col(DST).alias("vid"), "label")
+                .groupBy("vid", "label")
+                .agg(F.count("*").alias("cnt"))
+            )
+            best = (
+                nbr.withColumn("rn", F.row_number().over(w))
+                .where(F.col("rn") == 1)
+                .select("vid", F.col("label").alias("new_label"))
+            )
+            # reset_stats (eager_checkpoint): the round plan references
+            # the previous labels checkpoint multiple times, so the
+            # carried size ESTIMATE compounds ~x3/round (2394 digits
+            # after 8 rounds measured) — reset it to the cache's real size
+            labels = rnd.checkpoint(
                 labels.join(best, labels["id"] == best["vid"], "left")
                 .select(
                     "id",
                     F.coalesce(F.col("new_label"), F.col("label")).alias("label"),
                     F.col("label").alias("old"),
-                )
-                .observe(
-                    obs,
-                    F.sum(
-                        (F.col("label") != F.col("old")).cast("long")
-                    ).alias("changed"),
-                )
-            )
-            # eager_checkpoint (not plain localCheckpoint): the round plan
-            # references the previous labels checkpoint multiple times, so
-            # the carried size ESTIMATE compounds ~x3/round (2394 digits
-            # after 8 rounds measured) — reset it to the cache's real size
-            new_labels = eager_checkpoint(new_labels)
-            changed = int(obs.get["changed"] or 0)
-        srb, swb = group_shuffle_bytes(spark, grp)
-        new_labels = new_labels.select("id", "label")
+                ),
+                reset_stats=True,
+                changed=F.sum((F.col("label") != F.col("old")).cast("long")),
+            ).select("id", "label")
         it += 1
-        metrics.append(
-            {"iteration": it, "changed": changed,
-             "wall_sec": time.monotonic() - t0,
-             "shuffle_read_bytes": srb, "shuffle_write_bytes": swb}
-        )
-        labels = new_labels
-        if changed == 0:
+        metrics.append({"iteration": it, **rnd})
+        if rnd["changed"] == 0:
             converged = True
             break
     und.unpersist()

@@ -1,44 +1,29 @@
-"""Per-iteration lineage helpers shared by the iterate loops.
+"""The round kernel shared by every iterate loop.
 
-Every iterative operator (PageRank, WCC, LPA, k-core, HITS) runs exactly
-one job per iteration; tagging that job with a unique group lets the
-driver read the iteration's shuffle read/write bytes back from the app
-status store (the same data the UI/REST API serves — available with the
-UI server disabled), fulfilling the north-star's "per-partition lineage
-(edge counts, delta-L1, shuffle bytes)" wording without an extra listener
-or event-log pass.
+Each loop round runs inside ``run_round``: its jobs carry one unique job
+group, its convergence aggregates ride the round's eager checkpoint via
+``observe()`` (zero extra stages), and its shuffle read/write bytes are
+read back from the app status store (the same data the UI/REST API
+serves — available with the UI server disabled), fulfilling the
+north-star's "per-partition lineage (edge counts, delta-L1, shuffle
+bytes)" wording without an extra listener or event-log pass.
 """
 
 from __future__ import annotations
 
+import threading
+import time
 from contextlib import contextmanager
 from typing import Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
-# unique job-group token per loop instance, so getJobIdsForGroup never
-# picks up a previous run's jobs in the same session; locked because
-# concurrent driver threads (e.g. SCC's overlapped fwd/bwd closures)
-# draw tokens from the same counter
-import threading
-
+# unique job-group token per round, so getJobIdsForGroup never picks up a
+# previous run's jobs in the same session; locked because concurrent
+# driver threads (e.g. SCC's overlapped fwd/bwd closures) draw tokens
+# from the same counter
 _SEQ = [0]
 _SEQ_LOCK = threading.Lock()
-
-
-def next_group(prefix: str, iteration: int) -> str:
-    with _SEQ_LOCK:
-        _SEQ[0] += 1
-        return f"{prefix}_{_SEQ[0]}_it{iteration}"
-
-
-@contextmanager
-def job_group(spark: SparkSession, group: str, desc: str) -> Iterator[None]:
-    spark.sparkContext.setJobGroup(group, desc)
-    try:
-        yield
-    finally:
-        spark.sparkContext.setJobGroup(None, None)
 
 
 def eager_checkpoint(df: DataFrame) -> DataFrame:
@@ -95,3 +80,65 @@ def group_shuffle_bytes(spark: SparkSession, group: str) -> tuple[int, int]:
         return read, write
     except Exception:
         return 0, 0
+
+
+class Round(dict):
+    """Metrics row of one loop round: the observed aggregates (NULL read
+    as 0) as each checkpoint lands, then ``wall_sec``,
+    ``shuffle_read_bytes`` and ``shuffle_write_bytes`` once the round's
+    ``with`` block exits."""
+
+    def __init__(self) -> None:
+        super().__init__()
+        self._inner: list[tuple[Observation, list[str]]] = []
+
+    def observe(self, df: DataFrame, **aggs: Column) -> DataFrame:
+        """Observe ``aggs`` on an inner node of the round's plan; read at
+        the next ``checkpoint``. An inner node whose whole subtree
+        produced zero rows can be skipped by AQE (no task ever runs the
+        stage), leaving its metrics row empty — zero executed rows means
+        the aggregates are 0."""
+        obs = Observation()
+        self._inner.append((obs, list(aggs)))
+        return df.observe(obs, *[c.alias(k) for k, c in aggs.items()])
+
+    def checkpoint(self, df: DataFrame, reset_stats: bool = False,
+                   **aggs: Column) -> DataFrame:
+        """Eager checkpoint of ``df`` with ``aggs`` observed on it —
+        ``eager_checkpoint`` when ``reset_stats``, else a plain eager
+        ``localCheckpoint`` (one job)."""
+        if aggs:
+            obs = Observation()
+            df = df.observe(obs, *[c.alias(k) for k, c in aggs.items()])
+        df = eager_checkpoint(df) if reset_stats else df.localCheckpoint(eager=True)
+        if aggs:
+            self.update({k: v or 0 for k, v in obs.get.items()})
+        for inner, keys in self._inner:
+            try:
+                got = inner.get
+            except Exception:
+                got = {}
+            self.update({k: got.get(k) or 0 for k in keys})
+        self._inner.clear()
+        return df
+
+
+@contextmanager
+def run_round(spark: SparkSession, op: str, iteration: int,
+              desc: str) -> Iterator[Round]:
+    """One iterate-loop round: every job inside runs under the job group
+    ``{op}_{seq}_it{iteration}``; the yielded ``Round`` is the round's
+    metrics row."""
+    t0 = time.monotonic()
+    with _SEQ_LOCK:
+        _SEQ[0] += 1
+        group = f"{op}_{_SEQ[0]}_it{iteration}"
+    rnd = Round()
+    spark.sparkContext.setJobGroup(group, desc)
+    try:
+        yield rnd
+    finally:
+        spark.sparkContext.setJobGroup(None, None)
+    srb, swb = group_shuffle_bytes(spark, group)
+    rnd.update(wall_sec=time.monotonic() - t0,
+               shuffle_read_bytes=srb, shuffle_write_bytes=swb)

@@ -32,11 +32,11 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .edges import SRC, DST, default_partitions, undirected_view, vertices
-from .lineage import group_shuffle_bytes, job_group, next_group
+from .lineage import run_round
 
 MIS_A = 1_103_515_245
 MIS_B = 777_771
@@ -94,51 +94,38 @@ def maximal_independent_set(
     converged = False
     rounds = 0
     for r in range(max_rounds):
-        t0 = time.monotonic()
-        grp = next_group("mis", r)
-        pri = active.select("id", F.struct(_priority(r).alias("p"), "id").alias("key"))
-        nbr_min = (
-            sym.join(pri.select(F.col("id").alias(DST), "key"), DST)
-            .groupBy(F.col(SRC).alias("id"))
-            .agg(F.min("key").alias("nkey"))
-        )
-        obs = Observation(f"mis_{r}")
-        with job_group(spark, grp, "MIS round"):
-            winners = (
+        with run_round(spark, "mis", r, "MIS round") as rnd:
+            pri = active.select(
+                "id", F.struct(_priority(r).alias("p"), "id").alias("key")
+            )
+            nbr_min = (
+                sym.join(pri.select(F.col("id").alias(DST), "key"), DST)
+                .groupBy(F.col(SRC).alias("id"))
+                .agg(F.min("key").alias("nkey"))
+            )
+            winners = rnd.checkpoint(
                 pri.join(nbr_min, "id", "left")
                 .where(F.col("nkey").isNull() | (F.col("key") < F.col("nkey")))
-                .select("id")
-                .observe(obs, F.count(F.lit(1)).alias("won"))
-                .localCheckpoint(eager=True)
+                .select("id"),
+                winners=F.count(F.lit(1)),
             )
-            won = int(obs.get["won"] or 0)
-        mis_frames.append(winners)
-        removed = winners.unionByName(
-            sym.join(winners.withColumnRenamed("id", SRC), SRC).select(
-                F.col(DST).alias("id")
+            mis_frames.append(winners)
+            removed = winners.unionByName(
+                sym.join(winners.withColumnRenamed("id", SRC), SRC).select(
+                    F.col(DST).alias("id")
+                )
+            ).distinct()
+            active = rnd.checkpoint(
+                active.join(removed, "id", "left_anti"),
+                active_after=F.count(F.lit(1)),
             )
-        ).distinct()
-        obs_a = Observation(f"mis_a_{r}")
-        with job_group(spark, grp, "MIS residual"):
-            active = (
-                active.join(removed, "id", "left_anti")
-                .observe(obs_a, F.count(F.lit(1)).alias("remaining"))
-                .localCheckpoint(eager=True)
+            sym = rnd.checkpoint(
+                sym.join(active.withColumnRenamed("id", SRC), SRC, "left_semi")
+                .join(active.withColumnRenamed("id", DST), DST, "left_semi")
             )
-            remaining = int(obs_a.get["remaining"] or 0)
-        sym = (
-            sym.join(active.withColumnRenamed("id", SRC), SRC, "left_semi")
-            .join(active.withColumnRenamed("id", DST), DST, "left_semi")
-            .localCheckpoint(eager=True)
-        )
-        srb, swb = group_shuffle_bytes(spark, grp)
         rounds = r + 1
-        metrics.append(
-            {"round": rounds, "winners": won, "active_after": remaining,
-             "wall_sec": time.monotonic() - t0,
-             "shuffle_read_bytes": srb, "shuffle_write_bytes": swb}
-        )
-        if remaining == 0:
+        metrics.append({"round": rounds, **rnd})
+        if rnd["active_after"] == 0:
             converged = True
             break
 

@@ -26,21 +26,16 @@ RunPageRankBasic.java:339-351,423-429):
   - localCheckpoint to truncate lineage; graph stays in executor memory —
     zero per-iteration disk round-trips of the edge table.
 
-Two physical strategies:
-  - ``edges``: pure DataFrame join/agg — Catalyst/Tungsten end-to-end,
-    whole-stage codegen, AQE-compatible. Default.
-  - ``csr``:   per-partition CSR blocks (numpy gather inside a cogrouped
-    Arrow UDF) — the north_star's explicit layout; wins when the rank
-    join dominates and degrees are skewed (salted blocks cap block size).
+Personalized PageRank runs the same loop with a per-vertex teleport
+vector in place of the uniform 1/N (``personalized_pagerank``).
 """
 
 from __future__ import annotations
 
-import math
-import time
 from dataclasses import dataclass, field
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .edges import (
@@ -49,24 +44,13 @@ from .edges import (
     default_partitions,
     contributions_table,
     out_degrees,
+    partition_lineage,
     vertices,
 )
-from .lineage import group_shuffle_bytes, job_group, next_group
+from .lineage import run_round
 
 ALPHA = 0.15  # jump probability, RunPageRankBasic.java:246
 DEFAULT_TOL = 1e-6
-# Default iterate-join shape: pinned shuffled-hash, NOT broadcast.
-# Interleaved A/B (local[16] pinned, 6 fixed iterations, medians of 3,
-# see BENCH.md): broadcasting the per-iteration scores into the edge-side
-# join is 18% slower at 50k vertices (2.37 s vs 1.96 s) and 25-30% slower
-# at 2M vertices (13.4 s vs 10.1 s) — the scores CHANGE every iteration,
-# so broadcast re-pays driver collect + re-broadcast serialization each
-# round, while the shuffled exchange between co-located executors is
-# plain memory traffic and contribs' src-partitioning is reused either
-# way. pagerank(broadcast_ranks=True) remains available for topologies
-# where an exchange is genuinely expensive (e.g. many small executors,
-# tiny |V|, cross-rack shuffle).
-BROADCAST_RANKS_DEFAULT = False
 
 
 @dataclass
@@ -113,52 +97,63 @@ class PageRankResult:
 
 def _init_state(
     spark: SparkSession, edges: DataFrame, num_partitions: int,
-    weight_col: str | None = None,
-) -> tuple[DataFrame, DataFrame, int, int]:
-    """Build (ranks0, contribs, n_vertices, n_edges).
+    weight_col: str | None = None, sources: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame, DataFrame, int, Callable[[float], Column]]:
+    """Build (base, ranks0, contribs, n_edges, teleport).
 
-    ranks carries a precomputed ``dangling`` flag so the per-iteration
-    missing-mass aggregate is a scan of the cached ranks, not a join.
+    The cached ``base`` carries a precomputed ``dangling`` flag so the
+    per-iteration missing-mass aggregate is a scan of the cached ranks,
+    not a join. ``teleport(mass)`` is each vertex's share of ``mass``:
+    the literal mass/N for uniform PageRank; with ``sources``
+    (personalized) the ranks carry a ``tp`` column, 1/|S| on the sources
+    and 0 elsewhere, and the share is mass·tp.
     """
-    verts = vertices(edges)
-    deg = out_degrees(edges)
-    base = (
-        verts.join(deg, "id", "left")
-        .select("id", F.col("out_degree").isNull().alias("dangling"))
-        .repartition(num_partitions, "id")
-    )
-    base = base.persist()
+    base = vertices(edges).join(out_degrees(edges), "id", "left")
+    flags = [F.col("out_degree").isNull().alias("dangling")]
+    if sources is not None:
+        src_flag = sources.select("id").distinct().withColumn("is_src", F.lit(True))
+        base = base.join(src_flag, "id", "left")
+        flags.append(F.coalesce("is_src", F.lit(False)).alias("is_src"))
+    base = base.select("id", *flags).repartition(num_partitions, "id").persist()
     n = base.count()
     if n == 0:
         raise ValueError(
             "PageRank on an empty graph: edge table has no non-null edges"
         )
+    if sources is None:
+        ranks0 = base.withColumn("score", F.lit(1.0 / n))
+
+        def teleport(mass: float) -> Column:
+            return F.lit(mass / n)
+    else:
+        s_cnt = base.where(F.col("is_src")).count()
+        if s_cnt == 0:
+            raise ValueError("personalized_pagerank: no source id is in the graph")
+        tp = F.when(F.col("is_src"), F.lit(1.0 / s_cnt)).otherwise(F.lit(0.0))
+        ranks0 = base.select("id", "dangling", tp.alias("tp"), tp.alias("score"))
+
+        def teleport(mass: float) -> Column:
+            return F.lit(mass) * F.col("tp")
     contribs = contributions_table(edges, num_partitions, weight_col).persist()
     n_edges = contribs.count()
-    ranks0 = base.withColumn("score", F.lit(1.0 / n))
-    return ranks0, contribs, n, n_edges
+    return base, ranks0, contribs, n_edges, teleport
 
 
 def _edges_step(
-    ranks: DataFrame, contribs: DataFrame, n: int, missing: float, alpha: float,
-    num_partitions: int | None = None,
-    broadcast_ranks: bool = False,
+    ranks: DataFrame, contribs: DataFrame, missing: float, alpha: float,
+    teleport: Callable[[float], Column],
 ) -> DataFrame:
-    """One power-iteration step via DataFrame join + hash aggregate.
+    """One power-iteration step via DataFrame join + hash aggregate:
+    p' = teleport(α) + (1-α)(p_recv + teleport(missing)).
 
-    Two physical shapes for the scores⋈contributions join, chosen by the
-    caller on vertex count (SURVEY §2.3 J6's "broadcast/shuffle hash
-    join"):
-    - ``broadcast_ranks=True`` (|V| under the broadcast threshold): the
-      iteration's scores are broadcast into the edge-side join — no
-      exchange on either join side; the only shuffle left is the
-      by-destination aggregate.
-    - shuffled hash join pinned via SHUFFLE_HASH otherwise (the loop sets
-      preferSortMergeJoin=false): contribs' src-partitioning is reused and
-      the |V|-side builds the hash table; sort-merge would re-sort the
-      |E|-scale table every iteration.
-    The old score is carried through so the convergence aggregate needs
-    no second join.
+    The scores⋈contributions join is a shuffled hash join pinned via
+    SHUFFLE_HASH (the loop sets preferSortMergeJoin=false):
+    contribs' src-partitioning is reused and the |V|-side builds the hash
+    table; sort-merge would re-sort the |E|-scale table every iteration.
+    Broadcasting the scores instead was measured slower: they change
+    every iteration, so broadcast re-pays driver collect + re-broadcast
+    each round (CHANGES.md has the A/B). The old score is carried through
+    so the convergence aggregate needs no second join.
 
     Measured (48M edges, 16 pinned cores, interleaved A/B): the standard
     partial+final hash aggregate beats an explicit repartition(dst) +
@@ -166,23 +161,19 @@ def _edges_step(
     spills ~460 MB and compacts little — the spill writes are page-cache
     absorbed and the partial pass warms the rows for the shuffle writer,
     so the default plan is kept."""
-    scores = ranks.select("id", "score")
-    scores = F.broadcast(scores) if broadcast_ranks else scores.hint("SHUFFLE_HASH")
+    state = [c for c in ranks.columns if c != "score"]
+    scores = ranks.select("id", "score").hint("SHUFFLE_HASH")
     recv = (
         contribs.join(scores, contribs[SRC] == F.col("id"), "inner")
         .select(F.col(DST), (F.col("score") * F.col("weight")).alias("mass"))
         .groupBy(DST)
         .agg(F.sum("mass").alias("recv"))
     )
-    new_score = F.lit(alpha / n) + F.lit(1.0 - alpha) * (
-        F.coalesce(F.col("recv"), F.lit(0.0)) + F.lit(missing / n)
+    new_score = teleport(alpha) + F.lit(1.0 - alpha) * (
+        F.coalesce(F.col("recv"), F.lit(0.0)) + teleport(missing)
     )
-    # same flag covers the update join: broadcasting the (≤|V|-row)
-    # aggregated recv side leaves the cached ranks partitioning untouched
-    recv_side = F.broadcast(recv) if broadcast_ranks else recv
-    return ranks.join(recv_side, ranks["id"] == recv[DST], "left").select(
-        "id",
-        "dangling",
+    return ranks.join(recv, ranks["id"] == recv[DST], "left").select(
+        *state,
         new_score.alias("score"),
         F.col("score").alias("old_score"),
     )
@@ -203,22 +194,18 @@ def pagerank(
     tol: float = DEFAULT_TOL,
     max_iter: int = 100,
     num_partitions: int | None = None,
-    strategy: str = "edges",
     checkpoint_dir: str | None = None,
     checkpoint_interval: int = 10,
     start_iteration: int = 0,
     start_ranks: DataFrame | None = None,
     prior_metrics: list["IterationMetrics"] | None = None,
-    csr_max_block_edges: int | None = None,
     weight_col: str | None = None,
-    broadcast_ranks: bool | None = None,
 ) -> PageRankResult:
     """Run PageRank on a (src_id, dst_id) edge DataFrame.
 
     ``weight_col`` names an explicit per-edge weight column: vertex u then
     sends score(u)·w(u,v)/Σw(u,·) along each edge (weighted PageRank;
-    unweighted = all weights equal). Only the ``edges`` strategy supports
-    weights.
+    unweighted = all weights equal).
 
     ``edges`` need not be pre-deduplicated — callers that want reference
     parity (BuildTextGraph dedup) should pass ``dedup_edges(e)``; parallel
@@ -239,14 +226,30 @@ def pagerank(
     a resumed run carry the full pre-resume trajectory (a second
     interrupt+resume keeps every iteration's metrics).
     """
+    return _pagerank_loop(
+        spark, edges, alpha, tol, max_iter, num_partitions, checkpoint_dir,
+        checkpoint_interval, start_iteration, start_ranks, prior_metrics,
+        weight_col,
+    )
+
+
+def _pagerank_loop(
+    spark: SparkSession,
+    edges: DataFrame,
+    alpha: float,
+    tol: float,
+    max_iter: int,
+    num_partitions: int | None,
+    checkpoint_dir: str | None = None,
+    checkpoint_interval: int = 10,
+    start_iteration: int = 0,
+    start_ranks: DataFrame | None = None,
+    prior_metrics: list[IterationMetrics] | None = None,
+    weight_col: str | None = None,
+    sources: DataFrame | None = None,
+) -> PageRankResult:
     if num_partitions is None:
         num_partitions = default_partitions(spark, edges)
-
-    if strategy == "csr":
-        if weight_col is not None:
-            raise ValueError("weight_col requires strategy='edges'")
-        from .csr import csr_step, build_csr_blocks  # local import: optional path
-
     # Pin the iterate loop's partitioning: AQE coalescing would re-plan
     # every iteration (driver-serial work) and destabilize the per-partition
     # lineage rows (SURVEY.md §4.2 R3). Measured ~20% faster at local[16]
@@ -260,136 +263,82 @@ def pagerank(
     # side and builds on the vertex side (always the smaller one here)
     spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
     try:
-        return _pagerank_loop(
-            spark, edges, alpha, tol, max_iter, num_partitions, strategy,
-            checkpoint_dir, checkpoint_interval, start_iteration, start_ranks,
-            prior_metrics, csr_max_block_edges, weight_col, broadcast_ranks,
+        base, ranks0, contribs, n_edges, teleport = _init_state(
+            spark, edges, num_partitions, weight_col, sources
         )
+        state = [c for c in ranks0.columns if c != "score"]
+        if start_ranks is not None:
+            ranks = (
+                start_ranks.join(ranks0.select(*state), "id", "inner")
+                .select(*state, "score")
+                .repartition(num_partitions, "id")
+            )
+        else:
+            ranks = ranks0
+        ranks = ranks.localCheckpoint(eager=True)
+
+        part_lineage = [
+            (r["part"], r["edge_count"])
+            for r in partition_lineage(contribs, num_partitions).collect()
+        ]
+
+        # missing mass for the first step: Σ score over dangling vertices
+        # (one scan of the cached ranks; afterwards each iteration's single
+        # aggregate hands back the NEXT iteration's dangling mass for free —
+        # replaces the reference's per-reducer side files + driver fold).
+        missing = (
+            ranks.where(F.col("dangling")).agg(F.sum("score").alias("m")).first()["m"]
+            or 0.0
+        )
+
+        metrics: list[IterationMetrics] = list(prior_metrics or [])
+        converged = False
+        it = start_iteration
+        while it < max_iter:
+            # ONE job per iteration: the convergence metrics ride the
+            # checkpoint materialization itself via observe() — (L1 delta,
+            # total mass, next dangling mass) cost zero extra stages.
+            # Checksum analog of CheckSumPageRank.java:44-55; side-file
+            # analog per SURVEY §2.1 S8.
+            with run_round(spark, "pr", it, "pagerank iteration") as rnd:
+                new_ranks = rnd.checkpoint(
+                    _edges_step(ranks, contribs, missing, alpha, teleport),
+                    delta=F.sum(F.abs(F.col("score") - F.col("old_score"))),
+                    total=F.sum("score"),
+                    dm=F.sum(F.when(F.col("dangling"), F.col("score")).otherwise(0.0)),
+                )
+            delta = float(rnd["delta"])
+            it += 1
+            metrics.append(
+                IterationMetrics(
+                    iteration=it,
+                    delta_l1=delta,
+                    total_mass=float(rnd["total"]),
+                    missing_mass=missing,
+                    edges_processed=n_edges,
+                    num_partitions=num_partitions,
+                    wall_sec=rnd["wall_sec"],
+                    shuffle_read_bytes=rnd["shuffle_read_bytes"],
+                    shuffle_write_bytes=rnd["shuffle_write_bytes"],
+                )
+            )
+            ranks = new_ranks.select(*state, "score")
+            missing = float(rnd["dm"])
+            if checkpoint_dir and it % checkpoint_interval == 0:
+                _write_snapshot(ranks, metrics, it, checkpoint_dir, part_lineage)
+            if delta <= tol:
+                converged = True
+                break
+        if checkpoint_dir:
+            _write_snapshot(ranks, metrics, it, checkpoint_dir, part_lineage,
+                            final=True)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
         spark.conf.set("spark.sql.join.preferSortMergeJoin", smj_before)
-
-
-def _pagerank_loop(
-    spark: SparkSession,
-    edges: DataFrame,
-    alpha: float,
-    tol: float,
-    max_iter: int,
-    num_partitions: int,
-    strategy: str,
-    checkpoint_dir: str | None,
-    checkpoint_interval: int,
-    start_iteration: int,
-    start_ranks: DataFrame | None,
-    prior_metrics: list[IterationMetrics] | None = None,
-    csr_max_block_edges: int | None = None,
-    weight_col: str | None = None,
-    broadcast_ranks: bool | None = None,
-) -> PageRankResult:
-    if strategy == "csr":
-        from .csr import csr_step, build_csr_blocks, DEFAULT_MAX_BLOCK_EDGES
-
-    ranks0, contribs, n, n_edges = _init_state(
-        spark, edges, num_partitions, weight_col
-    )
-    if broadcast_ranks is None:
-        broadcast_ranks = BROADCAST_RANKS_DEFAULT
-    if start_ranks is not None:
-        ranks = (
-            start_ranks.join(ranks0.select("id", "dangling"), "id", "inner")
-            .select("id", "dangling", "score")
-            .repartition(num_partitions, "id")
-        )
-    else:
-        ranks = ranks0
-    ranks = ranks.localCheckpoint(eager=True)
-
-    csr_blocks = None
-    if strategy == "csr":
-        csr_blocks = build_csr_blocks(
-            edges,
-            num_partitions,
-            max_block_edges=csr_max_block_edges or DEFAULT_MAX_BLOCK_EDGES,
-        ).persist()
-        csr_blocks.count()
-
-    from .edges import partition_lineage as _plin
-
-    part_lineage = [
-        (r["part"], r["edge_count"])
-        for r in _plin(contribs, num_partitions).collect()
-    ]
-
-    # missing mass for the first step: Σ score over dangling vertices (one
-    # scan of the cached ranks; afterwards each iteration's single aggregate
-    # hands back the NEXT iteration's dangling mass for free — replaces the
-    # reference's per-reducer side files + driver fold).
-    missing = (
-        ranks.where(F.col("dangling")).agg(F.sum("score").alias("m")).first()["m"]
-        or 0.0
-    )
-
-    metrics: list[IterationMetrics] = list(prior_metrics or [])
-    converged = False
-    it = start_iteration
-    while it < max_iter:
-        t0 = time.monotonic()
-        if strategy == "csr":
-            new_ranks = csr_step(ranks, csr_blocks, n, missing, alpha, num_partitions)
-        else:
-            new_ranks = _edges_step(ranks, contribs, n, missing, alpha,
-                                    num_partitions,
-                                    broadcast_ranks=broadcast_ranks)
-
-        # ONE job per iteration: the convergence metrics ride the checkpoint
-        # materialization itself via observe() — (L1 delta, total mass, next
-        # dangling mass) cost zero extra stages. Checksum analog of
-        # CheckSumPageRank.java:44-55; side-file analog per SURVEY §2.1 S8.
-        from pyspark.sql import Observation
-
-        obs = Observation(f"pr_iter_{it}")
-        group = next_group("pr", it)
-        with job_group(spark, group, "pagerank iteration"):
-            new_ranks = new_ranks.observe(
-                obs,
-                F.sum(F.abs(F.col("score") - F.col("old_score"))).alias("delta"),
-                F.sum("score").alias("total"),
-                F.sum(
-                    F.when(F.col("dangling"), F.col("score")).otherwise(0.0)
-                ).alias("dm"),
-            ).localCheckpoint(eager=True)
-            agg = obs.get
-        srb, swb = group_shuffle_bytes(spark, group)
-        delta, total = float(agg["delta"]), float(agg["total"])
-        it += 1
-        metrics.append(
-            IterationMetrics(
-                iteration=it,
-                delta_l1=delta,
-                total_mass=total,
-                missing_mass=missing,
-                edges_processed=n_edges,
-                num_partitions=num_partitions,
-                wall_sec=time.monotonic() - t0,
-                shuffle_read_bytes=srb,
-                shuffle_write_bytes=swb,
-            )
-        )
-        ranks = new_ranks.select("id", "dangling", "score")
-        missing = float(agg["dm"])
-        if checkpoint_dir and it % checkpoint_interval == 0:
-            _write_snapshot(ranks, metrics, it, checkpoint_dir,
-                            part_lineage=part_lineage)
-        if delta <= tol:
-            converged = True
-            break
-
-    if checkpoint_dir:
-        _write_snapshot(ranks, metrics, it, checkpoint_dir, final=True,
-                        part_lineage=part_lineage)
-    result = ranks.select("id", "score")
-    return PageRankResult(result, it, converged, metrics, part_lineage)
+    base.unpersist()
+    contribs.unpersist()
+    return PageRankResult(ranks.select("id", "score"), it, converged, metrics,
+                          part_lineage)
 
 
 # ---------------------------------------------------------------- snapshots
@@ -406,21 +355,18 @@ def _write_snapshot(
     metrics: list[IterationMetrics],
     iteration: int,
     checkpoint_dir: str,
+    part_lineage: list[tuple[int, int]],
     final: bool = False,
-    part_lineage: list | None = None,
 ) -> None:
     from ..sources.tablestore import TableStore
 
-    store = TableStore(ranks.sparkSession, checkpoint_dir)
-    loc = store.write_table(ranks.select("id", "score"), f"iter{iteration:04d}")
-    store.write_manifest({
-        "iteration": iteration,
-        "final": final,
-        "ranks_path": loc,
-        "backend": store.backend,
-        "metrics": [vars(m) for m in metrics],
-        "partition_lineage": [list(t) for t in (part_lineage or [])],
-    })
+    TableStore(ranks.sparkSession, checkpoint_dir).write_snapshot(
+        ranks.select("id", "score"), f"iter{iteration:04d}", "ranks_path",
+        iteration=iteration,
+        final=final,
+        metrics=[vars(m) for m in metrics],
+        partition_lineage=[list(t) for t in part_lineage],
+    )
 
 
 def load_snapshot(
@@ -475,124 +421,18 @@ def personalized_pagerank(
 
         r' = α·t + (1-α)(Pᵀ r + missing·t),  t = 1/|S| on S, else 0
 
-    Same execution shape as ``pagerank`` (one observe-fused job per
-    iteration, edge table partitioned once); total mass stays 1 because
-    all leaked mass returns to S. ``sources`` may be a DataFrame with an
+    Runs ``pagerank``'s loop with the teleport vector t in place of 1/N
+    (one observe-fused job per iteration, edge table partitioned once);
+    total mass stays 1 because all leaked mass returns to S. ``sources`` may be a DataFrame with an
     ``id`` column or a list of vertex ids; ids not present in the graph
     are ignored (at least one must remain)."""
     if isinstance(sources, (list, tuple, set)):
         sources = spark.createDataFrame(
             [(int(s),) for s in sources], "id long"
         )
-    if num_partitions is None:
-        num_partitions = default_partitions(spark, edges)
-
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        return _ppr_loop(
-            spark, edges, sources, alpha, tol, max_iter, num_partitions
-        )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-
-
-def _ppr_loop(
-    spark: SparkSession,
-    edges: DataFrame,
-    sources: DataFrame,
-    alpha: float,
-    tol: float,
-    max_iter: int,
-    num_partitions: int,
-) -> PageRankResult:
-    from pyspark.sql import Observation
-
-    verts = vertices(edges)
-    deg = out_degrees(edges)
-    src_flag = sources.select("id").distinct().withColumn(
-        "is_src", F.lit(True)
+    return _pagerank_loop(
+        spark, edges, alpha, tol, max_iter, num_partitions, sources=sources
     )
-    base = (
-        verts.join(deg, "id", "left")
-        .join(src_flag, "id", "left")
-        .select(
-            "id",
-            F.col("out_degree").isNull().alias("dangling"),
-            F.coalesce("is_src", F.lit(False)).alias("is_src"),
-        )
-        .repartition(num_partitions, "id")
-        .persist()
-    )
-    s_cnt = base.where(F.col("is_src")).count()
-    if s_cnt == 0:
-        raise ValueError("personalized_pagerank: no source id is in the graph")
-    base = base.withColumn(
-        "tp", F.when(F.col("is_src"), F.lit(1.0 / s_cnt)).otherwise(F.lit(0.0))
-    ).drop("is_src")
-    contribs = contributions_table(edges, num_partitions).persist()
-    n_edges = contribs.count()
-
-    ranks = base.withColumn("score", F.col("tp")).localCheckpoint(eager=True)
-    missing = (
-        ranks.where(F.col("dangling")).agg(F.sum("score").alias("m")).first()["m"]
-        or 0.0
-    )
-
-    metrics: list[IterationMetrics] = []
-    converged = False
-    it = 0
-    while it < max_iter:
-        t0 = time.monotonic()
-        recv = (
-            contribs.join(ranks.select("id", "score"),
-                          contribs[SRC] == F.col("id"), "inner")
-            .select(F.col(DST), (F.col("score") * F.col("weight")).alias("mass"))
-            .groupBy(DST)
-            .agg(F.sum("mass").alias("recv"))
-        )
-        new_score = F.lit(alpha) * F.col("tp") + F.lit(1.0 - alpha) * (
-            F.coalesce(F.col("recv"), F.lit(0.0))
-            + F.lit(missing) * F.col("tp")
-        )
-        obs = Observation(f"ppr_iter_{it}")
-        new_ranks = (
-            ranks.join(recv, ranks["id"] == recv[DST], "left")
-            .select(
-                "id", "dangling", "tp",
-                new_score.alias("score"),
-                F.col("score").alias("old_score"),
-            )
-            .observe(
-                obs,
-                F.sum(F.abs(F.col("score") - F.col("old_score"))).alias("delta"),
-                F.sum("score").alias("total"),
-                F.sum(
-                    F.when(F.col("dangling"), F.col("score")).otherwise(0.0)
-                ).alias("dm"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        agg = obs.get
-        delta, total = float(agg["delta"]), float(agg["total"])
-        it += 1
-        metrics.append(
-            IterationMetrics(
-                iteration=it, delta_l1=delta, total_mass=total,
-                missing_mass=missing, edges_processed=n_edges,
-                num_partitions=num_partitions,
-                wall_sec=time.monotonic() - t0,
-            )
-        )
-        ranks = new_ranks.select("id", "dangling", "tp", "score")
-        missing = float(agg["dm"])
-        if delta <= tol:
-            converged = True
-            break
-
-    base.unpersist()
-    contribs.unpersist()
-    return PageRankResult(ranks.select("id", "score"), it, converged, metrics)
 
 
 def checksum(ranks: DataFrame, digits: int = 2) -> float:
@@ -629,8 +469,6 @@ def warm_start_pagerank(
     instead of tens — the re-crawl cost becomes proportional to how much
     the graph actually moved.
     """
-    from .edges import vertices
-
     verts = vertices(edges)
     n = verts.count()
     aligned = (

@@ -37,11 +37,11 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .edges import SRC, DST
-from .lineage import eager_checkpoint, group_shuffle_bytes, job_group, next_group
+from .lineage import eager_checkpoint, run_round
 
 
 @dataclass
@@ -82,30 +82,27 @@ def _min_label_closure(
     small = n_verts is not None and n_verts <= BROADCAST_LABELS_MAX
     lab = verts.select("id", F.col("id").alias("lab")).localCheckpoint(eager=True)
     for it in range(max_iter):
-        t0 = time.monotonic()
-        lab_side = lab.select(F.col("id").alias(SRC), "lab")
-        pushed = (
-            edges.join(F.broadcast(lab_side) if small else lab_side, SRC)
-            .groupBy(F.col(DST).alias("id"))
-            .agg(F.min("lab").alias("in_min"))
-        )
-        if small:
-            pushed = F.broadcast(pushed)
-        # Path-halving shortcut (same trick as pointer jumping on the
-        # LABEL table, which is vertex-sized — NOT the edge-squaring
-        # pointer doubling the module docstring rejects): lab(v) = u
-        # means u is a known reacher of v, and lab(u) = w means w
-        # reaches u, hence w reaches v — so min'ing in lab(lab(v)) is
-        # sound, keeps the invariant (labels are always true reachers),
-        # and leaves the fixpoint unchanged while collapsing chain
-        # propagation from O(diameter) to O(log diameter) rounds
-        # (measured on the sf0.1 doc graph: fwd 24 -> 7 rounds).
-        hop = lab.select(F.col("id").alias("lab"), F.col("lab").alias("lab2"))
-        if small:
-            hop = F.broadcast(hop)
-        obs = Observation(f"scc_{tag}_{it}")
-        grp = next_group(f"scc_{tag}", it)
-        with job_group(spark, grp, f"SCC {tag} closure round"):
+        with run_round(spark, f"scc_{tag}", it, f"SCC {tag} closure round") as rnd:
+            lab_side = lab.select(F.col("id").alias(SRC), "lab")
+            pushed = (
+                edges.join(F.broadcast(lab_side) if small else lab_side, SRC)
+                .groupBy(F.col(DST).alias("id"))
+                .agg(F.min("lab").alias("in_min"))
+            )
+            if small:
+                pushed = F.broadcast(pushed)
+            # Path-halving shortcut (same trick as pointer jumping on the
+            # LABEL table, which is vertex-sized — NOT the edge-squaring
+            # pointer doubling the module docstring rejects): lab(v) = u
+            # means u is a known reacher of v, and lab(u) = w means w
+            # reaches u, hence w reaches v — so min'ing in lab(lab(v)) is
+            # sound, keeps the invariant (labels are always true reachers),
+            # and leaves the fixpoint unchanged while collapsing chain
+            # propagation from O(diameter) to O(log diameter) rounds
+            # (measured on the sf0.1 doc graph: fwd 24 -> 7 rounds).
+            hop = lab.select(F.col("id").alias("lab"), F.col("lab").alias("lab2"))
+            if small:
+                hop = F.broadcast(hop)
             new_lab = (
                 lab.join(pushed, "id", "left")
                 .join(hop, "lab", "left")
@@ -117,12 +114,6 @@ def _min_label_closure(
                         F.coalesce(F.col("lab2"), F.col("lab")),
                     ).alias("lab"),
                     F.col("lab").alias("old"),
-                )
-                .observe(
-                    obs,
-                    F.sum((F.col("lab") != F.col("old")).cast("long")).alias(
-                        "changed"
-                    ),
                 )
             )
             # The carried size ESTIMATE multiplies by the edge-table
@@ -145,19 +136,13 @@ def _min_label_closure(
             # (eager_checkpoint) every third round: the estimate is
             # bounded by two rounds of compounding (~hundreds of digits),
             # while 2/3 of rounds keep the cheap one-job shape.
-            if checkpoint == "eager" or it % 3 == 2:
-                new_lab = eager_checkpoint(new_lab)
-            else:
-                new_lab = new_lab.localCheckpoint(eager=True)
-            changed = int(obs.get["changed"] or 0)
-        srb, swb = group_shuffle_bytes(spark, grp)
-        metrics.append(
-            {"closure": tag, "iteration": it + 1, "changed": changed,
-             "wall_sec": time.monotonic() - t0,
-             "shuffle_read_bytes": srb, "shuffle_write_bytes": swb}
-        )
-        lab = new_lab.select("id", "lab")
-        if changed == 0:
+            lab = rnd.checkpoint(
+                new_lab,
+                reset_stats=checkpoint == "eager" or it % 3 == 2,
+                changed=F.sum((F.col("lab") != F.col("old")).cast("long")),
+            ).select("id", "lab")
+        metrics.append({"closure": tag, "iteration": it + 1, **rnd})
+        if rnd["changed"] == 0:
             break
     return lab
 

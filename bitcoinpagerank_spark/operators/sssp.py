@@ -30,26 +30,13 @@ with the previous table — frontier- or vertex-sized, no driver data.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .edges import BROADCAST_HINT_MAX, DST, SRC, default_partitions
-from .lineage import group_shuffle_bytes, job_group, next_group
-
-
-def _obs_count(obs: Observation, key: str) -> int:
-    """An ``observe()`` node whose whole subtree produced zero rows can be
-    skipped by AQE (no task ever runs the stage — seen when the frontier's
-    last vertex has no out-edges), in which case the JVM metrics row is
-    empty and ``Observation.get`` trips a JVM assertion. Zero executed
-    rows means the count IS zero."""
-    try:
-        return int(obs.get[key] or 0)
-    except Exception:
-        return 0
+from .lineage import run_round
 
 
 @dataclass
@@ -103,26 +90,25 @@ def sssp(
     converged = False
     rounds = 0
     for r in range(max_rounds):
-        t0 = time.monotonic()
-        grp = next_group("sssp", r)
-        obs_relax = Observation(f"sssp_relax_{r}")
-        f_side = frontier.select(F.col("id").alias(SRC), "dist")
-        if f_cnt <= BROADCAST_HINT_MAX:
-            # deterministic hint: the checkpoint's inflated size estimate
-            # would otherwise shuffle the edge table against a frontier the
-            # loop KNOWS is small (edges.py BROADCAST_HINT_MAX rationale)
-            f_side = F.broadcast(f_side)
-        cand = (
-            e.join(f_side, SRC)
-            .select(F.col(DST).alias("id"), (F.col("dist") + F.col("w")).alias("cand"))
-            .observe(obs_relax, F.count(F.lit(1)).alias("n_relaxed"))
-        )
-        relaxed = cand.groupBy("id").agg(F.min("cand").alias("cand"))
-        obs = Observation(f"sssp_{r}")
-        with job_group(spark, grp, "SSSP relax round"):
-            merged = (
-                dist.join(relaxed, "id", "full_outer")
-                .select(
+        with run_round(spark, "sssp", r, "SSSP relax round") as rnd:
+            f_side = frontier.select(F.col("id").alias(SRC), "dist")
+            if f_cnt <= BROADCAST_HINT_MAX:
+                # deterministic hint: the checkpoint's inflated size estimate
+                # would otherwise shuffle the edge table against a frontier the
+                # loop KNOWS is small (edges.py BROADCAST_HINT_MAX rationale)
+                f_side = F.broadcast(f_side)
+            # the relax count is observed on an inner node; it reads 0 when
+            # AQE skips that node's empty subtree (the frontier's last vertex
+            # has no out-edges)
+            cand = rnd.observe(
+                e.join(f_side, SRC).select(
+                    F.col(DST).alias("id"), (F.col("dist") + F.col("w")).alias("cand")
+                ),
+                relaxed_edges=F.count(F.lit(1)),
+            )
+            relaxed = cand.groupBy("id").agg(F.min("cand").alias("cand"))
+            merged = rnd.checkpoint(
+                dist.join(relaxed, "id", "full_outer").select(
                     "id",
                     F.least(
                         F.coalesce("dist", F.lit(float("inf"))),
@@ -132,23 +118,16 @@ def sssp(
                         F.col("dist").isNull()
                         | (F.col("cand") < F.col("dist"))
                     ).cast("int").alias("improved"),
-                )
-                .observe(obs, F.sum("improved").alias("n_improved"))
-                .localCheckpoint(eager=True)
+                ),
+                improved=F.sum("improved"),
             )
-            improved = int(obs.get["n_improved"] or 0)  # outer node: always fires
-            n_relaxed = _obs_count(obs_relax, "n_relaxed")
+        improved = rnd["improved"]
         dist = merged.select("id", "dist")
         # next frontier: filter on the already-materialized checkpoint
         frontier = merged.where(F.col("improved") == 1).select("id", "dist")
         f_cnt = improved
-        srb, swb = group_shuffle_bytes(spark, grp)
         rounds = r + 1
-        metrics.append(
-            {"round": rounds, "improved": improved, "relaxed_edges": n_relaxed,
-             "wall_sec": time.monotonic() - t0,
-             "shuffle_read_bytes": srb, "shuffle_write_bytes": swb}
-        )
+        metrics.append({"round": rounds, **rnd})
         if improved == 0:
             converged = True
             break

@@ -10,9 +10,10 @@ iterative machinery:
 
 - ``trustrank``: biased PageRank whose teleport AND dangling-mass
   redistribution target a trusted seed set — exactly
-  ``personalized_pagerank`` (operators/pagerank.py), which already
-  implements the r' = α·t + (1-α)(Pᵀr + missing·t) loop with the
-  one-job-per-iteration observe-fused shape.
+  ``personalized_pagerank`` (operators/pagerank.py): PageRank's single
+  loop run with the teleport vector t in place of 1/N,
+  r' = α·t + (1-α)(Pᵀr + missing·t), so TrustRank rounds share its
+  one-job observe-fused shape, job groups and shuffle-byte lineage.
 - ``inverse_pagerank_seeds``: the paper's seed-selection heuristic —
   PageRank over the REVERSED edge table ranks pages by how much of the
   web they can reach (good trust propagators); top-k with total-order

@@ -147,6 +147,14 @@ class TableStore:
     def write_manifest(self, manifest: dict) -> None:
         self._write_text(self.manifest_path(), json.dumps(manifest))
 
+    def write_snapshot(self, df: DataFrame, name: str, path_key: str,
+                       **manifest) -> None:
+        """Write ``df`` as table ``name``, then point the manifest at it:
+        ``manifest`` plus the table's locator under ``path_key`` and the
+        store's ``backend``."""
+        loc = self.write_table(df, name)
+        self.write_manifest({**manifest, path_key: loc, "backend": self.backend})
+
     def read_manifest(self) -> dict | None:
         text = self._read_text(self.manifest_path())
         return None if text is None else json.loads(text)

@@ -66,6 +66,8 @@ def test_exact_dups_always_lsh_candidates(spark, tids):
     assert (1, 2) in pairs  # identical docs collide on every band
     # near-dups share most minhashes → usually some band
     assert (1, 3) in pairs or (1, 5) in pairs
+    with pytest.raises(ValueError, match="divide evenly"):
+        lsh_candidate_pairs(sig, bands=5)  # 16 % 5 != 0
 
 
 def test_simhash_identical_and_distance(spark, tids):
@@ -155,6 +157,8 @@ def test_simhash_neardup_pairs_complete_vs_bruteforce(spark, tids):
                 if h <= mh:
                     want[(a, b)] = h
         assert got == want, f"max_hamming={mh} block_bits={bb}"
+    with pytest.raises(ValueError, match="pigeonhole"):
+        simhash_neardup_pairs(sims, bits=32, max_hamming=4, block_bits=8)
     # identical docs 1 and 2 -> hamming 0 pair always present at mh=0
     assert (1, 2) in {
         (r["id_a"], r["id_b"])

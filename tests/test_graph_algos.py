@@ -154,26 +154,58 @@ def test_core_numbers_triangle_plus_tail(spark):
 
 
 def test_iterative_loops_record_shuffle_bytes(spark):
-    """Per-iteration lineage parity across the iterate loops: WCC, LPA,
-    k-core, coreness, and HITS metrics all carry the iteration's shuffle
+    """Per-iteration lineage parity across the iterate loops: every loop
+    on the round kernel records each round's wall time and shuffle
     read/write bytes (every round shuffles at least its aggregate)."""
     from bitcoinpagerank_spark.operators.components import connected_components
     from bitcoinpagerank_spark.operators.labelprop import label_propagation
     from bitcoinpagerank_spark.operators.kcore import core_numbers, k_core
     from bitcoinpagerank_spark.operators.hits import hits
+    from bitcoinpagerank_spark.operators.pagerank import (
+        pagerank,
+        personalized_pagerank,
+    )
+    from bitcoinpagerank_spark.operators.scc import strongly_connected_components
+    from bitcoinpagerank_spark.operators.centrality import (
+        eigenvector_centrality,
+        katz_centrality,
+        salsa,
+    )
+    from bitcoinpagerank_spark.operators.mis import maximal_independent_set
+    from bitcoinpagerank_spark.operators.community import louvain_communities
+    from bitcoinpagerank_spark.operators.bfs import bfs_distances, labeled_bfs
+    from bitcoinpagerank_spark.operators.sssp import sssp
+    from bitcoinpagerank_spark.operators.betweenness import betweenness_centrality
+    from bitcoinpagerank_spark.operators.ktruss import k_truss
 
     e = edges_df(spark, G_TWO_CC)
+    tri = edges_df(spark, G_TRI)
     results = [
         connected_components(spark, e).metrics,
         label_propagation(spark, e, max_iter=2).metrics,
         k_core(spark, e, k=2).metrics,
         core_numbers(spark, e).metrics,
         hits(spark, e, max_iter=2).metrics,
+        [vars(m) for m in pagerank(spark, e, max_iter=3).metrics],
+        [vars(m) for m in personalized_pagerank(spark, e, [1], max_iter=3).metrics],
+        [m for m in strongly_connected_components(spark, e).metrics
+         if not m["closure"].startswith("trim")],
+        katz_centrality(spark, e, max_iter=2).metrics,
+        eigenvector_centrality(spark, e, max_iter=2).metrics,
+        salsa(spark, e, max_iter=2).metrics,
+        maximal_independent_set(spark, e).metrics,
+        louvain_communities(spark, e, max_rounds=2).metrics,
+        bfs_distances(spark, e, [1]).metrics,
+        labeled_bfs(spark, e, [1, 3]).metrics,
+        sssp(spark, e, 1).metrics,
+        betweenness_centrality(spark, e, [1, 3]).metrics,
+        k_truss(spark, tri, k=3).metrics,
     ]
     for metrics in results:
         assert metrics, "loop recorded no iterations"
         for m in metrics:
             assert "shuffle_write_bytes" in m and "shuffle_read_bytes" in m
+            assert m["wall_sec"] > 0
         assert any(m["shuffle_write_bytes"] > 0 for m in metrics), metrics
 
 

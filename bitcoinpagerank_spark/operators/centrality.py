@@ -1,34 +1,42 @@
-"""Katz, eigenvector, and SALSA centrality — link-analysis breadth
-operators in the PageRank/HITS family (reference analog: the same product
+"""HITS, SALSA, Katz and eigenvector centrality — link-analysis breadth
+operators in the PageRank family (reference analog: the same product
 surface as RunPageRankBasic.java's score loop; none of these exist in the
 reference — they are breadth ops mandated by the link-graph tier).
 
-All three share the iterate shape proven out in pagerank.py / hits.py:
+All four share the iterate shape of pagerank.py:
 
 * the edge table is partitioned ONCE by the join key and persisted; only
   vertex-sized score tables move per iteration,
 * each half-step is one equi-join + by-key hash aggregate whose global
-  scalar (normalizer / total) rides the eager ``localCheckpoint`` via
-  ``observe()`` — no extra pass, no driver-side reduction job,
-* ``localCheckpoint(eager=True)`` truncates lineage so the logical plan
-  stays O(1) per iteration (measured in BENCH.md round-3 cadence A/B),
+  scalar (normalizer / total) rides the eager checkpoint via
+  ``observe()`` — no extra pass, no driver-side reduction job — and the
+  division by that scalar folds lazily into the next half-step's scan,
+* the eager checkpoint truncates lineage so the logical plan stays O(1)
+  per iteration (measured in BENCH.md round-3 cadence A/B),
 * per-iteration lineage rows carry wall clock + shuffle bytes
   (north-star metrics contract).
 
 Numeric contracts (all L1-style, SQL-portable so the DuckDB oracles can
 unroll them as chained CTEs):
 
+* HITS:        a'(v) = SUM_{u->v} h(u) / SUM a',
+               h'(u) = SUM_{u->v} a'(v) / SUM h', h0 = 1/n (Kleinberg
+               1999; the classical L2 variant differs only by the norm).
+               No in-links → authority 0; no out-links → hub 0.
+* SALSA:       HITS on the row/column-STOCHASTIC adjacency — each hub
+               contribution is divided by the hub's out-degree and each
+               authority contribution by the authority's in-degree (Lempel
+               & Moran 2000), with the same L1 renorm per half-step so
+               dangling leakage cannot drift the total.
 * Katz:        c' (v) = beta + alpha * SUM_{u->v} c(u), c0 = beta.
                Convergent for alpha < 1/lambda_max; raw (unnormalized)
                scores are returned — the standard fixed-point.
 * eigenvector: x'(v) = SUM_{u->v} x(u) / ||SUM||_1, x0 = 1/n.  Power
   iteration with L1 norm (the L2 variant differs only by the norm and
   is not cross-engine hash-stable; L1 keeps scores exactly comparable).
-* SALSA:       HITS on the row/column-STOCHASTIC adjacency — each hub
-  contribution is divided by the hub's out-degree and each authority
-  contribution by the authority's in-degree (Lempel & Moran 2000), with
-  an explicit L1 renorm per half-step so dangling leakage cannot drift
-  the total (same defensive renorm as hits.py).
+
+All run a fixed iteration count (the reference's own PageRank runs a
+fixed range, RunPageRankBasic.java:329-331).
 """
 
 from __future__ import annotations
@@ -49,20 +57,109 @@ class CentralityResult:
     metrics: list[dict] = field(default_factory=list)
 
 
-def _prepared(spark, edges, num_partitions):
-    e = (
-        edges.select(SRC, DST)
-        .where(F.col(SRC).isNotNull() & F.col(DST).isNotNull())
-        .repartition(num_partitions, SRC)
-        .persist()
+def _prepared(spark, edges, num_partitions, stochastic=False):
+    """(edge table partitioned by src and persisted, persisted vertex
+    table, vertex count). ``stochastic`` adds SALSA's ``inv_od`` =
+    1/outdeg(src) and ``inv_id`` = 1/indeg(dst) columns, and takes the
+    vertex table from the null-filtered edges (the others keep every
+    endpoint of ``edges``)."""
+    base = edges.select(SRC, DST).where(
+        F.col(SRC).isNotNull() & F.col(DST).isNotNull()
     )
+    e = base
+    if stochastic:
+        e = (
+            base.join(out_degrees(base).withColumnRenamed("id", SRC), SRC)
+            .join(in_degrees(base).withColumnRenamed("id", DST), DST)
+            .select(
+                SRC, DST,
+                (F.lit(1.0) / F.col("out_degree")).alias("inv_od"),
+                (F.lit(1.0) / F.col("in_degree")).alias("inv_id"),
+            )
+        )
+    e = e.repartition(num_partitions, SRC).persist()
     e.count()
-    verts = vertices(edges).repartition(num_partitions, "id").persist()
+    verts = vertices(base if stochastic else edges)
+    verts = verts.repartition(num_partitions, "id").persist()
     n = verts.count()
     if n == 0:
         e.unpersist()
+        verts.unpersist()
         raise ValueError("centrality on an empty graph")
     return e, verts, n
+
+
+def _hub_authority(spark, edges, max_iter, num_partitions, op, stochastic):
+    """The HITS/SALSA loop: per iteration an authority half-step (in-sums
+    of hub scores) then a hub half-step (out-sums of the new authority
+    scores), each L1-normalized. With ``stochastic`` each contribution is
+    weighted by ``inv_od`` / ``inv_id`` (SALSA), else by 1 (HITS).
+    Returns (id, hub, authority)."""
+    if max_iter < 1:
+        raise ValueError(f"{op.upper()} needs max_iter >= 1")
+    if num_partitions is None:
+        num_partitions = default_partitions(spark, edges)
+    e, verts, n = _prepared(spark, edges, num_partitions, stochastic)
+    a_in = F.col("score") * F.col("inv_od") if stochastic else F.col("score")
+    h_in = F.col("score") * F.col("inv_id") if stochastic else F.col("score")
+
+    h = verts.withColumn("score", F.lit(1.0 / n)).localCheckpoint(eager=True)
+    a = None
+    metrics: list[dict] = []
+    for it in range(1, max_iter + 1):
+        with run_round(spark, op, it, f"{op.upper()} half-steps") as rnd:
+            # authority half-step: raw in-sums, normalizer observed on the
+            # checkpoint, division applied lazily on the checkpointed rows.
+            # Stats-resetting checkpoints: each half-step references the
+            # other table's checkpoint, compounding the size estimate
+            # x2/iteration (plain checkpoints measured on a 300-vertex
+            # graph: 234 digits after 8 iterations, 716 after 24)
+            a_raw = rnd.checkpoint(
+                e.join(h.select(F.col("id").alias(SRC), "score"), SRC)
+                .groupBy(F.col(DST).alias("id"))
+                .agg(F.sum(a_in).alias("raw")),
+                reset_stats=True,
+                authority_norm=F.sum("raw"),
+            )
+            sa = rnd["authority_norm"] = float(rnd["authority_norm"]) or 1.0
+            a = verts.join(a_raw, "id", "left").select(
+                "id", (F.coalesce("raw", F.lit(0.0)) / F.lit(sa)).alias("score")
+            )
+            # hub half-step
+            h_raw = rnd.checkpoint(
+                e.join(a.select(F.col("id").alias(DST), "score"), DST)
+                .groupBy(F.col(SRC).alias("id"))
+                .agg(F.sum(h_in).alias("raw")),
+                reset_stats=True,
+                hub_norm=F.sum("raw"),
+            )
+            sh = rnd["hub_norm"] = float(rnd["hub_norm"]) or 1.0
+        h = verts.join(h_raw, "id", "left").select(
+            "id", (F.coalesce("raw", F.lit(0.0)) / F.lit(sh)).alias("score")
+        )
+        metrics.append({"iteration": it, **rnd})
+
+    scores = (
+        h.select("id", F.col("score").alias("hub"))
+        .join(a.select("id", F.col("score").alias("authority")), "id", "left")
+        .select("id", "hub", F.coalesce("authority", F.lit(0.0)).alias("authority"))
+    )
+    e.unpersist()
+    verts.unpersist()
+    return CentralityResult(scores, max_iter, metrics)
+
+
+def hits(
+    spark: SparkSession,
+    edges: DataFrame,
+    max_iter: int = 10,
+    num_partitions: int | None = None,
+) -> CentralityResult:
+    """HITS hubs and authorities (Kleinberg 1999), L1-normalized.
+
+    Returns (id, hub, authority).
+    """
+    return _hub_authority(spark, edges, max_iter, num_partitions, "hits", False)
 
 
 def katz_centrality(
@@ -127,7 +224,7 @@ def eigenvector_centrality(
 
     Vertices with no in-links have score 0 after the first step. The
     normalizer rides the checkpoint via ``observe()``; the division folds
-    lazily into the next step's scan (hits.py pattern).
+    lazily into the next step's scan (the HITS pattern).
     """
     if max_iter < 1:
         raise ValueError("eigenvector_centrality needs max_iter >= 1")
@@ -168,65 +265,4 @@ def salsa(
     persisted — the per-iteration joins then touch only vertex-sized
     score tables, identical shuffle profile to hits().
     """
-    if max_iter < 1:
-        raise ValueError("salsa needs max_iter >= 1")
-    if num_partitions is None:
-        num_partitions = default_partitions(spark, edges)
-
-    base = edges.select(SRC, DST).where(
-        F.col(SRC).isNotNull() & F.col(DST).isNotNull()
-    )
-    e = (
-        base.join(out_degrees(base).withColumnRenamed("id", SRC), SRC)
-        .join(in_degrees(base).withColumnRenamed("id", DST), DST)
-        .select(
-            SRC, DST,
-            (F.lit(1.0) / F.col("out_degree")).alias("inv_od"),
-            (F.lit(1.0) / F.col("in_degree")).alias("inv_id"),
-        )
-        .repartition(num_partitions, SRC)
-        .persist()
-    )
-    e.count()
-    verts = vertices(base).repartition(num_partitions, "id").persist()
-    n = verts.count()
-    if n == 0:
-        e.unpersist()
-        verts.unpersist()
-        raise ValueError("salsa on an empty graph")
-
-    h = verts.withColumn("score", F.lit(1.0 / n)).localCheckpoint(eager=True)
-    a = None
-    metrics: list[dict] = []
-    for it in range(1, max_iter + 1):
-        with run_round(spark, "salsa", it, "SALSA half-steps") as rnd:
-            a_raw = rnd.checkpoint(
-                e.join(h.select(F.col("id").alias(SRC), "score"), SRC)
-                .groupBy(F.col(DST).alias("id"))
-                .agg(F.sum(F.col("score") * F.col("inv_od")).alias("raw")),
-                authority_norm=F.sum("raw"),
-            )
-            sa = rnd["authority_norm"] = float(rnd["authority_norm"]) or 1.0
-            a = verts.join(a_raw, "id", "left").select(
-                "id", (F.coalesce("raw", F.lit(0.0)) / F.lit(sa)).alias("score")
-            )
-            h_raw = rnd.checkpoint(
-                e.join(a.select(F.col("id").alias(DST), "score"), DST)
-                .groupBy(F.col(SRC).alias("id"))
-                .agg(F.sum(F.col("score") * F.col("inv_id")).alias("raw")),
-                hub_norm=F.sum("raw"),
-            )
-            sh = rnd["hub_norm"] = float(rnd["hub_norm"]) or 1.0
-        h = verts.join(h_raw, "id", "left").select(
-            "id", (F.coalesce("raw", F.lit(0.0)) / F.lit(sh)).alias("score")
-        )
-        metrics.append({"iteration": it, **rnd})
-
-    scores = (
-        h.select("id", F.col("score").alias("hub"))
-        .join(a.select("id", F.col("score").alias("authority")), "id", "left")
-        .select("id", "hub", F.coalesce("authority", F.lit(0.0)).alias("authority"))
-    )
-    e.unpersist()
-    verts.unpersist()
-    return CentralityResult(scores, max_iter, metrics)
+    return _hub_authority(spark, edges, max_iter, num_partitions, "salsa", True)

@@ -312,13 +312,9 @@ def warm_start_components(
     deletions have separated. The check is one normalized anti-join,
     cheap next to the CC rounds it guards."""
     if prior_edges is not None:
-        def _canon(df: DataFrame) -> DataFrame:
-            return df.select(
-                F.least("src_id", "dst_id").alias("a"),
-                F.greatest("src_id", "dst_id").alias("b"),
-            ).where(F.col("a") != F.col("b")).distinct()
-
-        deleted = _canon(prior_edges).join(_canon(edges), ["a", "b"], "left_anti")
+        deleted = _canon_pairs(prior_edges).join(
+            _canon_pairs(edges), ["a", "b"], "left_anti"
+        )
         n_deleted = deleted.limit(1).count()
         if n_deleted > 0:
             sample = deleted.limit(5).collect()
@@ -362,116 +358,32 @@ def incremental_components(
     fallback_frac: float = 0.5,
 ) -> ComponentsResult:
     """Incremental CC for arbitrary edge DELTAS — additions AND deletions
-    (judge r4 Next #6; ``warm_start_components`` raises on deletions by
-    contract, this is the real path).
+    (``warm_start_components`` raises on deletions by contract).
 
-    Key facts the reduction leans on:
-
-    1. Every deleted edge was intra-component yesterday (its endpoints
-       were connected), so the components whose connectivity a deletion
-       can break are exactly the prior components containing a
-       deleted-edge endpoint — the DIRTY set.
-    2. For a CLEAN component (no deletions touched it), every one of
-       yesterday's intra-component edges survives, so its prior label
-       star (id → component) is still a sound connectivity witness.
-    3. Yesterday's edges between two clean vertices are always
-       intra-component (an inter-component edge would have merged them),
-       hence IMPLIED by the label stars — they can be dropped from the
-       recompute entirely.
-
-    The star-contraction run therefore sees only: label-star edges for
-    clean vertices (pre-collapsed, converge immediately), plus today's
-    edges that are NEW or touch a dirty vertex — the contraction INPUT
-    scales with |delta neighborhood| + |V_clean| instead of |E|. Clean
-    components keep their labels verbatim unless an added edge merges
-    them (in which case the min-id contract relabels the merged
-    component, exactly as a cold run would).
-
-    Measured cost model (BENCH.md round-6 size sweep, scales 18/22/24):
-    the contraction-input reduction is real and consistent (−31…−35%
-    round-1 pairs on |E|/|V| ≈ 2.75 block graphs) but THIS variant's
-    delta DISCOVERY is itself Θ(|E|) (~4 full-table joins deriving
-    deleted/droppable/retained), so its wall ratio vs a cold recompute
-    is roughly constant in |E| (~0.5–0.7 on a shuffle-cheap single
-    box). Reach for it when (a) the delta is already known — use
-    ``incremental_components_from_delta``, whose analysis joins are
-    delta/dirty-scale broadcast scans (the shuffle-vs-scan gap IS the
-    win once edge tables stop fitting page cache), or (b) |E| >> |V|,
-    where the |V_clean| label-star floor recedes. Otherwise the cold
-    recompute is the right default, and the ``fallback_frac`` guard
-    routes degenerate (giant-dirty) deltas there automatically.
+    Derives the delta as undirected pairs — additions = today − yesterday,
+    deletions = yesterday − today — and runs
+    ``incremental_components_from_delta`` on it. The two set differences
+    are Θ(|E|) joins, so when a crawl pipeline already has the delta, call
+    ``incremental_components_from_delta`` directly.
 
     ``prior_labels`` must be the CC output for ``prior_edges``. The
-    result equals ``connected_components(edges)`` exactly — asserted by
-    the g_components_incremental catalog oracle and randomized pytest."""
+    result covers every vertex of ``edges`` (a vertex whose only edge is
+    a self-loop labels itself) and equals ``connected_components(edges)``
+    exactly — asserted by the g_components_incremental catalog oracle and
+    randomized pytest."""
     cur = _canon_pairs(edges)
     prev = _canon_pairs(prior_edges)
-    deleted = prev.join(cur, ["a", "b"], "left_anti")
 
-    # dirty prior components: any deleted-edge endpoint's label
-    dirty = (
-        deleted.select(F.col("a").alias("id"))
-        .unionByName(deleted.select(F.col("b").alias("id")))
-        .distinct()
-        .join(prior_labels, "id")
-        .select("component")
-        .distinct()
-    ).localCheckpoint(eager=True)
-    # The dirty set scales with the deletion delta, which is unbounded
-    # (a TLD delisting can touch millions of components) — hint broadcast
-    # only under the repo-wide bound, plain shuffle anti-join above it.
-    from .edges import BROADCAST_HINT_MAX
+    def minus(x: DataFrame, y: DataFrame) -> DataFrame:
+        return x.join(y, ["a", "b"], "left_anti").select(
+            F.col("a").alias(SRC), F.col("b").alias(DST)
+        )
 
-    n_dirty = dirty.count()
-    dirty_side = F.broadcast(dirty) if n_dirty <= BROADCAST_HINT_MAX else dirty
-
-    # degenerate-delta guard (measured on R-MAT-18, scripts/
-    # incr_cc_stress.py): on a giant-component graph ONE interior
-    # deletion dirties the whole component, so the reduced recompute is
-    # as large as a cold run while the delta machinery (deleted/dirty/
-    # droppable/retained anti-joins) adds ~6 shuffles of pure overhead —
-    # incremental ran ~2.4x SLOWER than cold. When the dirty components
-    # hold more than ``fallback_frac`` of yesterday's vertices, run the
-    # cold recompute directly: identical labels (the incremental result
-    # is defined as the cold result), worst case bounded at cold + two
-    # count jobs. The incremental path stays the win it was built for —
-    # deltas touching a bounded neighborhood of a many-component graph.
-    if fallback_frac is not None and n_dirty > 0:
-        dirty_mass = prior_labels.join(
-            dirty_side, "component", "left_semi"
-        ).count()
-        if dirty_mass > fallback_frac * prior_labels.count():
-            return connected_components(
-                spark, edges, max_iter=max_iter,
-                num_partitions=num_partitions,
-            )
-
-    clean_labels = prior_labels.join(dirty_side, "component", "left_anti")
-    clean_vs = clean_labels.select("id")
-
-    # drop yesterday's clean-clean edges (implied by the label stars);
-    # keep new edges and anything touching a dirty/unknown vertex
-    droppable = (
-        cur.join(prev, ["a", "b"], "left_semi")
-        .join(clean_vs.select(F.col("id").alias("a")), "a", "left_semi")
-        .join(clean_vs.select(F.col("id").alias("b")), "b", "left_semi")
+    res = incremental_components_from_delta(
+        spark, prior_edges, prior_labels, minus(cur, prev), minus(prev, cur),
+        max_iter=max_iter, num_partitions=num_partitions,
+        fallback_frac=fallback_frac,
     )
-    retained = cur.join(droppable, ["a", "b"], "left_anti")
-
-    label_edges = clean_labels.where(F.col("id") != F.col("component")).select(
-        F.col("id").alias(SRC), F.col("component").alias(DST)
-    )
-    cc_input = retained.select(
-        F.col("a").alias(SRC), F.col("b").alias(DST)
-    ).unionByName(label_edges)
-
-    res = connected_components(
-        spark, cc_input, max_iter=max_iter, num_partitions=num_partitions
-    )
-    # vertices absent from the reduced graph are exactly the untouched
-    # singleton roots (every non-root clean vertex rides its label edge,
-    # every root is some label edge's dst unless its component is a
-    # singleton) — they keep their prior label, which is themselves
     labels = (
         vertices(edges)
         .join(res.labels, "id", "left")
@@ -495,12 +407,12 @@ def incremental_components_from_delta(
     edge lists; it does not need yesterday's and today's full edge
     tables anti-joined to rediscover them).
 
-    Cost shape vs ``incremental_components`` (measured r6,
-    scripts/incr_cc_stress.py): the derive-the-delta variant spends
-    three |E|-scale joins on delta analysis (deleted anti-join,
-    droppable 3-way semi, retained anti-join), which at sandbox scale
-    exceeds what the reduced recompute saves. Here every analysis join
-    is DELTA- or DIRTY-scale:
+    Soundness: every deleted edge was intra-component yesterday, so the
+    components a deletion can break are exactly the prior components
+    holding a deleted-edge endpoint — the DIRTY set. A CLEAN component
+    keeps all its edges, so its prior label star (id → component) still
+    witnesses its connectivity, and its old edges can be left out of the
+    recompute. Every analysis join is DELTA- or DIRTY-scale:
 
     - old_kept  = prior anti-join deletions  (deletions broadcast-gated)
     - dirty     = deletion endpoints -> prior labels -> components
@@ -511,11 +423,17 @@ def incremental_components_from_delta(
 
     Additions never dirty anything: an added edge can only merge
     components, and it is fed to the contraction verbatim; brand-new
-    vertices ride their added edges. The same degenerate-delta fallback
-    applies: when dirty components hold more than ``fallback_frac`` of
-    yesterday's vertices, run the cold recompute on the composed edge
-    set directly. Result equals ``connected_components(prior - deletions
-    + additions)`` exactly (randomized pytest equivalence)."""
+    vertices ride their added edges. With no deletions the dirty set is
+    empty and the input is just the additions plus every label star.
+
+    Degenerate-delta fallback: on a giant-component graph ONE interior
+    deletion dirties the whole component, so the reduced recompute is as
+    large as a cold run and the delta analysis is pure overhead (R-MAT-18:
+    2.4x slower than cold; BENCH.md "Incremental CC scale-stress"). When
+    the dirty components hold more than ``fallback_frac`` of yesterday's
+    vertices, the cold recompute runs on the composed edge set directly.
+    Result equals ``connected_components(prior - deletions + additions)``
+    exactly (randomized pytest equivalence)."""
     from .edges import BROADCAST_HINT_MAX
 
     prev = _canon_pairs(prior_edges)
@@ -526,16 +444,6 @@ def incremental_components_from_delta(
     del_side = F.broadcast(dele) if n_del <= BROADCAST_HINT_MAX else dele
     old_kept = prev.join(del_side, ["a", "b"], "left_anti")
     today = old_kept.unionByName(add)
-
-    if n_del == 0:
-        # pure-growth delta: the warm-start contract, no dirty set at all
-        return warm_start_components(
-            spark,
-            today.select(F.col("a").alias(SRC), F.col("b").alias(DST)),
-            prior_labels,
-            max_iter=max_iter,
-            num_partitions=num_partitions,
-        )
 
     dirty = (
         dele.select(F.col("a").alias("id"))
@@ -554,7 +462,11 @@ def incremental_components_from_delta(
         .localCheckpoint(eager=True)
     )
     dirty_mass = dirty_vs.count()
-    if fallback_frac is not None and dirty_mass > fallback_frac * prior_labels.count():
+    if (
+        fallback_frac is not None
+        and dirty_mass > 0
+        and dirty_mass > fallback_frac * prior_labels.count()
+    ):
         return connected_components(
             spark,
             today.select(F.col("a").alias(SRC), F.col("b").alias(DST)),

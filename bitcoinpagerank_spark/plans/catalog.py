@@ -158,90 +158,14 @@ def register(name: str, sql: str | None):
     return deco
 
 
-def _driver_history() -> tuple[set, set]:
-    """(checked, red) catalog names from the repo's CORRECTNESS_r*.json
-    driver artifacts: ``checked`` = a VALUE-checked driver row ever (a
-    rows-only ``no_oracle`` row doesn't count — an entry later upgraded
-    with an oracle re-enters the never-checked priority class); ``red`` =
-    the most recent row was a failure (value-hash/rows/schema mismatch or
-    a real error)."""
-    import json
-    import re
-    from pathlib import Path
-
-    checked: set = set()
-    red: set = set()
-    root = Path(__file__).resolve().parents[2]
-
-    def round_no(p: Path) -> int:
-        # numeric order, not lexicographic: r100 after r99, r4 == r04
-        # (ADVICE r4 #3 — "most recent row wins" must survive unpadded
-        # or three-digit round numbers)
-        m = re.search(r"r(\d+)", p.name)
-        return int(m.group(1)) if m else -1
-
-    for p in sorted(root.glob("CORRECTNESS_r*.json"), key=round_no):
-        try:
-            rows = json.loads(p.read_text())
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            if row.get("err") != "no_oracle":
-                checked.add(name)
-            ok = (
-                row.get("err") in (None, "no_oracle")
-                and row.get("rows_match") is not False
-                and row.get("schema_match") is not False
-                and row.get("hash_match") is not False
-            )
-            red.discard(name) if ok else red.add(name)
-    return checked, red
-
-
-def _window_order() -> list[str]:
-    """Registration order rewritten for the driver's bounded CORRECTNESS
-    window (the harness value-checks only the FIRST 50 entries of
-    ``queries()`` each round). Priority classes, stable (definition
-    order) within each: (0) previously-red entries, so fixes are proven
-    green next round; (1) oracled entries with no driver row yet, so the
-    window rotates through the whole catalog across rounds; (2) already
-    driver-green entries; (3) rows-only (no-oracle) entries last — they
-    can't produce a value-hash row, so a window slot is wasted on them.
-    Self-maintaining: recomputed from CORRECTNESS_r*.json at import, so
-    each new driver round advances the rotation automatically. Every
-    entry regardless of position stays value-checked every session by
-    tests/test_catalog_oracles.py."""
-    checked, red = _driver_history()
-
-    def prio(name: str) -> int:
-        if _REGISTRY[name][1] is None:
-            return 3
-        if name in red:
-            return 0
-        if name not in checked:
-            return 1
-        return 2
-
-    return sorted(_REGISTRY, key=prio)
-
-
-def _ordered_names() -> list[str]:
-    # no cache: the artifact scan is a handful of local JSON reads, and a
-    # stale cache could pin a pre-round ordering after the driver writes a
-    # new CORRECTNESS file mid-process (ADVICE r4 #3)
-    return _window_order()
-
-
 def queries() -> dict[str, QueryFn]:
-    return {name: _REGISTRY[name][0] for name in _ordered_names()}
+    """Every catalog query, in registration order."""
+    return {name: fn for name, (fn, _sql) in _REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        name: _REGISTRY[name][1]
-        for name in _ordered_names()
-        if _REGISTRY[name][1] is not None
-    }
+    """DuckDB oracle SQL of every oracled query, in registration order."""
+    return {name: sql for name, (_fn, sql) in _REGISTRY.items() if sql is not None}
 
 
 # =========================================================== graph queries
@@ -1122,7 +1046,7 @@ h{i} AS (
 @register("g_hits_iter2", _hits_iter_sql(2))
 def q_hits_iter2(spark, sf_dir):
     """HITS hubs/authorities, 2 L1-normalized iterations."""
-    from ..operators.hits import hits
+    from ..operators.centrality import hits
 
     res = hits(spark, doc_edges(spark, sf_dir), max_iter=2)
     return res.scores.select(

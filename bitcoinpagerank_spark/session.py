@@ -19,6 +19,51 @@ import zipfile
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+MAX_DRIVER_HEAP_GB = 16
+SHM_SHUFFLE_BYTES = 8 << 30
+
+
+def memory_defaults(phys_bytes: int | None,
+                    shm_free_bytes: int | None) -> tuple[str, bool]:
+    """(driver heap, whether ``spark.local.dir`` goes on /dev/shm) for a
+    machine with ``phys_bytes`` of RAM and ``shm_free_bytes`` free on
+    /dev/shm (None when unknown or absent).
+
+    The heap is half of RAM in whole GiB, between 1g and 16g — and
+    deliberately NOT larger: on a single local JVM a huge heap plus many
+    task threads collapses into GC thrash (measured 6× slower at
+    local[32] with 64g vs 16g); executors on a real cluster size their
+    own heaps per-node. /dev/shm is tmpfs, i.e. RAM, so shuffle files
+    there compete with the heap: it is taken only when it has 8 GiB free
+    and the RAM beyond the heap holds those 8 GiB twice over (shuffle
+    files, plus Python workers, page cache and the OS). On a 4-core
+    15.7 GiB machine, where this rule picks disk, a CLI PageRank of an
+    866k-edge R-MAT graph ran no faster with its shuffle on /dev/shm
+    (medians of 5: 43.4 s with a 7g heap and 43.9 s with 16g on
+    /dev/shm, 45.5 s with 7g on disk; single runs 36-54 s)."""
+    if not phys_bytes:
+        return f"{MAX_DRIVER_HEAP_GB}g", False
+    heap_gb = min(MAX_DRIVER_HEAP_GB, max(1, (phys_bytes // 2) >> 30))
+    use_shm = (
+        shm_free_bytes is not None
+        and shm_free_bytes >= SHM_SHUFFLE_BYTES
+        and phys_bytes - (heap_gb << 30) >= 2 * SHM_SHUFFLE_BYTES
+    )
+    return f"{heap_gb}g", use_shm
+
+
+def _machine_memory() -> tuple[int | None, int | None]:
+    """(physical RAM bytes, free /dev/shm bytes), None where unknown."""
+    try:
+        phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, OSError, ValueError):
+        phys = None
+    try:
+        st = os.statvfs("/dev/shm")
+        shm = st.f_bavail * st.f_frsize
+    except (AttributeError, OSError):
+        shm = None
+    return phys, shm
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -64,6 +109,7 @@ def get_spark(
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
+    heap, use_shm = memory_defaults(*_machine_memory())
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -72,30 +118,18 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true" if adaptive else "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 16g, deliberately NOT larger: on a single local JVM a huge heap
-        # plus many task threads collapses into GC thrash (measured 6×
-        # slower at local[32] with 64g vs 16g); executors on a real
-        # cluster size their own heaps per-node
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", heap))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
     )
-    # Shuffle/spill files on RAM-backed storage when available: iterative
-    # graph work writes ~|E|-scale shuffle data per iteration, and on this
-    # box /tmp is a spinning-rust-class virtual disk while /dev/shm is
-    # tmpfs. On a real cluster the analog is node-local NVMe (or ramdisk)
-    # shuffle dirs — standard practice, set per-node.
+    # Shuffle/spill files on RAM-backed storage when RAM has room for
+    # them (memory_defaults): iterative graph work writes ~|E|-scale
+    # shuffle data per iteration, and tmpfs can beat a slow disk. On a
+    # real cluster the analog is node-local NVMe (or ramdisk) shuffle
+    # dirs — standard practice, set per-node.
     local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if local_dir is None and os.path.isdir("/dev/shm"):
-        # tmpfs is typically capped at 50% of RAM: only take it when there
-        # is real headroom, otherwise big shuffles would hit ENOSPC where
-        # plain disk would have worked
-        try:
-            st = os.statvfs("/dev/shm")
-            if st.f_bavail * st.f_frsize >= 8 << 30:
-                local_dir = "/dev/shm/bpr-spark-local"
-        except OSError:
-            pass
+    if local_dir is None and use_shm:
+        local_dir = "/dev/shm/bpr-spark-local"
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
     # e.g. -XX:ParallelGCThreads=N when the JVM is taskset-pinned to fewer

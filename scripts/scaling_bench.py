@@ -189,12 +189,6 @@ def _one(cores: int, vertices: int, with_etl: bool) -> dict:
         env={
             **os.environ,
             "SPARK_GRAFT_CPUS": str(cores),
-            # 48g measured (r3 weak trend): the 16g default GC-thrashes the
-            # 16-core 48M-edge weak leg (weak efficiency 0.48 -> 0.86 with
-            # the larger heap); uniform across legs keeps pairs like-for-like
-            "SPARK_GRAFT_DRIVER_MEM": os.environ.get(
-                "SPARK_GRAFT_DRIVER_MEM", "48g"
-            ),
             # the JVM sizes GC worker counts from the MACHINE's cpu count;
             # under taskset pinning that oversubscribes the pinned set
             # during every pause (measured ~15% throughput loss at 16

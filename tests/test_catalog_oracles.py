@@ -8,6 +8,7 @@ from __future__ import annotations
 import math
 
 import duckdb
+import pyarrow as pa
 import pytest
 
 from bitcoinpagerank_spark.plans import catalog
@@ -72,10 +73,13 @@ def test_oracle_output_types_are_hashable(con, name):
     HUGEINT, which surfaces through Arrow as decimal128 — the driver's
     value hash is type-sensitive, so such an oracle red-flags even when
     every value equals Spark's int64 (the g_wl_fingerprint_r2 r03
-    regression). Assert no oracle ever emits decimal/hugeint types."""
-    import pyarrow as pa
+    regression). Assert no oracle ever emits decimal/hugeint types.
 
-    schema = con.execute(catalog.oracle_sql()[name]).fetch_arrow_table().schema
+    The result types come from the bound plan, so a LIMIT 0 fetch gives
+    the same Arrow schema as the full query without running it again
+    (test_query_matches_oracle already runs every oracle in full)."""
+    rel = con.sql(catalog.oracle_sql()[name]).limit(0)
+    schema = rel.fetch_arrow_table().schema
     bad = [
         f.name
         for f in schema
@@ -88,10 +92,13 @@ def test_oracle_output_types_are_hashable(con, name):
 
 
 def test_driver_window_spends_no_slot_on_rows_only():
-    """The driver value-checks only the first 50 entries of queries();
-    rows-only (no-oracle) entries must never occupy one of those slots."""
-    first50 = list(catalog.queries())[:50]
-    oracled = set(catalog.oracle_sql())
+    """The driver value-checks only the first 50 entries of the driver
+    contract's queries(); rows-only (no-oracle) entries must never occupy
+    one of those slots."""
+    import __spark_entry__
+
+    first50 = list(__spark_entry__.queries())[:50]
+    oracled = set(__spark_entry__.oracle_sql())
     wasted = [n for n in first50 if n not in oracled]
     assert not wasted, f"rows-only entries inside the driver window: {wasted}"
 

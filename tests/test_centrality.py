@@ -111,3 +111,13 @@ def test_guards(spark):
     empty = spark.createDataFrame([], "src_id long, dst_id long")
     with pytest.raises(ValueError):
         katz_centrality(spark, empty)
+
+
+def test_salsa_size_estimate_does_not_compound(spark):
+    """Each SALSA half-step references the other side's checkpoint, so a
+    plain localCheckpoint carries Catalyst's size estimate forward and
+    its digit count grows every iteration (716 digits after 24 on a
+    300-vertex graph); the stats-resetting checkpoint keeps it flat."""
+    res = salsa(spark, edges_df(spark, GRAPHS["mixed"]), max_iter=24)
+    size = res.scores._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert len(str(size)) < 100

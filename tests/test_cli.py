@@ -1,7 +1,11 @@
-"""The spark-submit CLI surface, driven as a real subprocess."""
+"""The spark-submit CLI surface: commands run in-process through
+``__main__.main(argv)`` on the shared test session; a bad command and one
+PageRank run go through a real subprocess."""
 
 from __future__ import annotations
 
+import contextlib
+import io
 import json
 import os
 import subprocess
@@ -13,8 +17,34 @@ REPO = Path(__file__).resolve().parent.parent
 from conftest import G_TRI, edges_df
 from oracles import triangles_oracle
 
+from bitcoinpagerank_spark.__main__ import main
 
-def _cli(args: list[str], timeout: int = 240) -> str:
+
+def _cli(spark, args: list[str]) -> dict:
+    """Run one CLI command in this process and return its JSON result
+    line. ``main`` builds its session through ``get_spark``, whose
+    ``getOrCreate`` re-applies the CLI defaults (e.g. 32 shuffle
+    partitions) to the shared test session, so the session's SQL conf
+    is put back afterwards."""
+    saved = spark.conf.getAll
+    buf = io.StringIO()
+    try:
+        with contextlib.redirect_stdout(buf):
+            rc = main([*args, "--master", "local[4]"])
+    finally:
+        conf = spark._jsparkSession.sessionState().conf()  # noqa: SLF001
+        for k, v in spark.conf.getAll.items():
+            if k not in saved:
+                conf.unsetConf(k)
+            elif saved[k] != v:
+                conf.setConfString(k, saved[k])
+    assert rc == 0, buf.getvalue()[-1500:]
+    return json.loads(
+        [line for line in buf.getvalue().splitlines() if line.startswith("{")][-1]
+    )
+
+
+def _cli_subprocess(args: list[str], timeout: int = 240) -> dict:
     out = subprocess.run(
         [sys.executable, "-m", "bitcoinpagerank_spark", *args,
          "--master", "local[4]"],
@@ -22,7 +52,7 @@ def _cli(args: list[str], timeout: int = 240) -> str:
         env={**os.environ, "PYTHONPATH": str(REPO)}, cwd=str(REPO),
     )
     assert out.returncode == 0, out.stderr[-1500:]
-    return out.stdout.strip().splitlines()[-1]
+    return json.loads(out.stdout.strip().splitlines()[-1])
 
 
 def test_cli_pagerank_and_triangles(spark, tmp_path):
@@ -30,18 +60,19 @@ def test_cli_pagerank_and_triangles(spark, tmp_path):
     path = str(tmp_path / "edges")
     edges.write.parquet(path)
 
-    tri = json.loads(_cli(["triangles", "--input", path]))
+    tri = _cli(spark, ["triangles", "--input", path])
     assert tri["triangles"] == triangles_oracle(G_TRI) == 1
 
     ranks_out = str(tmp_path / "ranks")
-    pr = json.loads(_cli([
+    pr = _cli_subprocess([
         "pagerank", "--input", path, "--output", ranks_out,
         "--max-iter", "50",
-    ]))
+    ])
     assert pr["converged"] is True
     assert abs(pr["total_mass"] - 1.0) < 1e-9
     got = {r["id"]: r["score"] for r in spark.read.parquet(ranks_out).collect()}
     assert set(got) == {1, 2, 3}
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
 
 
 def test_cli_rejects_bad_command():
@@ -55,41 +86,41 @@ def test_cli_rejects_bad_command():
 
 
 def test_cli_graph_breadth_commands(spark, tmp_path):
-    """scc / bfs / walks as real subprocesses over one edge parquet."""
+    """scc / bfs / walks over one edge parquet."""
     edges = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 4)]
     path = str(tmp_path / "edges2")
     edges_df(spark, edges).write.parquet(path)
 
     scc_out = str(tmp_path / "scc")
-    scc = json.loads(_cli(["scc", "--input", path, "--output", scc_out]))
+    scc = _cli(spark, ["scc", "--input", path, "--output", scc_out])
     assert scc["converged"] is True
     got = {r["id"]: r["scc"] for r in spark.read.parquet(scc_out).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4}
 
-    bfs = json.loads(_cli([
+    bfs = _cli(spark, [
         "bfs", "--input", path, "--sources", "1",
-    ]))
+    ])
     assert bfs["converged"] is True and bfs["reached"] == 5
 
-    walks = json.loads(_cli([
+    walks = _cli(spark, [
         "walks", "--input", path, "--walk-length", "3",
-    ]))
+    ])
     assert walks["steps"] == 5 * 4  # no dangling vertices: full walks
 
 
 def test_cli_r3_breadth_commands(spark, tmp_path):
-    """ktruss / harmonic / linkpred as real subprocesses."""
+    """ktruss / harmonic / linkpred."""
     edges = [(1, 2), (2, 3), (3, 1), (1, 4), (4, 2), (3, 4), (4, 5)]
     path = str(tmp_path / "edges3")
     edges_df(spark, edges).write.parquet(path)
 
-    kt = json.loads(_cli(["ktruss", "--input", path, "--truss-k", "3"]))
+    kt = _cli(spark, ["ktruss", "--input", path, "--truss-k", "3"])
     assert kt["converged"] is True and kt["edges"] > 0
 
-    hc = json.loads(_cli(["harmonic", "--input", path, "--sources", "1,2"]))
+    hc = _cli(spark, ["harmonic", "--input", path, "--sources", "1,2"])
     assert hc["vertices"] > 0 and hc["seeds"] == 2
 
-    lp = json.loads(_cli(["linkpred", "--input", path, "--min-common", "2"]))
+    lp = _cli(spark, ["linkpred", "--input", path, "--min-common", "2"])
     assert lp["pairs"] >= 0
 
 
@@ -98,17 +129,17 @@ def test_cli_mis_coloring_sssp_centrality(spark, tmp_path):
     path = str(tmp_path / "edges_r3")
     edges.write.parquet(path)
 
-    mis = json.loads(_cli(["mis", "--input", path]))
+    mis = _cli(spark, ["mis", "--input", path])
     assert mis["converged"] is True and mis["mis_size"] >= 1
 
-    col = json.loads(_cli(["coloring", "--input", path]))
+    col = _cli(spark, ["coloring", "--input", path])
     assert col["converged"] is True and 2 <= col["n_colors"] <= 4
 
-    ss = json.loads(_cli(["sssp", "--input", path, "--sources", "1"]))
+    ss = _cli(spark, ["sssp", "--input", path, "--sources", "1"])
     assert ss["converged"] is True and ss["reached"] == 4
 
-    cen = json.loads(_cli(["centrality", "--input", path,
-                           "--variant", "salsa", "--max-iter", "2"]))
+    cen = _cli(spark, ["centrality", "--input", path,
+                      "--variant", "salsa", "--max-iter", "2"])
     assert cen["variant"] == "salsa" and cen["vertices"] == 4
 
 
@@ -156,7 +187,7 @@ def test_cli_louvain(spark, tmp_path):
     edges = edges_df(spark, [(1, 2), (2, 3), (3, 1), (7, 8), (8, 9), (9, 7)])
     path = str(tmp_path / "edges_lv")
     edges.write.parquet(path)
-    out = json.loads(_cli(["louvain", "--input", path]))
+    out = _cli(spark, ["louvain", "--input", path])
     assert out["converged"] is True
     assert out["n_communities"] == 2
 
@@ -205,12 +236,6 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
 
 def test_cli_trust_and_incremental_commands(spark, tmp_path):
     """r5 CLI surface: trustrank, spammass, incremental-components."""
-    import json
-    import subprocess
-    import sys
-
-    from tests.conftest import edges_df
-
     prior = edges_df(spark, [(1, 2), (2, 1), (2, 3), (10, 11), (11, 10)])
     today = edges_df(spark, [(1, 2), (2, 1), (10, 11), (11, 10)])
     prior.write.mode("overwrite").parquet(str(tmp_path / "prior"))
@@ -222,25 +247,15 @@ def test_cli_trust_and_incremental_commands(spark, tmp_path):
         str(tmp_path / "labels")
     )
 
-    def run(*argv):
-        out = subprocess.run(
-            [sys.executable, "-m", "bitcoinpagerank_spark", *argv,
-             "--master", "local[4]"],
-            capture_output=True, text=True, cwd="/root/repo",
-        )
-        assert out.returncode == 0, out.stderr[-2000:]
-        return json.loads(
-            [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
-        )
-
-    tr = run("trustrank", "--input", str(tmp_path / "prior"),
-             "--sources", "1", "--max-iter", "30")
+    tr = _cli(spark, ["trustrank", "--input", str(tmp_path / "prior"),
+                      "--sources", "1", "--max-iter", "30"])
     assert tr["converged"]
-    sm = run("spammass", "--input", str(tmp_path / "prior"),
-             "--sources", "1", "--max-iter", "30", "--k", "2")
+    sm = _cli(spark, ["spammass", "--input", str(tmp_path / "prior"),
+                      "--sources", "1", "--max-iter", "30", "--k", "2"])
     assert sm["rows"] == 5 and set(sm["top_spam_ids"]) == {10, 11}
-    inc = run("incremental-components", "--input", str(tmp_path / "today"),
-              "--prior-labels", str(tmp_path / "labels"),
-              "--prior-edges", str(tmp_path / "prior"))
+    inc = _cli(spark, ["incremental-components",
+                       "--input", str(tmp_path / "today"),
+                       "--prior-labels", str(tmp_path / "labels"),
+                       "--prior-edges", str(tmp_path / "prior")])
     # vertex 3 vanished with its only edge: {1,2} and {10,11} remain
     assert inc["num_components"] == 2

@@ -160,7 +160,6 @@ def test_iterative_loops_record_shuffle_bytes(spark):
     from bitcoinpagerank_spark.operators.components import connected_components
     from bitcoinpagerank_spark.operators.labelprop import label_propagation
     from bitcoinpagerank_spark.operators.kcore import core_numbers, k_core
-    from bitcoinpagerank_spark.operators.hits import hits
     from bitcoinpagerank_spark.operators.pagerank import (
         pagerank,
         personalized_pagerank,
@@ -168,6 +167,7 @@ def test_iterative_loops_record_shuffle_bytes(spark):
     from bitcoinpagerank_spark.operators.scc import strongly_connected_components
     from bitcoinpagerank_spark.operators.centrality import (
         eigenvector_centrality,
+        hits,
         katz_centrality,
         salsa,
     )

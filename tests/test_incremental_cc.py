@@ -53,13 +53,29 @@ def test_mixed_delta_merge_and_split(spark):
     assert _labels(res)[12] == 3  # merged comp takes the new min id
 
 
-def test_additions_only_delta(spark):
+def test_additions_only_delta(spark, monkeypatch):
+    from bitcoinpagerank_spark.operators import components as comp_mod
+
     prior = [(1, 2), (5, 6)]
     today = [(1, 2), (5, 6), (2, 5), (7, 8)]
     prior_df, today_df = edges_df(spark, prior), edges_df(spark, today)
     prior_labels = connected_components(spark, prior_df).labels
+
+    # record the contraction input size
+    inputs = []
+
+    def spy(spark, edges, **kw):
+        inputs.append(edges.count())
+        return connected_components(spark, edges, **kw)
+
+    monkeypatch.setattr(comp_mod, "connected_components", spy)
     res = incremental_components(spark, today_df, prior_labels, prior_df)
+    monkeypatch.undo()
     assert _labels(res) == _labels(connected_components(spark, today_df))
+    # no deletions, so no dirty set: yesterday's edges stay out of the
+    # contraction input (2 added edges + 2 label stars, not all 4 of
+    # today's edges on top)
+    assert inputs == [4]
 
 
 def test_vertex_disappears_with_its_edges(spark):
@@ -164,7 +180,7 @@ def test_random_deltas_match_cold_recompute(spark):
 def test_from_delta_matches_cold_randomized(spark):
     """Delta-given incremental CC (the crawl-pipeline API): equals a cold
     recompute of (prior - deletions) + additions, including brand-new
-    vertices and pure-growth (warm-start) short-circuit."""
+    vertices and a pure-growth delta."""
     import random
 
     from bitcoinpagerank_spark.operators.components import (
@@ -195,7 +211,7 @@ def test_from_delta_matches_cold_randomized(spark):
     cold = connected_components(spark, edges_df(spark, sorted(today)))
     assert _labels(res) == _labels(cold)
 
-    # pure growth (no deletions) takes the warm-start path and agrees too
+    # pure growth (no deletions) agrees too
     res2 = incremental_components_from_delta(
         spark,
         prior_df,

@@ -218,7 +218,7 @@ def test_weighted_pagerank_vs_numpy(spark):
 
 
 def test_hits_vs_numpy(spark):
-    from bitcoinpagerank_spark.operators.hits import hits
+    from bitcoinpagerank_spark.operators.centrality import hits
 
     rng = np.random.default_rng(31)
     n, p = 60, 0.06

@@ -4,8 +4,8 @@ Not in the reference (breadth operator in the same family as WCC/LPA —
 "how many clicks from the seed set is every page"). Standard distributed
 frontier expansion: dist holds the settled vertices, the frontier is
 joined against the out-edges each round, newly reached vertices get
-dist+1. One job per round (the frontier count rides the eager
-localCheckpoint via observe(), the pagerank.py pattern); rounds = graph
+dist+1. One job per round (the frontier count rides the round's
+checkpoint via observe(), the lineage.run_round pattern); rounds = graph
 diameter from the seed set. All Catalyst: two hash joins + a distinct per
 round on frontier-sized inputs — the |E|-scale edge table is partitioned
 by src once and reused.
@@ -24,7 +24,9 @@ from .lineage import run_round
 
 @dataclass
 class BfsResult:
-    distances: DataFrame  # (id: long, dist: long) — reachable vertices only
+    # (id, dist) from bfs_distances, (src, id, dist) from labeled_bfs —
+    # reachable vertices only
+    distances: DataFrame
     iterations: int
     converged: bool
     metrics: list[dict] = field(default_factory=list)
@@ -36,35 +38,56 @@ def bfs_distances(
     sources: DataFrame | list,
     max_iter: int = 100,
     num_partitions: int | None = None,
-    broadcast_hints: bool = True,
 ) -> BfsResult:
     """Hop distance from the seed set along edge direction; unreachable
     vertices are absent from the result (callers left-join against the
-    vertex table if they want nulls).
+    vertex table if they want nulls). The ``labeled_bfs`` loop with one
+    label shared by every seed, so each vertex settles at its minimum
+    distance over all seeds."""
+    res = _frontier_bfs(spark, edges, sources, F.lit(0), max_iter, num_partitions)
+    res.distances = res.distances.select("id", "dist")
+    return res
+
+
+def labeled_bfs(
+    spark: SparkSession,
+    edges: DataFrame,
+    sources: DataFrame | list,
+    max_iter: int = 100,
+    num_partitions: int | None = None,
+) -> BfsResult:
+    """Per-source hop distances: (src, id, dist) for every (seed, vertex)
+    pair with a directed path seed→vertex. State is O(|S|·|V|) — callers
+    pass a seed SAMPLE (the Eppstein-Wang estimator regime), not the full
+    vertex set."""
+    return _frontier_bfs(spark, edges, sources, F.col("id"), max_iter, num_partitions)
+
+
+def _frontier_bfs(spark, edges, sources, label, max_iter, num_partitions):
+    """The frontier loop: (src, id, dist) rows, each seed ``id`` starting
+    under the label ``src`` = ``label`` and each label expanded along
+    edge direction on its own.
 
     The loop observes the frontier count every round anyway, so the
     frontier join and the settled-set anti-join carry deterministic
     ``F.broadcast`` hints while those tables are ≤ BROADCAST_HINT_MAX
-    rows — the plain checkpoints' inflated size estimates would
-    otherwise force a full shuffle join per round (the SCC r5 finding);
-    ``broadcast_hints=False`` keeps the pure-shuffle plan selectable
-    for A/B."""
+    rows — each checkpoint's default size estimate would otherwise force
+    a full shuffle join per round (the SCC r5 finding)."""
     if num_partitions is None:
         from .edges import default_partitions
 
         num_partitions = default_partitions(spark, edges)
     if not isinstance(sources, DataFrame):
         sources = spark.createDataFrame([(int(s),) for s in sources], "id long")
-
     e = (
         edges.select(SRC, DST)
         .where(F.col(SRC).isNotNull() & F.col(DST).isNotNull())
         .repartition(num_partitions, SRC)
         .localCheckpoint(eager=True)
     )
-
     dist = (
-        sources.select(F.col("id").cast("long").alias("id"))
+        sources.select(label.cast("long").alias("src"),
+                       F.col("id").cast("long").alias("id"))
         .distinct()
         .withColumn("dist", F.lit(0).cast("long"))
         .repartition(num_partitions, "id")
@@ -79,78 +102,11 @@ def bfs_distances(
     while it < max_iter:
         with run_round(spark, "bfs", it, "BFS frontier round") as rnd:
             # expand: out-neighbors of the frontier not yet settled
-            f_side = frontier.select(F.col("id").alias(SRC), "dist")
-            if broadcast_hints and f_cnt <= BROADCAST_HINT_MAX:
-                f_side = F.broadcast(f_side)
-            anti_side = dist.select("id")
-            if broadcast_hints and settled <= BROADCAST_HINT_MAX:
-                anti_side = F.broadcast(anti_side)
-            reached = (
-                e.join(f_side, SRC, "inner")
-                .select(F.col(DST).alias("id"), (F.col("dist") + 1).alias("dist"))
-                .distinct()
-                .join(anti_side, "id", "left_anti")
-            )
-            new_frontier = rnd.checkpoint(reached, frontier=F.count(F.lit(1)))
-        cnt = rnd["frontier"]
-        it += 1
-        metrics.append({"iteration": it, **rnd})
-        if cnt == 0:
-            converged = True
-            break
-        dist = dist.unionByName(new_frontier).localCheckpoint(eager=True)
-        frontier = new_frontier
-        f_cnt = cnt
-        settled += cnt
-    return BfsResult(dist, it, converged, metrics)
-
-
-def labeled_bfs(
-    spark: SparkSession,
-    edges: DataFrame,
-    sources: DataFrame | list,
-    max_iter: int = 100,
-    num_partitions: int | None = None,
-    broadcast_hints: bool = True,
-) -> BfsResult:
-    """Per-source hop distances: (src, id, dist) for every (seed, vertex)
-    pair with a directed path seed→vertex. Same frontier loop as
-    ``bfs_distances`` with the seed id carried through the expansion, so
-    state is O(|S|·|V|) — callers pass a seed SAMPLE (the Eppstein-Wang
-    estimator regime), not the full vertex set."""
-    if num_partitions is None:
-        from .edges import default_partitions
-
-        num_partitions = default_partitions(spark, edges)
-    if not isinstance(sources, DataFrame):
-        sources = spark.createDataFrame([(int(s),) for s in sources], "id long")
-
-    e = (
-        edges.select(SRC, DST)
-        .where(F.col(SRC).isNotNull() & F.col(DST).isNotNull())
-        .repartition(num_partitions, SRC)
-        .localCheckpoint(eager=True)
-    )
-    dist = (
-        sources.select(F.col("id").cast("long").alias("src"))
-        .distinct()
-        .select("src", F.col("src").alias("id"), F.lit(0).cast("long").alias("dist"))
-        .repartition(num_partitions, "id")
-        .localCheckpoint(eager=True)
-    )
-    frontier = dist
-    settled = f_cnt = dist.count()
-
-    converged = False
-    it = 0
-    metrics: list[dict] = []
-    while it < max_iter:
-        with run_round(spark, "lbfs", it, "labeled BFS frontier round") as rnd:
             f_side = frontier.select(F.col("id").alias(SRC), "src", "dist")
-            if broadcast_hints and f_cnt <= BROADCAST_HINT_MAX:
+            if f_cnt <= BROADCAST_HINT_MAX:
                 f_side = F.broadcast(f_side)
             anti_side = dist.select("src", "id")
-            if broadcast_hints and settled <= BROADCAST_HINT_MAX:
+            if settled <= BROADCAST_HINT_MAX:
                 anti_side = F.broadcast(anti_side)
             reached = (
                 e.join(f_side, SRC)

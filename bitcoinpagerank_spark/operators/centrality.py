@@ -109,16 +109,11 @@ def _hub_authority(spark, edges, max_iter, num_partitions, op, stochastic):
     for it in range(1, max_iter + 1):
         with run_round(spark, op, it, f"{op.upper()} half-steps") as rnd:
             # authority half-step: raw in-sums, normalizer observed on the
-            # checkpoint, division applied lazily on the checkpointed rows.
-            # Stats-resetting checkpoints: each half-step references the
-            # other table's checkpoint, compounding the size estimate
-            # x2/iteration (plain checkpoints measured on a 300-vertex
-            # graph: 234 digits after 8 iterations, 716 after 24)
+            # checkpoint, division applied lazily on the checkpointed rows
             a_raw = rnd.checkpoint(
                 e.join(h.select(F.col("id").alias(SRC), "score"), SRC)
                 .groupBy(F.col(DST).alias("id"))
                 .agg(F.sum(a_in).alias("raw")),
-                reset_stats=True,
                 authority_norm=F.sum("raw"),
             )
             sa = rnd["authority_norm"] = float(rnd["authority_norm"]) or 1.0
@@ -130,7 +125,6 @@ def _hub_authority(spark, edges, max_iter, num_partitions, op, stochastic):
                 e.join(a.select(F.col("id").alias(DST), "score"), DST)
                 .groupBy(F.col(SRC).alias("id"))
                 .agg(F.sum(h_in).alias("raw")),
-                reset_stats=True,
                 hub_norm=F.sum("raw"),
             )
             sh = rnd["hub_norm"] = float(rnd["hub_norm"]) or 1.0

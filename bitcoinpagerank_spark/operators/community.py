@@ -113,9 +113,9 @@ def _weighted_move_loop(
     half keeps its community that round. Convergence = two consecutive
     rounds with zero moves. Per round: two hash aggs + one bounded argmax
     window; move counts ride observe() on the round's checkpoint."""
-    from .lineage import eager_checkpoint, run_round
+    from .lineage import checkpoint, run_round
 
-    sym = eager_checkpoint(
+    sym = checkpoint(
         sym_w.select(SRC, DST, F.col("w").cast("long").alias("w"))
         .repartition(num_partitions, SRC)
     )
@@ -201,7 +201,6 @@ def _weighted_move_loop(
                     .cast("int")
                     .alias("moved"),
                 ),
-                reset_stats=True,
                 moved=F.sum("moved"),
             ).select("id", "community")
         rounds = r + 1
@@ -262,7 +261,7 @@ def louvain_levels(
     the contraction reuses the quotient_graph join shape
     (`edges.py:quotient_graph`)."""
     from .edges import default_partitions
-    from .lineage import eager_checkpoint
+    from .lineage import checkpoint
 
     if num_partitions is None:
         num_partitions = default_partitions(spark, edges)
@@ -320,7 +319,7 @@ def louvain_levels(
             )
             .select("id", F.col("community").alias("grp"))
         )
-        mapping = eager_checkpoint(mapping)
+        mapping = checkpoint(mapping)
         # contract: canonical group-pair rollup (intra edges → self-loops)
         ca = res.communities.select(F.col("id").alias(SRC), F.col("community").alias("ca"))
         cb = res.communities.select(F.col("id").alias(DST), F.col("community").alias("cb"))
@@ -336,7 +335,7 @@ def louvain_levels(
             .agg(F.sum("w").alias("w"))
             .repartition(num_partitions, SRC)
         )
-        und = eager_checkpoint(und)
+        und = checkpoint(und)
         # modularity of the current global partition, from the quotient:
         # Q = Σ_selfloops w / m  −  Σ_c (k_c / 2m)²
         kq = expand(und).groupBy(F.col(SRC).alias("c")).agg(F.sum("w").alias("kc"))

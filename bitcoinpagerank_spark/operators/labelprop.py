@@ -10,8 +10,8 @@ and ``changed == 0`` exits early).
 Plan shape per iteration: join(labels) → groupBy(vertex,label).count →
 window row_number over (count desc, label asc) — all Catalyst built-ins.
 Convergence detection costs zero extra jobs: the changed-count rides the
-per-iteration eager localCheckpoint via observe() (the lineage.run_round
-pattern), so the Spark UI shows exactly one job per iteration.
+per-iteration checkpoint via observe() (the lineage.run_round pattern), so
+each iteration runs one job.
 """
 
 from __future__ import annotations
@@ -70,10 +70,6 @@ def label_propagation(
                 .where(F.col("rn") == 1)
                 .select("vid", F.col("label").alias("new_label"))
             )
-            # reset_stats (eager_checkpoint): the round plan references
-            # the previous labels checkpoint multiple times, so the
-            # carried size ESTIMATE compounds ~x3/round (2394 digits
-            # after 8 rounds measured) — reset it to the cache's real size
             labels = rnd.checkpoint(
                 labels.join(best, labels["id"] == best["vid"], "left")
                 .select(
@@ -81,7 +77,6 @@ def label_propagation(
                     F.coalesce(F.col("new_label"), F.col("label")).alias("label"),
                     F.col("label").alias("old"),
                 ),
-                reset_stats=True,
                 changed=F.sum((F.col("label") != F.col("old")).cast("long")),
             ).select("id", "label")
         it += 1

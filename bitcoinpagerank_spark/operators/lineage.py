@@ -1,12 +1,16 @@
 """The round kernel shared by every iterate loop.
 
 Each loop round runs inside ``run_round``: its jobs carry one unique job
-group, its convergence aggregates ride the round's eager checkpoint via
+group, its convergence aggregates ride the round's checkpoint via
 ``observe()`` (zero extra stages), and its shuffle read/write bytes are
 read back from the app status store (the same data the UI/REST API
 serves — available with the UI server disabled), fulfilling the
 north-star's "per-partition lineage (edge counts, delta-L1, shuffle
 bytes)" wording without an extra listener or event-log pass.
+
+Every round ends in ``checkpoint``: one eager ``localCheckpoint`` (one
+job) whose carried size estimate is dropped, so the estimate a round
+plans with does not grow with the round count.
 """
 
 from __future__ import annotations
@@ -26,34 +30,36 @@ _SEQ = [0]
 _SEQ_LOCK = threading.Lock()
 
 
-def eager_checkpoint(df: DataFrame) -> DataFrame:
-    """Eager localCheckpoint that RESETS Catalyst's size estimate.
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Eager ``localCheckpoint`` of ``df`` with a fresh size estimate.
 
-    ``localCheckpoint`` truncates the physical lineage but carries the
-    plan's ESTIMATED statistics into the resulting LogicalRDD
-    (``LogicalRDD.fromDataset`` → ``rewriteStatsAndConstraints``), and
-    the size-only estimator multiplies child sizes at every join/union
-    (``SizeInBytesOnlyStatsPlanVisitor.default``). In an iterate loop
-    whose round plan references the previous checkpoint k ≥ 2 times, the
-    estimate's DIGIT COUNT therefore compounds ×k per round — after tens
-    of rounds Catalyst planning drowns in million-digit BigInteger
-    products (observed: Louvain level-2 planning pinning a driver core
-    for minutes on a 155-vertex graph; sizeInBytes had 945 digits after
-    only 6 rounds). PageRank never showed it because its round plan
-    references ranks once (linear digit growth).
+    ``localCheckpoint`` carries the plan's ESTIMATED statistics into the
+    resulting ``LogicalRDD`` (``LogicalRDD.fromDataset``), and the
+    size-only estimator multiplies child sizes at every join
+    (``SizeInBytesOnlyStatsPlanVisitor``). A round plan that references
+    the previous checkpoint k times therefore multiplies the estimate's
+    DIGIT COUNT by k per round: Louvain level-2 planning once pinned a
+    driver core for minutes on a 155-vertex graph (945 digits after 6
+    rounds).
 
-    Fix: materialize the frame in the block cache first — the checkpoint
-    then inherits the cache's REAL byte size, resetting the estimate to
-    ground truth every round. Costs one extra vertex-sized cache pass
-    per round; the cache also serves as the checkpoint action's input,
-    so the plan itself still runs once. Any ``observe()`` on ``df``
-    fires during the materializing count()."""
-    cached = df.persist()
-    try:
-        cached.count()  # materialize cache (fires observe metrics)
-        return cached.localCheckpoint(eager=True)
-    finally:
-        cached.unpersist()
+    The checkpoint's ``LogicalRDD`` is re-wrapped with
+    ``originStats=None`` through ``LogicalRDD.copy``, keeping its output,
+    rdd, partitioning, ordering and constraints, so the estimate is the
+    19-digit ``spark.sql.defaultSizeInBytes`` every round and no job runs
+    beyond the checkpoint's own. Rebuilding the frame from its rdd and
+    schema instead would drop ``outputPartitioning`` and put a new
+    Exchange into every PageRank round."""
+    cp = df.localCheckpoint(eager=True)
+    spark = cp.sparkSession
+    jvm, jss = spark._jvm, spark._jsparkSession  # noqa: SLF001
+    node = cp._jdf.logicalPlan()  # noqa: SLF001
+    opt = jvm.scala.Option
+    fresh = node.copy(
+        node.output(), node.rdd(), node.outputPartitioning(),
+        node.outputOrdering(), node.isStreaming(), node.stream(), jss,
+        opt.empty(), opt.apply(node.constraints()),
+    )
+    return type(cp)(jvm.org.apache.spark.sql.classic.Dataset.ofRows(jss, fresh), spark)
 
 
 def group_shuffle_bytes(spark: SparkSession, group: str) -> tuple[int, int]:
@@ -102,15 +108,12 @@ class Round(dict):
         self._inner.append((obs, list(aggs)))
         return df.observe(obs, *[c.alias(k) for k, c in aggs.items()])
 
-    def checkpoint(self, df: DataFrame, reset_stats: bool = False,
-                   **aggs: Column) -> DataFrame:
-        """Eager checkpoint of ``df`` with ``aggs`` observed on it —
-        ``eager_checkpoint`` when ``reset_stats``, else a plain eager
-        ``localCheckpoint`` (one job)."""
+    def checkpoint(self, df: DataFrame, **aggs: Column) -> DataFrame:
+        """``checkpoint(df)`` with ``aggs`` observed on it: one job."""
         if aggs:
             obs = Observation()
             df = df.observe(obs, *[c.alias(k) for k, c in aggs.items()])
-        df = eager_checkpoint(df) if reset_stats else df.localCheckpoint(eager=True)
+        df = checkpoint(df)
         if aggs:
             self.update({k: v or 0 for k, v in obs.get.items()})
         for inner, keys in self._inner:

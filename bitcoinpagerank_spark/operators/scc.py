@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .edges import SRC, DST
-from .lineage import eager_checkpoint, run_round
+from .lineage import checkpoint, run_round
 
 
 @dataclass
@@ -51,6 +51,10 @@ class SccResult:
     converged: bool
     metrics: list[dict] = field(default_factory=list)
 
+
+# a trim peel round that removes fewer than this share of the remaining
+# vertices stops the cascade without peeling (see the trim loop)
+TRIM_MIN_FRAC = 0.01
 
 # below this many remaining vertices the per-round label table is hinted
 # broadcast (≲32 MB of (id, lab) longs): the closure join then ships labels
@@ -67,18 +71,16 @@ def _min_label_closure(
     tag: str,
     max_iter: int,
     metrics: list[dict],
-    checkpoint: str = "plain",
     n_verts: int | None = None,
 ) -> DataFrame:
     """Fixpoint of lab(v) = min(lab(v), min over in-neighbors u of
     lab(u)) starting from lab(v) = v; one job per propagation round.
 
     ``n_verts`` (when known) drives a deterministic broadcast hint on the
-    label side: plain checkpoints carry a size estimate that compounds
-    ×|edges|/round, which silently disqualifies the (actually tiny) label
-    table from auto-broadcast — the r5 2×2 A/B measured that as a ×1.4
-    loss on R-MAT. The hint restores the broadcast plan without paying
-    the eager stats-reset's 2 extra jobs per round."""
+    label side: each round's checkpoint estimates its size at the
+    ``spark.sql.defaultSizeInBytes`` default, which never qualifies the
+    (actually tiny) label table for auto-broadcast — the r5 2×2 A/B
+    measured the shuffle plan as a ×1.4 loss on R-MAT."""
     small = n_verts is not None and n_verts <= BROADCAST_LABELS_MAX
     lab = verts.select("id", F.col("id").alias("lab")).localCheckpoint(eager=True)
     for it in range(max_iter):
@@ -116,29 +118,8 @@ def _min_label_closure(
                     F.col("lab").alias("old"),
                 )
             )
-            # The carried size ESTIMATE multiplies by the edge-table
-            # estimate each round (the closure join) — geometric in bytes
-            # but only LINEAR in BigInteger digits (~7/round, 286 digits
-            # measured over a full run in BENCH.md's r4 table), benign at
-            # any realistic round count, unlike the Louvain size-SQUARING
-            # case (digits double per round). So "plain" (one job per
-            # round) is the default; the r4 "eager" stats-resetting
-            # variant (persist→count→checkpoint→unpersist) stays
-            # selectable — it cost ×1.7 on the sf0.1 doc graph (BENCH.md
-            # round-5 2×2 A/B) and was the whole q_g_scc regression. The
-            # broadcast hint above replaces the one thing accurate stats
-            # bought (the small-label broadcast plan).
-            # The hop join makes the round plan reference the previous
-            # checkpoint TWICE, so the carried size estimate compounds
-            # faster than the single-reference linear case the module
-            # history measured — over tens of rounds plain checkpoints
-            # alone drown planning in BigInteger digits. Reset the stats
-            # (eager_checkpoint) every third round: the estimate is
-            # bounded by two rounds of compounding (~hundreds of digits),
-            # while 2/3 of rounds keep the cheap one-job shape.
             lab = rnd.checkpoint(
                 new_lab,
-                reset_stats=checkpoint == "eager" or it % 3 == 2,
                 changed=F.sum((F.col("lab") != F.col("old")).cast("long")),
             ).select("id", "lab")
         metrics.append({"closure": tag, "iteration": it + 1, **rnd})
@@ -153,22 +134,14 @@ def strongly_connected_components(
     max_rounds: int = 50,
     max_closure_iter: int = 200,
     num_partitions: int | None = None,
-    trim: bool = True,
-    trim_min_frac: float = 0.01,
-    closure_checkpoint: str = "plain",
-    concurrent_closures: bool = True,
 ) -> SccResult:
-    """``trim=False`` disables the FW-BW-Trim pre-pass (closure-only, the
-    pre-r4 behavior) — kept selectable for A/B measurement. ``trim`` is
-    ADAPTIVE (judge r4 ask): a peel round that removes fewer than
-    ``trim_min_frac`` of the remaining vertices stops the cascade without
-    peeling — on trivial-poor graphs (dense cyclic cores like the doc
-    graph, bow-tie COREs) the peel's full edge semi-join re-checkpoint
-    costs more than letting the closure settle those few vertices; on
-    crawl frontiers (R-MAT shape, ~half the vertices trivial) the cascade
-    proceeds as before. ``closure_checkpoint``: "eager" (stats-resetting)
-    or "plain" (one job/round) — labels identical, cost measured in
-    BENCH.md's round-5 2×2."""
+    """The FW-BW-Trim pre-pass is ADAPTIVE: a peel round that removes
+    fewer than ``TRIM_MIN_FRAC`` of the remaining vertices stops the
+    cascade without peeling — on trivial-poor graphs (dense cyclic cores
+    like the doc graph, bow-tie COREs) the peel's full edge semi-join
+    re-checkpoint costs more than letting the closure settle those few
+    vertices; on crawl frontiers (R-MAT shape, ~half the vertices
+    trivial) the cascade proceeds as before."""
     if num_partitions is None:
         from .edges import default_partitions
 
@@ -203,10 +176,10 @@ def strongly_connected_components(
         rounds += 1
         # FW-BW-Trim: cascade-peel trivial SCCs before paying for closures
         trim_it = 0
-        while trim and n_verts > 0:
+        while n_verts > 0:
             trim_it += 1
             t0 = time.monotonic()
-            both = eager_checkpoint(
+            both = checkpoint(
                 e.select(F.col(SRC).alias("id")).distinct()
                 .join(e.select(F.col(DST).alias("id")).distinct(), "id")
             )
@@ -221,7 +194,7 @@ def strongly_connected_components(
             )
             if n_trivial == 0:
                 break
-            if n_trivial < trim_min_frac * n_verts:
+            if n_trivial < TRIM_MIN_FRAC * n_verts:
                 # adaptive bail: peeling this sliver costs a full edge
                 # semi-join re-checkpoint; the closure settles it anyway
                 metrics[-1]["closure"] = f"trim{rounds}_bail"
@@ -234,7 +207,7 @@ def strongly_connected_components(
             )
             verts = both
             n_verts -= n_trivial
-            e = eager_checkpoint(
+            e = checkpoint(
                 e.join(both.withColumnRenamed("id", SRC), SRC, "left_semi")
                 .join(both.withColumnRenamed("id", DST), DST, "left_semi")
             )
@@ -246,49 +219,35 @@ def strongly_connected_components(
         # over the same checkpointed edge set — run them concurrently from
         # two driver threads (guide §2.6: overlap independent jobs so one
         # loop's per-round stragglers/driver round-trips back-fill the
-        # other's idle cores). Each thread owns its job groups/Observations
+        # other's idle cores; sequential closures were 9.7 vs 7.1 s on
+        # g_scc and 14.6 vs 11.9 s on bowtie, local[4], medians of 10
+        # interleaved pairs). Each thread owns its job groups/Observations
         # (both are thread-local / uniquely named), and per-closure metrics
         # go to private lists merged in a deterministic order afterwards.
+        # In pinned-thread mode (the PySpark default) the wrapper makes
+        # each thread inherit the JVM thread-locals. With
+        # PYSPARK_PIN_THREAD=false inheritable_thread_target(session)
+        # returns the session itself and the bare function runs: a py4j
+        # call may then land on any JVM thread, so the two closures' job
+        # groups — and their rounds' shuffle bytes — can mix. Labels do
+        # not depend on it.
         from concurrent.futures import ThreadPoolExecutor
 
         from pyspark import inheritable_thread_target
 
-        if concurrent_closures:
-            # pinned-thread mode (the default): wrap so JVM thread-locals
-            # (job groups) are inherited per thread; in non-pinned mode
-            # inheritable_thread_target(session) returns the session
-            # itself — fall back to the bare function (thread-locals are
-            # process-shared there anyway)
-            wrapper = inheritable_thread_target(spark)
-            target = (
-                wrapper(_min_label_closure)
-                if callable(wrapper)
-                else _min_label_closure
-            )
-            f_metrics: list[dict] = []
-            b_metrics: list[dict] = []
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                f_fut = pool.submit(
-                    target,
-                    spark, e, verts, f"fwd{rounds}", max_closure_iter,
-                    f_metrics, closure_checkpoint, n_verts,
-                )
-                b_fut = pool.submit(
-                    target,
-                    spark, rev, verts, f"bwd{rounds}", max_closure_iter,
-                    b_metrics, closure_checkpoint, n_verts,
-                )
-                f = f_fut.result()
-                b = b_fut.result()
-            metrics.extend(f_metrics)
-            metrics.extend(b_metrics)
-        else:  # sequential — kept selectable for A/B measurement
-            f = _min_label_closure(spark, e, verts, f"fwd{rounds}",
-                                   max_closure_iter, metrics,
-                                   closure_checkpoint, n_verts)
-            b = _min_label_closure(spark, rev, verts, f"bwd{rounds}",
-                                   max_closure_iter, metrics,
-                                   closure_checkpoint, n_verts)
+        wrapper = inheritable_thread_target(spark)
+        target = wrapper(_min_label_closure) if callable(wrapper) else _min_label_closure
+        f_metrics: list[dict] = []
+        b_metrics: list[dict] = []
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            f_fut = pool.submit(target, spark, e, verts, f"fwd{rounds}",
+                                max_closure_iter, f_metrics, n_verts)
+            b_fut = pool.submit(target, spark, rev, verts, f"bwd{rounds}",
+                                max_closure_iter, b_metrics, n_verts)
+            f = f_fut.result()
+            b = b_fut.result()
+        metrics.extend(f_metrics)
+        metrics.extend(b_metrics)
         joined = f.join(
             b.select(F.col("id").alias("bid"), F.col("lab").alias("blab")),
             F.col("id") == F.col("bid"),
@@ -309,7 +268,7 @@ def strongly_connected_components(
             converged = True
             break
         verts = remaining
-        e = eager_checkpoint(
+        e = checkpoint(
             e.join(remaining.withColumnRenamed("id", SRC), SRC, "left_semi")
             .join(remaining.withColumnRenamed("id", DST), DST, "left_semi")
         )

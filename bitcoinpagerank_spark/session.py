@@ -99,13 +99,19 @@ def get_spark(
     adaptive: bool = True,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with engine defaults.
+    """Build a SparkSession with engine defaults, or return the active
+    session as it is: its caller's conf (shuffle partitions, AQE, ...)
+    is never overwritten by these defaults.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, fallback
     ``local[*]``). AQE is on by default — the PageRank loop pins its own
     partitioning per-stage and disables AQE coalescing locally where a
     stable layout matters (SURVEY.md §4.2 R3).
     """
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        ship_package(active)
+        return active
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from conftest import edges_df
 from oracles import pagerank_oracle
@@ -175,11 +176,12 @@ def test_tablestore_expiry_and_compaction(spark, tmp_path):
 
 
 def test_scc_plain_closure_stats_growth_is_linear(spark):
-    """Regression guard for the r4 planning-blowup class: the SCC
-    closure's plain localCheckpoints compound the carried size ESTIMATE
-    geometrically in bytes but must stay LINEAR in BigInteger digits
-    (~7/round) — a size-SQUARING loop (the Louvain failure mode, digits
-    doubling per round) would blow past this bound within a few rounds."""
+    """Regression guard for the r4 planning-blowup class: every closure
+    round's checkpoint starts its size ESTIMATE over, so the estimate of
+    the result does not grow with the round count at all — a carried
+    estimate compounds by at least ~7 digits per round (the plain
+    localCheckpoint), and doubles its digits per round when the plan
+    squares its size (the Louvain failure mode)."""
     from bitcoinpagerank_spark.operators.scc import (
         strongly_connected_components,
     )
@@ -203,11 +205,10 @@ def test_scc_plain_closure_stats_growth_is_linear(spark):
             .sizeInBytes()
         )
     )
-    # linear bound with slack (measured ~19 digits/round on this fixture);
-    # a squaring loop gives 2^rounds digits and would hang/fail long
-    # before this assert at 80 rounds
+    # the settled labels join two 19-digit closure checkpoints: ~38
+    # digits whatever the round count
     assert closure_rounds >= n / 2
-    assert digits < 30 * closure_rounds + 100, (
+    assert digits < 60, (
         f"{digits} digits after {closure_rounds} closure rounds"
     )
 
@@ -290,3 +291,88 @@ def test_resume_components_rejects_different_edge_set(spark, tmp_path):
                    + [(5, 6), (1, 0)])
     res = resume_components(spark, dup, ckpt, num_partitions=4)
     assert res.converged
+
+
+@pytest.fixture
+def one_job_per_query(spark):
+    """AQE off and no auto-broadcast for one test, so each query runs as
+    exactly one Spark job: AQE submits every query stage as a job of its
+    own, and a broadcast collects its side in another."""
+    keys = {"spark.sql.adaptive.enabled": "false",
+            "spark.sql.autoBroadcastJoinThreshold": "-1"}
+    saved = {k: spark.conf.get(k) for k in keys}
+    for k, v in keys.items():
+        spark.conf.set(k, v)
+    yield
+    for k, v in saved.items():
+        spark.conf.set(k, v)
+
+
+def _jobs_per_round_checkpoint(spark, monkeypatch, run) -> list[int]:
+    """Spark jobs each ``Round.checkpoint`` call ran during ``run()``,
+    read from the app status store (newest job id) before and after the
+    call."""
+    from bitcoinpagerank_spark.operators import lineage
+
+    sc = spark.sparkContext._jsc.sc()  # noqa: SLF001
+
+    def last_job_id() -> int:
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)
+        return jobs.apply(0).jobId() if jobs.size() else -1
+
+    per_call: list[int] = []
+    checkpoint = lineage.Round.checkpoint
+
+    def counted(self, df, **aggs):
+        before = last_job_id()
+        out = checkpoint(self, df, **aggs)
+        per_call.append(last_job_id() - before)
+        return out
+
+    monkeypatch.setattr(lineage.Round, "checkpoint", counted)
+    run()
+    return per_call
+
+
+@pytest.mark.parametrize(
+    "op", ["label_propagation", "hits", "salsa", "louvain_communities"]
+)
+def test_round_checkpoint_is_one_job(spark, monkeypatch, one_job_per_query, op):
+    """A round's checkpoint is one job: no cache pass or count job to
+    reset the size estimate. Label propagation checkpoints once per
+    round (4 rounds), HITS and SALSA once per half-step (2 iterations),
+    Louvain once per move round (4 rounds)."""
+    from bitcoinpagerank_spark.operators.centrality import hits, salsa
+    from bitcoinpagerank_spark.operators.community import louvain_communities
+    from bitcoinpagerank_spark.operators.labelprop import label_propagation
+
+    e = edges_df(spark, _graph(seed=3, n=60, p=0.05))
+    run = {
+        "label_propagation": lambda: label_propagation(spark, e, max_iter=4),
+        "hits": lambda: hits(spark, e, max_iter=2),
+        "salsa": lambda: salsa(spark, e, max_iter=2),
+        "louvain_communities": lambda: louvain_communities(spark, e, max_rounds=4),
+    }[op]
+    assert _jobs_per_round_checkpoint(spark, monkeypatch, run) == [1, 1, 1, 1]
+
+
+def test_checkpoint_keeps_partitioning_and_drops_the_estimate(
+    spark, one_job_per_query
+):
+    """``lineage.checkpoint`` keeps the frame's hash partitioning (a
+    group-by on the key needs no Exchange) and plans with the 19-digit
+    default size, whatever estimate the frame carried."""
+    from bitcoinpagerank_spark.operators.lineage import checkpoint
+
+    df = spark.range(200).repartition(4, "id")
+    for _ in range(3):  # self-joins: the carried estimate compounds
+        df = df.join(df.withColumnRenamed("id", "j"), F.col("id") == F.col("j"))
+        df = df.select("id").repartition(4, "id")
+    cp = checkpoint(df)
+    plan = cp._jdf.queryExecution().optimizedPlan()  # noqa: SLF001
+    assert str(plan.stats().sizeInBytes()) == str(2**63 - 1)
+    assert "hashpartitioning" in plan.outputPartitioning().toString()
+    agg = cp.groupBy("id").count()
+    assert "Exchange" not in agg._jdf.queryExecution().executedPlan().toString()
+    assert agg.count() == 200

@@ -22,22 +22,11 @@ from bitcoinpagerank_spark.__main__ import main
 
 def _cli(spark, args: list[str]) -> dict:
     """Run one CLI command in this process and return its JSON result
-    line. ``main`` builds its session through ``get_spark``, whose
-    ``getOrCreate`` re-applies the CLI defaults (e.g. 32 shuffle
-    partitions) to the shared test session, so the session's SQL conf
-    is put back afterwards."""
-    saved = spark.conf.getAll
+    line. ``main`` gets its session from ``get_spark``, which returns
+    the active test session with its conf untouched."""
     buf = io.StringIO()
-    try:
-        with contextlib.redirect_stdout(buf):
-            rc = main([*args, "--master", "local[4]"])
-    finally:
-        conf = spark._jsparkSession.sessionState().conf()  # noqa: SLF001
-        for k, v in spark.conf.getAll.items():
-            if k not in saved:
-                conf.unsetConf(k)
-            elif saved[k] != v:
-                conf.setConfString(k, saved[k])
+    with contextlib.redirect_stdout(buf):
+        rc = main([*args, "--master", "local[4]"])
     assert rc == 0, buf.getvalue()[-1500:]
     return json.loads(
         [line for line in buf.getvalue().splitlines() if line.startswith("{")][-1]

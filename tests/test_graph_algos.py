@@ -333,11 +333,10 @@ def _tarjan(edges):
         [((i * 17 + 3) % 40, (i * 29 + 7) % 40) for i in range(90)],
     ],
 )
-@pytest.mark.parametrize("trim", [True, False])
-def test_scc_vs_tarjan(spark, edges, trim):
+def test_scc_vs_tarjan(spark, edges):
     from bitcoinpagerank_spark.operators.scc import strongly_connected_components
 
-    res = strongly_connected_components(spark, edges_df(spark, edges), trim=trim)
+    res = strongly_connected_components(spark, edges_df(spark, edges))
     got = {r["id"]: r["scc"] for r in res.labels.collect()}
     want = _tarjan(edges)
     # drop self-loop-only vertices the operator excludes
@@ -345,26 +344,6 @@ def test_scc_vs_tarjan(spark, edges, trim):
     assert got == want
     assert res.converged
     assert all("shuffle_write_bytes" in m for m in res.metrics)
-
-
-def test_scc_concurrent_closures_match_sequential(spark):
-    """r7: the overlapped fwd/bwd closure threads (guide §2.6) must be a
-    pure scheduling change — labels, round count and convergence equal the
-    sequential run bit-for-bit."""
-    from bitcoinpagerank_spark.operators.scc import strongly_connected_components
-
-    edges = [((i * 17 + 3) % 40, (i * 29 + 7) % 40) for i in range(90)]
-    seq = strongly_connected_components(
-        spark, edges_df(spark, edges), concurrent_closures=False
-    )
-    conc = strongly_connected_components(
-        spark, edges_df(spark, edges), concurrent_closures=True
-    )
-    a = sorted(map(tuple, seq.labels.collect()))
-    b = sorted(map(tuple, conc.labels.collect()))
-    assert a == b
-    assert seq.rounds == conc.rounds
-    assert seq.converged and conc.converged
 
 
 def test_random_walks_replay_oracle(spark):

@@ -35,6 +35,7 @@ cancellation cannot hide a change of two identical rows).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,43 +55,49 @@ class ComponentsResult:
         return self.labels.select("component").distinct().count()
 
 
-def _large_star(pairs: DataFrame) -> DataFrame:
-    """(v, m) for every symmetric neighbor v > u, m = min(Γ(u) ∪ {u}).
-    Output keeps the a > b orientation (v > u ≥ m).
+def _star_round() -> Callable[[DataFrame], DataFrame]:
+    """``pairs -> small_star(large_star(pairs))``: one contraction round.
 
-    The output is NOT deduplicated: with canonical input the emit side
-    has exactly one row per input pair (only the smaller endpoint of a
-    pair has the larger as a > neighbor), so the pre-dedup size is
-    |pairs| — never larger than the dedup'd set — and the consumer
-    (``_small_star``) is duplicate-insensitive: its min aggregate ignores
-    multiplicity and its final ``distinct`` canonicalizes the round's
-    output. Dropping the intermediate distinct removes one |pairs|-scale
-    Exchange + aggregate pair per round (plan: cc_round_step_before/
-    after.txt, 5 -> 4 exchanges)."""
-    sym = pairs.select("a", "b").unionByName(
-        pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    mins = sym.groupBy("a").agg(F.min("b").alias("mn"))
-    mins = mins.select("a", F.least(F.col("mn"), F.col("a")).alias("m"))
-    return (
-        sym.where(F.col("b") > F.col("a"))
-        .join(mins, "a")
-        .select(F.col("b").alias("a"), F.col("m").alias("b"))
-    )
+    Every Column of the round is built here, once per loop: PySpark pays
+    py4j round trips for each Column it builds, so a round builds only
+    its DataFrame ops."""
+    a, b, m = F.col("a"), F.col("b"), F.col("m")
+    ab = [a, b]
+    ba = [b.alias("a"), a.alias("b")]
+    min_b_mn = F.min(b).alias("mn")
+    a_m = [a, F.least(F.col("mn"), a).alias("m")]
+    above = b > a
+    bm = [b.alias("a"), m.alias("b")]
+    min_b_m = F.min(b).alias("m")
+    not_self = a != b
+    am = [a, m.alias("b")]
 
+    def large_star(pairs: DataFrame) -> DataFrame:
+        """(v, m) for every symmetric neighbor v > u, m = min(Γ(u) ∪
+        {u}). Output keeps the a > b orientation (v > u ≥ m).
 
-def _small_star(pairs: DataFrame) -> DataFrame:
-    """With pairs oriented a > b: every small neighbor (and a itself)
-    re-links to m = min(N(a)). Orientation is preserved (v ≥ m, v = m
-    dropped; a > all of N(a) ≥ m)."""
-    mins = pairs.groupBy("a").agg(F.min("b").alias("m"))
-    relink = (
-        pairs.join(mins, "a")
-        .select(F.col("b").alias("a"), F.col("m").alias("b"))
-        .where(F.col("a") != F.col("b"))
-    )
-    self_edge = mins.select("a", F.col("m").alias("b"))
-    return relink.unionByName(self_edge).distinct()
+        The output is NOT deduplicated: with canonical input the emit
+        side has exactly one row per input pair (only the smaller
+        endpoint of a pair has the larger as a > neighbor), so the
+        pre-dedup size is |pairs| — never larger than the dedup'd set —
+        and the consumer (``small_star``) is duplicate-insensitive: its
+        min aggregate ignores multiplicity and its final ``distinct``
+        canonicalizes the round's output. Dropping the intermediate
+        distinct removes one |pairs|-scale Exchange + aggregate pair per
+        round (plan: cc_round_step_before/after.txt, 5 -> 4 exchanges)."""
+        sym = pairs.select(*ab).unionByName(pairs.select(*ba))
+        mins = sym.groupBy(a).agg(min_b_mn).select(*a_m)
+        return sym.where(above).join(mins, "a").select(*bm)
+
+    def small_star(pairs: DataFrame) -> DataFrame:
+        """With pairs oriented a > b: every small neighbor (and a
+        itself) re-links to m = min(N(a)). Orientation is preserved
+        (v ≥ m, v = m dropped; a > all of N(a) ≥ m)."""
+        mins = pairs.groupBy(a).agg(min_b_m)
+        relink = pairs.join(mins, "a").select(*bm).where(not_self)
+        return relink.unionByName(mins.select(*am)).distinct()
+
+    return lambda pairs: small_star(large_star(pairs))
 
 
 def connected_components(
@@ -124,21 +131,32 @@ def connected_components(
             .repartition(num_partitions, "a")
             .localCheckpoint(eager=True)
         )
+        verts = vertices(edges)
     else:
-        # canonical oriented pair set: (max, min), self-loops dropped.
+        # canonical oriented pair set: (larger, smaller) end.
         # repartition BEFORE the dedup: hash(a) satisfies the distinct
         # aggregate's (a, b) clustering (equal pairs share a), so one
         # exchange does both — the old distinct().repartition() paid a
         # second full-|E| exchange for the same set (0.85x A/B).
-        pairs = (
+        # Self-loops and edges with a null end stay in the checkpoint
+        # ({a, b} is {src, dst} on every row), so the labels' vertex set
+        # is read from it too and a lazy edge plan runs once; the rounds
+        # see only a > b.
+        hi = F.col(SRC) >= F.col(DST)
+        canon = (
             edges.select(
-                F.greatest(F.col(SRC), F.col(DST)).alias("a"),
-                F.least(F.col(SRC), F.col(DST)).alias("b"),
+                F.when(hi, F.col(SRC)).otherwise(F.col(DST)).alias("a"),
+                F.when(hi, F.col(DST)).otherwise(F.col(SRC)).alias("b"),
             )
-            .where(F.col("a") != F.col("b"))
             .repartition(num_partitions, "a")
             .dropDuplicates()
             .localCheckpoint(eager=True)
+        )
+        pairs = canon.where(F.col("a") != F.col("b"))
+        verts = (
+            canon.select(F.col("a").alias("id"))
+            .unionByName(canon.select(F.col("b").alias("id")))
+            .distinct()
         )
         if checkpoint_dir and input_sig is None:
             # fingerprint of the INPUT pair set, recorded in every
@@ -149,27 +167,29 @@ def connected_components(
             # cached pairs — cheap next to the rounds it guards.
             input_sig = _pairs_sig(pairs)
 
+    star_round = _star_round()
+    # the convergence signature is built once and rides each checkpoint
+    observed = {
+        "pairs": F.count(F.lit(1)),
+        "hxor": F.bit_xor(F.xxhash64("a", "b")),
+    }
     converged = False
     it = start_iteration
     prev_sig: tuple | None = tuple(start_sig) if start_sig else None
     metrics: list[dict] = list(prior_metrics or [])
     while it < max_iter:
         with run_round(spark, "cc", it, "connected-components round") as rnd:
-            pairs = rnd.checkpoint(
-                _small_star(_large_star(pairs)),
-                pairs=F.count(F.lit(1)),
-                hxor=F.bit_xor(F.xxhash64("a", "b")),
-            )
+            pairs = rnd.checkpoint(star_round(pairs), **observed)
         sig = (rnd["pairs"], rnd.pop("hxor"))
         it += 1
         metrics.append({"iteration": it, **rnd})
+        converged = sig == prev_sig
+        prev_sig = sig
+        if converged or it == max_iter:
+            break  # the final snapshot below covers this round
         if checkpoint_dir and (it - start_iteration) % checkpoint_interval == 0:
             _write_cc_snapshot(pairs, metrics, it, sig, checkpoint_dir,
                                input_sig=input_sig)
-        if sig == prev_sig:
-            converged = True
-            break
-        prev_sig = sig
     if checkpoint_dir:
         _write_cc_snapshot(pairs, metrics, it, prev_sig, checkpoint_dir,
                            final=True, input_sig=input_sig)
@@ -179,10 +199,8 @@ def connected_components(
     roots = pairs.groupBy(F.col("a").alias("id")).agg(
         F.min("b").alias("root")
     )
-    labels = (
-        vertices(edges)
-        .join(roots, "id", "left")
-        .select("id", F.coalesce("root", F.col("id")).alias("component"))
+    labels = verts.join(roots, "id", "left").select(
+        "id", F.coalesce("root", F.col("id")).alias("component")
     )
     return ComponentsResult(labels, it, converged, metrics)
 

@@ -222,34 +222,40 @@ def simhash(doc_tids: DataFrame, bits: int = 32) -> DataFrame:
     Σ 2^j·[Σ_tokens (2·bit_j − 1) > 0]; at bits=64 the bit-63 term is the
     signed value −2^63, giving a full 64-bit hash in one bigint (the
     32-bit default saturates around 10^10 docs — birthday collisions in
-    hamming space — so 64-bit is the web-scale variant)."""
+    hamming space — so 64-bit is the web-scale variant).
+
+    The plan is built from SQL text, the same expression the DuckDB
+    oracle spells out (``plans.catalog._simhash_sql``; Spark SQL writes
+    ``g >> j`` as ``shiftright(g, j)``): one ``selectExpr`` for the two
+    LCG hashes, then one aggregate expression that sums every bit and
+    weighs the signs. Built as ``Column`` objects, every bit costs the
+    driver dozens of py4j round trips before Spark sees a plan (about
+    10k at 64 bits); the text costs the same few at any ``bits``."""
     if bits > 64:
         raise ValueError("bits must be <= 64")
-    a1, b1 = 1_664_525, 1_013_904_223
-    a2, b2 = 1_103_515_245, 12_345
-    tid = F.col("tid").cast("long")
-    g1 = (tid * F.lit(a1) + F.lit(b1)) % F.lit(2**32)
-    g2 = (tid * F.lit(a2) + F.lit(b2)) % F.lit(2**32)
+
+    def bit(j: int) -> str:
+        return f"shiftright(g, {j}) & 1" if j < 32 else f"shiftright(g2, {j - 32}) & 1"
+
+    # 2^j is an int literal below j = 31 and a bigint from there on, the
+    # types the per-term sum has always had; bit 63 weighs -2^63
+    total = " + ".join(
+        f"CASE WHEN sum(CASE WHEN {bit(j)} = 1 THEN 1 ELSE -1 END) > 0 "
+        f"THEN {'-9223372036854775808L' if j == 63 else 1 << j} ELSE 0 END"
+        for j in range(bits)
+    )
     # token multiset as rows (order is irrelevant to the per-bit sums);
     # accepts (id, tids array) or (id, tid) rows — see _tid_rows
-    exploded = _tid_rows(doc_tids).select("id", g1.alias("g"), g2.alias("g2"))
-
-    def _bit(j: int):
-        if j < 32:
-            return F.shiftright(F.col("g"), j).bitwiseAND(F.lit(1))
-        return F.shiftright(F.col("g2"), j - 32).bitwiseAND(F.lit(1))
-
-    aggs = [
-        F.sum(F.when(_bit(j) == 1, F.lit(1)).otherwise(F.lit(-1))).alias(f"s{j}")
-        for j in range(bits)
-    ]
-    sums = exploded.groupBy("id").agg(*aggs)
-    sh = None
-    for j in range(bits):
-        weight = F.lit(-(2**63)) if j == 63 else F.lit(2**j)
-        term = F.when(F.col(f"s{j}") > 0, weight).otherwise(F.lit(0))
-        sh = term if sh is None else sh + term
-    return sums.select("id", sh.cast("long").alias("simhash"))
+    return (
+        _tid_rows(doc_tids)
+        .selectExpr(
+            "id",
+            "(cast(tid AS bigint) * 1664525 + 1013904223) % 4294967296 AS g",
+            "(cast(tid AS bigint) * 1103515245 + 12345) % 4294967296 AS g2",
+        )
+        .groupBy("id")
+        .agg(F.expr(f"cast({total} AS bigint) AS simhash"))
+    )
 
 
 def ngram_jaccard_pairs(
@@ -495,7 +501,9 @@ def neardup_clusters(
     contraction — no driver-side union-find, scales with the pair graph.
     Canonical = min doc id of the cluster (the components label contract);
     documents in no pair are their own canonical. Downstream keep-filter:
-    ``where(is_canonical)``.
+    ``where(is_canonical)``. A lazy ``pairs`` plan runs once: the
+    components' canonical pair checkpoint also yields the labels' vertex
+    set.
     """
     from .components import connected_components
 

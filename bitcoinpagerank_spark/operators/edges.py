@@ -27,11 +27,12 @@ DST = "dst_id"
 # this heuristic only right-sizes local/small runs where per-task scheduling
 # overhead dominates (SURVEY.md §4.1 split-size tuning analog).
 EDGES_PER_PARTITION = 100_000
+MIN_PARTITIONS = 8
 
 
 def auto_partitions(spark, n_edges: int) -> int:
     default = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(8, min(n_edges // EDGES_PER_PARTITION + 1, default))
+    return max(MIN_PARTITIONS, min(n_edges // EDGES_PER_PARTITION + 1, default))
 
 
 # iterative operators hint F.broadcast on bounded per-round tables
@@ -74,7 +75,12 @@ def default_partitions(spark, edges: DataFrame) -> int:
     edge count from leaf-relation plan statistics; ``edges.count()`` only
     as a last resort. At cluster scale callers pin ``num_partitions``
     explicitly — this keeps the *default* from starting every operator
-    with a full edge-table read just to size its shuffles."""
+    with a full edge-table read just to size its shuffles. With
+    ``spark.sql.shuffle.partitions`` at or below ``MIN_PARTITIONS`` no
+    edge count can change the answer, so neither the plan nor the data
+    is looked at."""
+    if int(spark.conf.get("spark.sql.shuffle.partitions")) <= MIN_PARTITIONS:
+        return MIN_PARTITIONS
     n_bytes = plan_input_bytes(edges)
     if n_bytes is not None:
         return auto_partitions(spark, max(1, n_bytes // _BYTES_PER_EDGE))
@@ -144,8 +150,9 @@ def undirected_view(
 
 def partition_lineage(edges: DataFrame, num_partitions: int) -> DataFrame:
     """(part, edge_count) — per-partition edge counts under the engine's
-    pmod(src_id, P) layout. Recorded once per run into the lineage metrics
-    (north_rule: per-partition lineage); the per-iteration delta/mass rows
+    pmod(src_id, P) layout, at most P rows in no particular order.
+    Recorded once per run into the lineage metrics (north_rule:
+    per-partition lineage); the per-iteration delta/mass rows
     are in ``PageRankResult.metrics``. The reference's analog is Hadoop's
     per-task counters (RunPageRankBasic.java:34-36)."""
     return (
@@ -153,7 +160,6 @@ def partition_lineage(edges: DataFrame, num_partitions: int) -> DataFrame:
             F.pmod(F.col(SRC), F.lit(num_partitions)).cast("int").alias("part")
         )
         .agg(F.count("*").alias("edge_count"))
-        .orderBy("part")
     )
 
 

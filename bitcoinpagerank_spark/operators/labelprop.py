@@ -53,32 +53,40 @@ def label_propagation(
         .localCheckpoint(eager=True)
     )
 
+    # every Column of the round is built once here: PySpark pays py4j
+    # round trips per Column built, so a round builds only DataFrame ops
     w = Window.partitionBy("vid").orderBy(F.desc("cnt"), F.asc("label"))
+    on_src = und[SRC] == F.col("id")
+    nbr_cols = [F.col(DST).alias("vid"), F.col("label")]
+    by_vid_label = [F.col("vid"), F.col("label")]
+    cnt = F.count("*").alias("cnt")
+    rn = F.row_number().over(w)
+    first = F.col("rn") == 1
+    best_cols = [F.col("vid"), F.col("label").alias("new_label")]
+    on_vid = F.col("id") == F.col("vid")
+    update = [
+        F.col("id"),
+        F.coalesce(F.col("new_label"), F.col("label")).alias("label"),
+        F.col("label").alias("old"),
+    ]
+    changed = F.sum((F.col("label") != F.col("old")).cast("long"))
+    id_label = [F.col("id"), F.col("label")]
     converged = False
     it = 0
     metrics: list[dict] = []
     while it < max_iter:
         with run_round(spark, "lpa", it, "label-propagation round") as rnd:
             nbr = (
-                und.join(labels, und[SRC] == labels["id"], "inner")
-                .select(F.col(DST).alias("vid"), "label")
-                .groupBy("vid", "label")
-                .agg(F.count("*").alias("cnt"))
+                und.join(labels, on_src, "inner")
+                .select(*nbr_cols)
+                .groupBy(*by_vid_label)
+                .agg(cnt)
             )
-            best = (
-                nbr.withColumn("rn", F.row_number().over(w))
-                .where(F.col("rn") == 1)
-                .select("vid", F.col("label").alias("new_label"))
-            )
+            best = nbr.withColumn("rn", rn).where(first).select(*best_cols)
             labels = rnd.checkpoint(
-                labels.join(best, labels["id"] == best["vid"], "left")
-                .select(
-                    "id",
-                    F.coalesce(F.col("new_label"), F.col("label")).alias("label"),
-                    F.col("label").alias("old"),
-                ),
-                changed=F.sum((F.col("label") != F.col("old")).cast("long")),
-            ).select("id", "label")
+                labels.join(best, on_vid, "left").select(*update),
+                changed=changed,
+            ).select(*id_label)
         it += 1
         metrics.append({"iteration": it, **rnd})
         if rnd["changed"] == 0:

@@ -53,13 +53,15 @@ def checkpoint(df: DataFrame) -> DataFrame:
     spark = cp.sparkSession
     jvm, jss = spark._jvm, spark._jsparkSession  # noqa: SLF001
     node = cp._jdf.logicalPlan()  # noqa: SLF001
-    opt = jvm.scala.Option
+    # a class by its full name is one py4j lookup, not one per package
+    opt = getattr(jvm, "scala.Option")
     fresh = node.copy(
         node.output(), node.rdd(), node.outputPartitioning(),
         node.outputOrdering(), node.isStreaming(), node.stream(), jss,
         opt.empty(), opt.apply(node.constraints()),
     )
-    return type(cp)(jvm.org.apache.spark.sql.classic.Dataset.ofRows(jss, fresh), spark)
+    dataset = getattr(jvm, "org.apache.spark.sql.classic.Dataset")
+    return type(cp)(dataset.ofRows(jss, fresh), spark)
 
 
 def group_shuffle_bytes(spark: SparkSession, group: str) -> tuple[int, int]:
@@ -88,6 +90,13 @@ def group_shuffle_bytes(spark: SparkSession, group: str) -> tuple[int, int]:
         return 0, 0
 
 
+def _named(aggs: dict[str, Column]) -> list[Column]:
+    """``aggs`` as columns named by their keys. Named on the JVM side:
+    ``Column.alias`` also ships the Python call site for error messages,
+    about ten py4j round trips per column and round."""
+    return [type(c)(getattr(c._jc, "as")(k)) for k, c in aggs.items()]  # noqa: SLF001
+
+
 class Round(dict):
     """Metrics row of one loop round: the observed aggregates (NULL read
     as 0) as each checkpoint lands, then ``wall_sec``,
@@ -106,13 +115,13 @@ class Round(dict):
         the aggregates are 0."""
         obs = Observation()
         self._inner.append((obs, list(aggs)))
-        return df.observe(obs, *[c.alias(k) for k, c in aggs.items()])
+        return df.observe(obs, *_named(aggs))
 
     def checkpoint(self, df: DataFrame, **aggs: Column) -> DataFrame:
         """``checkpoint(df)`` with ``aggs`` observed on it: one job."""
         if aggs:
             obs = Observation()
-            df = df.observe(obs, *[c.alias(k) for k, c in aggs.items()])
+            df = df.observe(obs, *_named(aggs))
         df = checkpoint(df)
         if aggs:
             self.update({k: v or 0 for k, v in obs.get.items()})

@@ -17,14 +17,15 @@ SURVEY.md §4.3; the 1e-6 allclose bar is met directly).
 Execution shape per iteration (vs the reference's 2 MapReduce jobs + 2 full
 HDFS graph materializations + driver side-file fold per iteration,
 RunPageRankBasic.java:339-351,423-429):
-  - one cheap aggregate on the cached ranks (dangling mass — replaces the
-    per-reducer side-file protocol of RunPageRankBasic.java:162-176)
   - one join ranks⋈contributions + groupBy(dst).sum (Spark does map-side
     partial aggregation automatically — the reference's optional combiner,
     RunPageRankBasic.java:180-210, is always-on here)
-  - one action computing (L1 delta, total mass) in a single pass
-  - localCheckpoint to truncate lineage; graph stays in executor memory —
-    zero per-iteration disk round-trips of the edge table.
+  - one left join of the sums back onto the ranks, ended by the round's
+    checkpoint: its one job. The L1 delta, total mass and the next
+    round's dangling mass ride it via observe() (this replaces the
+    per-reducer side-file protocol of RunPageRankBasic.java:162-176)
+  - the graph stays in executor memory — zero per-iteration disk
+    round-trips of the edge table.
 
 Personalized PageRank runs the same loop with a per-vertex teleport
 vector in place of the uniform 1/N (``personalized_pagerank``).
@@ -35,7 +36,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .edges import (
@@ -132,19 +133,27 @@ def _init_state(
         tp = F.when(F.col("is_src"), F.lit(1.0 / s_cnt)).otherwise(F.lit(0.0))
         ranks0 = base.select("id", "dangling", tp.alias("tp"), tp.alias("score"))
 
+        tp_col = F.col("tp")
+
         def teleport(mass: float) -> Column:
-            return F.lit(mass) * F.col("tp")
+            return F.lit(mass) * tp_col
     contribs = contributions_table(edges, num_partitions, weight_col).persist()
     n_edges = contribs.count()
     return base, ranks0, contribs, n_edges, teleport
 
 
 def _edges_step(
-    ranks: DataFrame, contribs: DataFrame, missing: float, alpha: float,
-    teleport: Callable[[float], Column],
-) -> DataFrame:
-    """One power-iteration step via DataFrame join + hash aggregate:
+    contribs: DataFrame, alpha: float, teleport: Callable[[float], Column],
+    state: list[str],
+) -> Callable[[DataFrame, float], DataFrame]:
+    """The power-iteration step ``(ranks, missing) -> ranks'`` via
+    DataFrame join + hash aggregate:
     p' = teleport(α) + (1-α)(p_recv + teleport(missing)).
+
+    Every Column of the step is built here, once per loop: PySpark pays
+    py4j round trips for each Column it builds (a dozen for ``F.col``),
+    so a round builds only its DataFrame ops and the one literal that
+    changes, ``teleport(missing)``.
 
     The scores⋈contributions join is a shuffled hash join pinned via
     SHUFFLE_HASH (the loop sets preferSortMergeJoin=false):
@@ -161,22 +170,32 @@ def _edges_step(
     spills ~460 MB and compacts little — the spill writes are page-cache
     absorbed and the partial pass warms the rows for the shuffle writer,
     so the default plan is kept."""
-    state = [c for c in ranks.columns if c != "score"]
-    scores = ranks.select("id", "score").hint("SHUFFLE_HASH")
-    recv = (
-        contribs.join(scores, contribs[SRC] == F.col("id"), "inner")
-        .select(F.col(DST), (F.col("score") * F.col("weight")).alias("mass"))
-        .groupBy(DST)
-        .agg(F.sum("mass").alias("recv"))
-    )
-    new_score = teleport(alpha) + F.lit(1.0 - alpha) * (
-        F.coalesce(F.col("recv"), F.lit(0.0)) + teleport(missing)
-    )
-    return ranks.join(recv, ranks["id"] == recv[DST], "left").select(
-        *state,
-        new_score.alias("score"),
-        F.col("score").alias("old_score"),
-    )
+    id_score = [F.col("id"), F.col("score")]
+    on_src = contribs[SRC] == F.col("id")
+    dst = F.col(DST)
+    mass = [dst, (F.col("score") * F.col("weight")).alias("mass")]
+    recv_sum = F.sum("mass").alias("recv")
+    fixed = teleport(alpha)
+    keep = F.lit(1.0 - alpha)
+    received = F.coalesce(F.col("recv"), F.lit(0.0))
+    on_dst = F.col("id") == dst
+    carried = [F.col(c) for c in state]
+    old_score = F.col("score").alias("old_score")
+
+    def step(ranks: DataFrame, missing: float) -> DataFrame:
+        scores = ranks.select(*id_score).hint("SHUFFLE_HASH")
+        recv = (
+            contribs.join(scores, on_src, "inner")
+            .select(*mass)
+            .groupBy(dst)
+            .agg(recv_sum)
+        )
+        new_score = fixed + keep * (received + teleport(missing))
+        return ranks.join(recv, on_dst, "left").select(
+            *carried, new_score.alias("score"), old_score
+        )
+
+    return step
 
 
 # NOTE on a rejected design: keeping the dangling mass in-plan (a 1-row
@@ -275,38 +294,42 @@ def _pagerank_loop(
             )
         else:
             ranks = ranks0
-        ranks = ranks.localCheckpoint(eager=True)
+        # missing mass for the first step: Σ score over dangling vertices,
+        # observed on the start checkpoint; afterwards each iteration's
+        # checkpoint hands back the NEXT iteration's dangling mass for
+        # free — replaces the reference's per-reducer side files + driver
+        # fold.
+        dm = F.sum(F.when(F.col("dangling"), F.col("score")).otherwise(0.0))
+        start = Observation()
+        ranks = ranks.observe(start, dm.alias("dm")).localCheckpoint(eager=True)
+        missing = start.get["dm"] or 0.0
 
-        part_lineage = [
+        # at most P rows: sorted here, not by a range-partitioned orderBy
+        part_lineage = sorted(
             (r["part"], r["edge_count"])
             for r in partition_lineage(contribs, num_partitions).collect()
-        ]
-
-        # missing mass for the first step: Σ score over dangling vertices
-        # (one scan of the cached ranks; afterwards each iteration's single
-        # aggregate hands back the NEXT iteration's dangling mass for free —
-        # replaces the reference's per-reducer side files + driver fold).
-        missing = (
-            ranks.where(F.col("dangling")).agg(F.sum("score").alias("m")).first()["m"]
-            or 0.0
         )
 
+        step = _edges_step(contribs, alpha, teleport, state)
+        # the convergence metrics (L1 delta, total mass, next dangling
+        # mass) are built once and ride each round's checkpoint
+        observed = {
+            "delta": F.sum(F.abs(F.col("score") - F.col("old_score"))),
+            "total": F.sum("score"),
+            "dm": dm,
+        }
+        carried = [F.col(c) for c in state + ["score"]]
         metrics: list[IterationMetrics] = list(prior_metrics or [])
         converged = False
         it = start_iteration
         while it < max_iter:
             # ONE job per iteration: the convergence metrics ride the
-            # checkpoint materialization itself via observe() — (L1 delta,
-            # total mass, next dangling mass) cost zero extra stages.
-            # Checksum analog of CheckSumPageRank.java:44-55; side-file
-            # analog per SURVEY §2.1 S8.
+            # checkpoint materialization itself via observe() — they
+            # cost zero extra stages. Checksum analog of
+            # CheckSumPageRank.java:44-55; side-file analog per SURVEY
+            # §2.1 S8.
             with run_round(spark, "pr", it, "pagerank iteration") as rnd:
-                new_ranks = rnd.checkpoint(
-                    _edges_step(ranks, contribs, missing, alpha, teleport),
-                    delta=F.sum(F.abs(F.col("score") - F.col("old_score"))),
-                    total=F.sum("score"),
-                    dm=F.sum(F.when(F.col("dangling"), F.col("score")).otherwise(0.0)),
-                )
+                new_ranks = rnd.checkpoint(step(ranks, missing), **observed)
             delta = float(rnd["delta"])
             it += 1
             metrics.append(
@@ -322,13 +345,13 @@ def _pagerank_loop(
                     shuffle_write_bytes=rnd["shuffle_write_bytes"],
                 )
             )
-            ranks = new_ranks.select(*state, "score")
+            ranks = new_ranks.select(*carried)
             missing = float(rnd["dm"])
+            converged = delta <= tol
+            if converged or it == max_iter:
+                break  # the final snapshot below covers this round
             if checkpoint_dir and it % checkpoint_interval == 0:
                 _write_snapshot(ranks, metrics, it, checkpoint_dir, part_lineage)
-            if delta <= tol:
-                converged = True
-                break
         if checkpoint_dir:
             _write_snapshot(ranks, metrics, it, checkpoint_dir, part_lineage,
                             final=True)

@@ -43,16 +43,17 @@ def iceberg_available(spark: SparkSession) -> bool:
 
 
 def _iceberg_catalog(spark: SparkSession) -> str | None:
-    """Name of a configured Iceberg catalog, or None."""
+    """Name of a configured Iceberg catalog, or None. Reads only the
+    ``spark.sql.catalog.*`` entries of the context's conf: a copy of the
+    whole conf costs py4j round trips per entry."""
     try:
-        confs = spark.sparkContext.getConf().getAll()
+        jconf = spark.sparkContext._jsc.sc().conf()  # noqa: SLF001
+        confs = [(kv._1(), kv._2()) for kv in jconf.getAllWithPrefix("spark.sql.catalog.")]
     except Exception:
         return None
-    for k, v in confs:
-        if k.startswith("spark.sql.catalog.") and k.count(".") == 3 and (
-            v.endswith("SparkCatalog") or v.endswith("SparkSessionCatalog")
-        ):
-            return k.rsplit(".", 1)[1]
+    for name, cls in confs:
+        if "." not in name and cls.endswith(("SparkCatalog", "SparkSessionCatalog")):
+            return name
     return None
 
 
@@ -68,16 +69,18 @@ class TableStore:
     ):
         self.spark = spark
         self.root = root.rstrip("/")
+        # the catalog conf is read first: with no Iceberg catalog the
+        # classpath probe, a failing Class.forName that goes through
+        # PySpark's exception conversion, never runs
+        catalog = _iceberg_catalog(spark)
         if backend is None:
             backend = (
-                "iceberg"
-                if iceberg_available(spark) and _iceberg_catalog(spark)
-                else "parquet"
+                "iceberg" if catalog and iceberg_available(spark) else "parquet"
             )
         if backend not in ("iceberg", "parquet"):
             raise ValueError(f"unknown tablestore backend {backend!r}")
         self.backend = backend
-        self._catalog = _iceberg_catalog(spark) if backend == "iceberg" else None
+        self._catalog = catalog if backend == "iceberg" else None
 
     # ------------------------------------------------- Hadoop FS plumbing
 

@@ -21,15 +21,35 @@ def _graph(seed=13, n=100, p=0.04):
     return [(int(i), int(j)) for i, j in zip(*mask.nonzero())]
 
 
-def test_snapshot_and_resume_match_straight_run(spark, tmp_path):
+def _snapshot_names(monkeypatch, run):
+    """(``run()``, the table names ``TableStore.write_table`` was called
+    with during it)."""
+    from bitcoinpagerank_spark.sources.tablestore import TableStore
+
+    names: list[str] = []
+    write_table = TableStore.write_table
+
+    def spy(self, df, name):
+        names.append(name)
+        return write_table(self, df, name)
+
+    monkeypatch.setattr(TableStore, "write_table", spy)
+    out = run()
+    monkeypatch.undo()
+    return out, names
+
+
+def test_snapshot_and_resume_match_straight_run(spark, monkeypatch, tmp_path):
     edges = _graph()
     e = edges_df(spark, edges)
     straight = pagerank(spark, e, tol=1e-9, max_iter=100)
 
     ckpt = str(tmp_path / "ck")
-    partial = pagerank(
+    partial, names = _snapshot_names(monkeypatch, lambda: pagerank(
         spark, e, tol=1e-9, max_iter=4, checkpoint_dir=ckpt, checkpoint_interval=2
-    )
+    ))
+    # the round that ends the loop is written once, as the final snapshot
+    assert names == ["iter0002", "iter0004"]
     assert not partial.converged
     it, manifest = load_snapshot(spark, ckpt)
     assert it == 4 and manifest["final"]
@@ -175,6 +195,19 @@ def test_tablestore_expiry_and_compaction(spark, tmp_path):
         store.expire_tables("iter", keep_last=0)
 
 
+def test_tablestore_without_catalog_skips_the_classpath_probe(spark, monkeypatch):
+    """With no Iceberg catalog configured, no ``TableStore`` pays the
+    ``Class.forName`` probe for the Iceberg runtime."""
+    from bitcoinpagerank_spark.sources import tablestore
+
+    probes: list[int] = []
+    monkeypatch.setattr(tablestore, "iceberg_available",
+                        lambda s: probes.append(1) or False)
+    for _ in range(2):
+        assert tablestore.TableStore(spark, "/unused").backend == "parquet"
+    assert probes == []
+
+
 def test_scc_plain_closure_stats_growth_is_linear(spark):
     """Regression guard for the r4 planning-blowup class: every closure
     round's checkpoint starts its size ESTIMATE over, so the estimate of
@@ -213,7 +246,9 @@ def test_scc_plain_closure_stats_growth_is_linear(spark):
     )
 
 
-def test_components_snapshot_and_resume_match_straight_run(spark, tmp_path):
+def test_components_snapshot_and_resume_match_straight_run(
+    spark, monkeypatch, tmp_path
+):
     """CC resume (north_rule: resumes mid-iteration): interrupt the
     star-contraction at max_iter, resume from the pair-set snapshot, and
     the final labels must be bit-identical to an uninterrupted run."""
@@ -234,10 +269,12 @@ def test_components_snapshot_and_resume_match_straight_run(spark, tmp_path):
     straight = connected_components(spark, e, num_partitions=4)
 
     ckpt = str(tmp_path / "cc_ckpt")
-    interrupted = connected_components(
+    interrupted, names = _snapshot_names(monkeypatch, lambda: connected_components(
         spark, e, max_iter=2, num_partitions=4,
         checkpoint_dir=ckpt, checkpoint_interval=1,
-    )
+    ))
+    # the round that ends the loop is written once, as the final snapshot
+    assert names == ["cc_iter0001", "cc_iter0002"]
     assert not interrupted.converged
     resumed = resume_components(spark, e, ckpt, num_partitions=4)
     assert resumed.converged

@@ -191,14 +191,15 @@ def test_simhash64_neardup_complete_vs_bruteforce(spark, tids):
     assert (1, 2) in got  # exact dups -> hamming 0
 
 
-def test_simhash64_matches_python(spark, tids):
+@pytest.mark.parametrize("bits", [32, 64])
+def test_simhash64_matches_python(spark, tids, bits):
     """Bit-exact vs a Python reimplementation of the two-LCG scheme,
-    including the signed bit-63 weight."""
-    rows = {r["id"]: r["simhash"] for r in simhash(tids, bits=64).collect()}
+    including the signed bit-63 weight at 64 bits."""
+    rows = {r["id"]: r["simhash"] for r in simhash(tids, bits=bits).collect()}
     tid_map = {r["id"]: r["tids"] for r in tids.collect()}
     for doc_id, ts in tid_map.items():
         want = 0
-        for j in range(64):
+        for j in range(bits):
             s = 0
             for t in ts:
                 if j < 32:
@@ -248,6 +249,31 @@ def test_neardup_clusters_transitive(spark):
         0: (0, True), 1: (1, True), 2: (1, False), 3: (1, False),
         4: (4, True), 5: (5, True), 6: (5, False),
     }
+
+
+def test_neardup_clusters_evaluates_the_pair_plan_once(spark):
+    """A lazy pair frame is evaluated once: the components' canonical
+    pair checkpoint also yields the labels' vertex set."""
+    import pandas as pd
+
+    from bitcoinpagerank_spark.operators.dedup import neardup_clusters
+
+    docs = spark.createDataFrame([(i,) for i in range(7)], "doc_id long")
+    batches = spark.sparkContext.accumulator(0)
+
+    def pairs_of(it):
+        for pdf in it:
+            batches.add(1)
+            yield pd.DataFrame({"id_a": pdf["a"] + 1, "id_b": pdf["b"] + 1})
+
+    # one partition, one batch: each evaluation of the plan adds 1
+    rows = spark.sparkContext.parallelize([(0, 1), (1, 2), (4, 5)], 1)
+    pairs = spark.createDataFrame(rows, "a long, b long").mapInPandas(
+        pairs_of, "id_a long, id_b long")
+    got = {r["doc_id"]: r["canonical_id"]
+           for r in neardup_clusters(spark, docs, pairs).collect()}
+    assert got == {0: 0, 1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 5}
+    assert batches.value == 1
 
 
 def test_corpus_filter_hand_case(spark):

@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 
 from bitcoinpagerank_spark.operators.edges import (
+    MIN_PARTITIONS,
     auto_partitions,
     default_partitions,
     plan_input_bytes,
@@ -35,6 +36,19 @@ def test_default_partitions_bounds(spark):
     assert 8 <= p <= max(8, hi)
     # matches the row-count heuristic's clamp behavior on tiny inputs
     assert p == auto_partitions(spark, 2)
+
+
+def test_default_partitions_runs_no_job_at_min_partitions(spark):
+    """At or below MIN_PARTITIONS shuffle partitions every edge count
+    gives MIN_PARTITIONS, so a frame with unknown leaf statistics is not
+    counted."""
+    e = edges_df(spark, [(1, 2), (2, 3), (3, 1)])
+    assert plan_input_bytes(e) is None
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) <= MIN_PARTITIONS
+    sc = spark.sparkContext._jsc.sc()  # noqa: SLF001
+    before = sc.dagScheduler().nextJobId()
+    assert default_partitions(spark, e) == MIN_PARTITIONS
+    assert sc.dagScheduler().nextJobId() == before
 
 
 def test_bowtie_raises_on_truncated_sweep(spark):

@@ -3,16 +3,19 @@ operators in the PageRank family (reference analog: the same product
 surface as RunPageRankBasic.java's score loop; none of these exist in the
 reference — they are breadth ops mandated by the link-graph tier).
 
-All four share the iterate shape of pagerank.py:
+All four run on the power-iteration kernel of power.py, as PageRank does:
 
-* the edge table is partitioned ONCE by the join key and persisted; only
-  vertex-sized score tables move per iteration,
-* each half-step is one equi-join + by-key hash aggregate whose global
-  scalar (normalizer / total) rides the eager checkpoint via
-  ``observe()`` — no extra pass, no driver-side reduction job — and the
-  division by that scalar folds lazily into the next half-step's scan,
-* the eager checkpoint truncates lineage so the logical plan stays O(1)
-  per iteration (measured in BENCH.md round-3 cadence A/B),
+* ``power.prepare`` partitions the edge table ONCE by src and persists
+  it; only vertex-sized score tables (and, for the hub half-step, the
+  sums by src) move per iteration,
+* each half-step is one ``power.spmv`` (equi-join + by-key hash
+  aggregate + left join onto the scores) in ``power.loop_session``, a
+  clone of the caller's session with AQE off; its global scalar
+  (normalizer / total) rides the round's checkpoint via ``observe()`` —
+  no extra pass, no driver-side reduction job — and the division by
+  that scalar folds lazily into the next half-step's scan,
+* the checkpoint truncates lineage so the logical plan stays O(1) per
+  iteration,
 * per-iteration lineage rows carry wall clock + shuffle bytes
   (north-star metrics contract).
 
@@ -46,8 +49,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .edges import SRC, DST, default_partitions, in_degrees, out_degrees, vertices
+from .edges import SRC, DST, default_partitions
 from .lineage import run_round
+from .power import loop_session, moved, prepare, spmv
 
 
 @dataclass
@@ -57,89 +61,67 @@ class CentralityResult:
     metrics: list[dict] = field(default_factory=list)
 
 
-def _prepared(spark, edges, num_partitions, stochastic=False):
-    """(edge table partitioned by src and persisted, persisted vertex
-    table, vertex count). ``stochastic`` adds SALSA's ``inv_od`` =
-    1/outdeg(src) and ``inv_id`` = 1/indeg(dst) columns, and takes the
-    vertex table from the null-filtered edges (the others keep every
-    endpoint of ``edges``)."""
-    base = edges.select(SRC, DST).where(
-        F.col(SRC).isNotNull() & F.col(DST).isNotNull()
-    )
-    e = base
-    if stochastic:
-        e = (
-            base.join(out_degrees(base).withColumnRenamed("id", SRC), SRC)
-            .join(in_degrees(base).withColumnRenamed("id", DST), DST)
-            .select(
-                SRC, DST,
-                (F.lit(1.0) / F.col("out_degree")).alias("inv_od"),
-                (F.lit(1.0) / F.col("in_degree")).alias("inv_id"),
-            )
-        )
-    e = e.repartition(num_partitions, SRC).persist()
-    e.count()
-    verts = vertices(base if stochastic else edges)
-    verts = verts.repartition(num_partitions, "id").persist()
-    n = verts.count()
-    if n == 0:
-        e.unpersist()
-        verts.unpersist()
-        raise ValueError("centrality on an empty graph")
-    return e, verts, n
+def _normalized(frm: str, to: str, weight: str | None, norm: str) -> tuple:
+    """A half-step whose sums are L1-normalized: ``norm`` = Σ sums rides
+    the checkpoint, and the division folds into the next half-step's
+    scan."""
+    out = [F.col("id"), F.coalesce(F.col("recv"), F.lit(0.0)).alias("score")]
+    return frm, to, weight, out, {norm: F.sum("score")}, norm
 
 
-def _hub_authority(spark, edges, max_iter, num_partitions, op, stochastic):
-    """The HITS/SALSA loop: per iteration an authority half-step (in-sums
-    of hub scores) then a hub half-step (out-sums of the new authority
-    scores), each L1-normalized. With ``stochastic`` each contribution is
-    weighted by ``inv_od`` / ``inv_id`` (SALSA), else by 1 (HITS).
-    Returns (id, hub, authority)."""
+def _power(spark, edges, op, desc, max_iter, num_partitions, halves,
+           start=None, weights=None) -> tuple[list[DataFrame], list[dict]]:
+    """Run ``max_iter`` rounds of the ``halves`` half-steps, each one
+    ``spmv`` ended by a checkpoint: ``(frm, to, weight, out, observed,
+    norm)``, with ``norm`` the observed key that divides the half-step's
+    scores (None: no division). Scores start at ``start`` (None: 1/n).
+    Returns each half-step's last (id, score) table, and the metrics
+    rows."""
     if max_iter < 1:
-        raise ValueError(f"{op.upper()} needs max_iter >= 1")
+        raise ValueError(f"{op} needs max_iter >= 1")
     if num_partitions is None:
         num_partitions = default_partitions(spark, edges)
-    e, verts, n = _prepared(spark, edges, num_partitions, stochastic)
-    a_in = F.col("score") * F.col("inv_od") if stochastic else F.col("score")
-    h_in = F.col("score") * F.col("inv_id") if stochastic else F.col("score")
-
-    h = verts.withColumn("score", F.lit(1.0 / n)).localCheckpoint(eager=True)
-    a = None
+    loop = loop_session(spark, num_partitions)
+    e, verts, n, _ = prepare(moved(edges, loop), num_partitions, op, weights)
+    x = verts.withColumn("score", F.lit(1.0 / n if start is None else start))
+    steps = [(spmv(e, frm, to, w), *rest) for frm, to, w, *rest in halves]
+    id_score = [F.col("id"), F.col("score")]
+    last: list[DataFrame] = []
     metrics: list[dict] = []
     for it in range(1, max_iter + 1):
-        with run_round(spark, op, it, f"{op.upper()} half-steps") as rnd:
-            # authority half-step: raw in-sums, normalizer observed on the
-            # checkpoint, division applied lazily on the checkpointed rows
-            a_raw = rnd.checkpoint(
-                e.join(h.select(F.col("id").alias(SRC), "score"), SRC)
-                .groupBy(F.col(DST).alias("id"))
-                .agg(F.sum(a_in).alias("raw")),
-                authority_norm=F.sum("raw"),
-            )
-            sa = rnd["authority_norm"] = float(rnd["authority_norm"]) or 1.0
-            a = verts.join(a_raw, "id", "left").select(
-                "id", (F.coalesce("raw", F.lit(0.0)) / F.lit(sa)).alias("score")
-            )
-            # hub half-step
-            h_raw = rnd.checkpoint(
-                e.join(a.select(F.col("id").alias(DST), "score"), DST)
-                .groupBy(F.col(SRC).alias("id"))
-                .agg(F.sum(h_in).alias("raw")),
-                hub_norm=F.sum("raw"),
-            )
-            sh = rnd["hub_norm"] = float(rnd["hub_norm"]) or 1.0
-        h = verts.join(h_raw, "id", "left").select(
-            "id", (F.coalesce("raw", F.lit(0.0)) / F.lit(sh)).alias("score")
-        )
+        last = []
+        with run_round(spark, op, it, desc) as rnd:
+            for step, out, observed, norm in steps:
+                cp = rnd.checkpoint(step(x, out), **observed)
+                if norm is None:
+                    x = cp.select(*id_score)
+                else:
+                    rnd[norm] = s = float(rnd[norm]) or 1.0
+                    x = cp.select("id", (F.col("score") / F.lit(s)).alias("score"))
+                last.append(x)
         metrics.append({"iteration": it, **rnd})
+    e.unpersist()
+    verts.unpersist()
+    return [moved(x, spark) for x in last], metrics
 
+
+def _hub_authority(spark, edges, max_iter, num_partitions, op, weights,
+                   w_auth=None, w_hub=None) -> CentralityResult:
+    """HITS/SALSA: per iteration an authority half-step (in-sums of hub
+    scores) then a hub half-step (out-sums of the new authority scores),
+    each L1-normalized. Returns (id, hub, authority)."""
+    (a, h), metrics = _power(
+        spark, edges, op, f"{op.upper()} half-steps", max_iter,
+        num_partitions,
+        [_normalized(SRC, DST, w_auth, "authority_norm"),
+         _normalized(DST, SRC, w_hub, "hub_norm")],
+        weights=weights,
+    )
     scores = (
         h.select("id", F.col("score").alias("hub"))
         .join(a.select("id", F.col("score").alias("authority")), "id", "left")
         .select("id", "hub", F.coalesce("authority", F.lit(0.0)).alias("authority"))
     )
-    e.unpersist()
-    verts.unpersist()
     return CentralityResult(scores, max_iter, metrics)
 
 
@@ -153,7 +135,7 @@ def hits(
 
     Returns (id, hub, authority).
     """
-    return _hub_authority(spark, edges, max_iter, num_partitions, "hits", False)
+    return _hub_authority(spark, edges, max_iter, num_partitions, "hits", None)
 
 
 def katz_centrality(
@@ -170,41 +152,17 @@ def katz_centrality(
     conservative default 0.05 is safe for any graph with max in-degree
     <= 20/alpha. No normalization — callers rank on raw scores.
     """
-    if max_iter < 1:
-        raise ValueError("katz_centrality needs max_iter >= 1")
-    if num_partitions is None:
-        num_partitions = default_partitions(spark, edges)
-    e, verts, _n = _prepared(spark, edges, num_partitions)
-
-    c = verts.withColumn("score", F.lit(float(beta))).localCheckpoint(eager=True)
-    metrics: list[dict] = []
-    for it in range(1, max_iter + 1):
-        # ONE job per iteration: unlike eigenvector/HITS, Katz's update
-        # uses only the constants alpha/beta — the observed total_recv is
-        # a metrics row, not a plan input — so the receive aggregate and
-        # the vertex update fuse into a single checkpointed plan (the
-        # pagerank.py shape). F.sum skips nulls, so observing the fused
-        # left join gives exactly the old recv-table total.
-        with run_round(spark, "katz", it, "Katz step") as rnd:
-            recv = (
-                e.join(c.select(F.col("id").alias(SRC), "score"), SRC)
-                .groupBy(F.col(DST).alias("id"))
-                .agg(F.sum("score").alias("recv"))
-            )
-            c = rnd.checkpoint(
-                verts.join(recv, "id", "left").select(
-                    "id",
-                    (
-                        F.lit(float(beta))
-                        + F.lit(float(alpha)) * F.coalesce("recv", F.lit(0.0))
-                    ).alias("score"),
-                    F.col("recv"),
-                ),
-                total_recv=F.sum("recv"),
-            ).select("id", "score")
-        metrics.append({"iteration": it, **rnd})
-    e.unpersist()
-    verts.unpersist()
+    # one checkpoint per iteration: the update uses only the constants
+    # alpha/beta, and the observed total_recv is a metrics row, not a plan
+    # input. F.sum skips the NULL recv of vertices that received nothing.
+    recv = F.col("recv")
+    score = F.lit(float(beta)) + F.lit(float(alpha)) * F.coalesce(recv, F.lit(0.0))
+    out = [F.col("id"), score.alias("score"), recv]
+    (c,), metrics = _power(
+        spark, edges, "katz", "Katz step", max_iter, num_partitions,
+        [(SRC, DST, None, out, {"total_recv": F.sum("recv")}, None)],
+        start=float(beta),
+    )
     return CentralityResult(c, max_iter, metrics)
 
 
@@ -220,29 +178,10 @@ def eigenvector_centrality(
     normalizer rides the checkpoint via ``observe()``; the division folds
     lazily into the next step's scan (the HITS pattern).
     """
-    if max_iter < 1:
-        raise ValueError("eigenvector_centrality needs max_iter >= 1")
-    if num_partitions is None:
-        num_partitions = default_partitions(spark, edges)
-    e, verts, n = _prepared(spark, edges, num_partitions)
-
-    x = verts.withColumn("score", F.lit(1.0 / n)).localCheckpoint(eager=True)
-    metrics: list[dict] = []
-    for it in range(1, max_iter + 1):
-        with run_round(spark, "eigen", it, "eigenvector power step") as rnd:
-            raw = rnd.checkpoint(
-                e.join(x.select(F.col("id").alias(SRC), "score"), SRC)
-                .groupBy(F.col(DST).alias("id"))
-                .agg(F.sum("score").alias("raw")),
-                l1_norm=F.sum("raw"),
-            )
-            s = rnd["l1_norm"] = float(rnd["l1_norm"]) or 1.0
-        x = verts.join(raw, "id", "left").select(
-            "id", (F.coalesce("raw", F.lit(0.0)) / F.lit(s)).alias("score")
-        )
-        metrics.append({"iteration": it, **rnd})
-    e.unpersist()
-    verts.unpersist()
+    (x,), metrics = _power(
+        spark, edges, "eigen", "eigenvector power step", max_iter,
+        num_partitions, [_normalized(SRC, DST, None, "l1_norm")],
+    )
     return CentralityResult(x, max_iter, metrics)
 
 
@@ -259,4 +198,5 @@ def salsa(
     persisted — the per-iteration joins then touch only vertex-sized
     score tables, identical shuffle profile to hits().
     """
-    return _hub_authority(spark, edges, max_iter, num_partitions, "salsa", True)
+    return _hub_authority(spark, edges, max_iter, num_partitions, "salsa",
+                          "stochastic", "inv_od", "inv_id")

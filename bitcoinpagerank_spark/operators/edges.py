@@ -176,54 +176,6 @@ def adjacency_lists(edges: DataFrame, dedup: bool = True) -> DataFrame:
     )
 
 
-def contributions_table(
-    edges: DataFrame,
-    num_partitions: int | None = None,
-    weight_col: str | None = None,
-) -> DataFrame:
-    """Per-edge PageRank weight table: (src_id, dst_id, weight).
-
-    Unweighted (default): weight = 1/out_degree. With ``weight_col``: an
-    explicit per-edge weight w, normalized per source to w/Σw(src) so
-    each vertex still emits exactly its score.
-
-    Precomputed once per PageRank run (the reference recomputes ``p - log d``
-    per message per iteration, RunPageRankBasic.java:79-88). Partitioned by
-    ``src_id`` so the per-iteration score join co-locates without
-    re-shuffling the (large) edge side.
-    """
-    if weight_col is None:
-        deg = out_degrees(edges)
-        contrib = edges.join(deg, edges[SRC] == deg["id"], "inner").select(
-            F.col(SRC),
-            F.col(DST),
-            (F.lit(1.0) / F.col("out_degree").cast("double")).alias("weight"),
-        )
-    else:
-        # a null or non-positive weight would make w/Σw null (F.sum then
-        # silently drops that mass and total rank drifts below 1) — fail
-        # loudly instead; with all weights > 0 every per-source sum is > 0,
-        # so no zero-sum source can slip past the dangling-mass accounting
-        w = F.col(weight_col).cast("double")
-        bad = edges.where(w.isNull() | (w <= 0) | F.isnan(w)).limit(1).count()
-        if bad:
-            raise ValueError(
-                f"weight_col {weight_col!r} contains null/NaN/non-positive "
-                "values; PageRank mass conservation requires weights > 0"
-            )
-        tw = edges.groupBy(F.col(SRC).alias("id")).agg(
-            F.sum(F.col(weight_col).cast("double")).alias("tw")
-        )
-        contrib = edges.join(tw, edges[SRC] == tw["id"], "inner").select(
-            F.col(SRC),
-            F.col(DST),
-            (F.col(weight_col).cast("double") / F.col("tw")).alias("weight"),
-        )
-    if num_partitions:
-        contrib = contrib.repartition(num_partitions, SRC)
-    return contrib
-
-
 def quotient_graph(
     edges: DataFrame,
     mapping: DataFrame,

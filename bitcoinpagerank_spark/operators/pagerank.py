@@ -16,13 +16,15 @@ SURVEY.md §4.3; the 1e-6 allclose bar is met directly).
 
 Execution shape per iteration (vs the reference's 2 MapReduce jobs + 2 full
 HDFS graph materializations + driver side-file fold per iteration,
-RunPageRankBasic.java:339-351,423-429):
-  - one join ranks⋈contributions + groupBy(dst).sum (Spark does map-side
-    partial aggregation automatically — the reference's optional combiner,
-    RunPageRankBasic.java:180-210, is always-on here)
-  - one left join of the sums back onto the ranks, ended by the round's
-    checkpoint: its one job. The L1 delta, total mass and the next
-    round's dangling mass ride it via observe() (this replaces the
+RunPageRankBasic.java:339-351,423-429): one ``power.spmv`` half-step, run
+in ``power.loop_session`` (a clone of the caller's session with AQE off)
+  - one shuffled hash join ranks⋈contributions + groupBy(dst).sum (Spark
+    does map-side partial aggregation automatically — the reference's
+    optional combiner, RunPageRankBasic.java:180-210, is always-on here);
+    the sums' Exchange by dst is the round's only one
+  - one shuffled hash left join of the sums back onto the ranks, ended by
+    the round's checkpoint: its one job. The L1 delta, total mass and the
+    next round's dangling mass ride it via observe() (this replaces the
     per-reducer side-file protocol of RunPageRankBasic.java:162-176)
   - the graph stays in executor memory — zero per-iteration disk
     round-trips of the edge table.
@@ -34,21 +36,13 @@ vector in place of the uniform 1/N (``personalized_pagerank``).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .edges import (
-    SRC,
-    DST,
-    default_partitions,
-    contributions_table,
-    out_degrees,
-    partition_lineage,
-    vertices,
-)
+from .edges import SRC, DST, default_partitions, partition_lineage, vertices
 from .lineage import run_round
+from .power import loop_session, moved, prepare, spmv
 
 ALPHA = 0.15  # jump probability, RunPageRankBasic.java:246
 DEFAULT_TOL = 1e-6
@@ -94,108 +88,6 @@ class PageRankResult:
                 "shuffle_read_bytes long, shuffle_write_bytes long"
             ),
         )
-
-
-def _init_state(
-    spark: SparkSession, edges: DataFrame, num_partitions: int,
-    weight_col: str | None = None, sources: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame, int, Callable[[float], Column]]:
-    """Build (base, ranks0, contribs, n_edges, teleport).
-
-    The cached ``base`` carries a precomputed ``dangling`` flag so the
-    per-iteration missing-mass aggregate is a scan of the cached ranks,
-    not a join. ``teleport(mass)`` is each vertex's share of ``mass``:
-    the literal mass/N for uniform PageRank; with ``sources``
-    (personalized) the ranks carry a ``tp`` column, 1/|S| on the sources
-    and 0 elsewhere, and the share is mass·tp.
-    """
-    base = vertices(edges).join(out_degrees(edges), "id", "left")
-    flags = [F.col("out_degree").isNull().alias("dangling")]
-    if sources is not None:
-        src_flag = sources.select("id").distinct().withColumn("is_src", F.lit(True))
-        base = base.join(src_flag, "id", "left")
-        flags.append(F.coalesce("is_src", F.lit(False)).alias("is_src"))
-    base = base.select("id", *flags).repartition(num_partitions, "id").persist()
-    n = base.count()
-    if n == 0:
-        raise ValueError(
-            "PageRank on an empty graph: edge table has no non-null edges"
-        )
-    if sources is None:
-        ranks0 = base.withColumn("score", F.lit(1.0 / n))
-
-        def teleport(mass: float) -> Column:
-            return F.lit(mass / n)
-    else:
-        s_cnt = base.where(F.col("is_src")).count()
-        if s_cnt == 0:
-            raise ValueError("personalized_pagerank: no source id is in the graph")
-        tp = F.when(F.col("is_src"), F.lit(1.0 / s_cnt)).otherwise(F.lit(0.0))
-        ranks0 = base.select("id", "dangling", tp.alias("tp"), tp.alias("score"))
-
-        tp_col = F.col("tp")
-
-        def teleport(mass: float) -> Column:
-            return F.lit(mass) * tp_col
-    contribs = contributions_table(edges, num_partitions, weight_col).persist()
-    n_edges = contribs.count()
-    return base, ranks0, contribs, n_edges, teleport
-
-
-def _edges_step(
-    contribs: DataFrame, alpha: float, teleport: Callable[[float], Column],
-    state: list[str],
-) -> Callable[[DataFrame, float], DataFrame]:
-    """The power-iteration step ``(ranks, missing) -> ranks'`` via
-    DataFrame join + hash aggregate:
-    p' = teleport(α) + (1-α)(p_recv + teleport(missing)).
-
-    Every Column of the step is built here, once per loop: PySpark pays
-    py4j round trips for each Column it builds (a dozen for ``F.col``),
-    so a round builds only its DataFrame ops and the one literal that
-    changes, ``teleport(missing)``.
-
-    The scores⋈contributions join is a shuffled hash join pinned via
-    SHUFFLE_HASH (the loop sets preferSortMergeJoin=false):
-    contribs' src-partitioning is reused and the |V|-side builds the hash
-    table; sort-merge would re-sort the |E|-scale table every iteration.
-    Broadcasting the scores instead was measured slower: they change
-    every iteration, so broadcast re-pays driver collect + re-broadcast
-    each round (CHANGES.md has the A/B). The old score is carried through
-    so the convergence aggregate needs no second join.
-
-    Measured (48M edges, 16 pinned cores, interleaved A/B): the standard
-    partial+final hash aggregate beats an explicit repartition(dst) +
-    complete-agg variant by ~10%/iteration even though the partial agg
-    spills ~460 MB and compacts little — the spill writes are page-cache
-    absorbed and the partial pass warms the rows for the shuffle writer,
-    so the default plan is kept."""
-    id_score = [F.col("id"), F.col("score")]
-    on_src = contribs[SRC] == F.col("id")
-    dst = F.col(DST)
-    mass = [dst, (F.col("score") * F.col("weight")).alias("mass")]
-    recv_sum = F.sum("mass").alias("recv")
-    fixed = teleport(alpha)
-    keep = F.lit(1.0 - alpha)
-    received = F.coalesce(F.col("recv"), F.lit(0.0))
-    on_dst = F.col("id") == dst
-    carried = [F.col(c) for c in state]
-    old_score = F.col("score").alias("old_score")
-
-    def step(ranks: DataFrame, missing: float) -> DataFrame:
-        scores = ranks.select(*id_score).hint("SHUFFLE_HASH")
-        recv = (
-            contribs.join(scores, on_src, "inner")
-            .select(*mass)
-            .groupBy(dst)
-            .agg(recv_sum)
-        )
-        new_score = fixed + keep * (received + teleport(missing))
-        return ranks.join(recv, on_dst, "left").select(
-            *carried, new_score.alias("score"), old_score
-        )
-
-    return step
 
 
 # NOTE on a rejected design: keeping the dangling mass in-plan (a 1-row
@@ -269,99 +161,115 @@ def _pagerank_loop(
 ) -> PageRankResult:
     if num_partitions is None:
         num_partitions = default_partitions(spark, edges)
-    # Pin the iterate loop's partitioning: AQE coalescing would re-plan
-    # every iteration (driver-serial work) and destabilize the per-partition
-    # lineage rows (SURVEY.md §4.2 R3). Measured ~20% faster at local[16]
-    # with AQE off for this loop; restored afterwards.
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    smj_before = spark.conf.get("spark.sql.join.preferSortMergeJoin", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    # hash joins, not sort-merge: the iterate loop would otherwise re-SORT
-    # the |E|-scale contributions table AND both |V|-scale sides of the
-    # update join EVERY iteration; a shuffled hash join streams the big
-    # side and builds on the vertex side (always the smaller one here)
-    spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
-    try:
-        base, ranks0, contribs, n_edges, teleport = _init_state(
-            spark, edges, num_partitions, weight_col, sources
-        )
-        state = [c for c in ranks0.columns if c != "score"]
-        if start_ranks is not None:
-            ranks = (
-                start_ranks.join(ranks0.select(*state), "id", "inner")
-                .select(*state, "score")
-                .repartition(num_partitions, "id")
-            )
-        else:
-            ranks = ranks0
-        # missing mass for the first step: Σ score over dangling vertices,
-        # observed on the start checkpoint; afterwards each iteration's
-        # checkpoint hands back the NEXT iteration's dangling mass for
-        # free — replaces the reference's per-reducer side files + driver
-        # fold.
-        dm = F.sum(F.when(F.col("dangling"), F.col("score")).otherwise(0.0))
-        start = Observation()
-        ranks = ranks.observe(start, dm.alias("dm")).localCheckpoint(eager=True)
-        missing = start.get["dm"] or 0.0
+    loop = loop_session(spark, num_partitions)
+    if sources is not None:
+        sources = moved(sources, loop)
+    contribs, base, n, n_edges = prepare(
+        moved(edges, loop), num_partitions, "PageRank", "pagerank",
+        weight_col, sources,
+    )
+    # teleport(mass) is each vertex's share of mass: the literal mass/N
+    # for uniform PageRank; with sources (personalized) the ranks carry a
+    # tp column, 1/|S| on the sources and 0 elsewhere, and the share is
+    # mass·tp
+    if sources is None:
+        ranks0 = base.withColumn("score", F.lit(1.0 / n))
 
-        # at most P rows: sorted here, not by a range-partitioned orderBy
-        part_lineage = sorted(
-            (r["part"], r["edge_count"])
-            for r in partition_lineage(contribs, num_partitions).collect()
-        )
+        def teleport(mass: float) -> Column:
+            return F.lit(mass / n)
+    else:
+        s_cnt = base.where(F.col("is_src")).count()
+        if s_cnt == 0:
+            raise ValueError("personalized_pagerank: no source id is in the graph")
+        tp = F.when(F.col("is_src"), F.lit(1.0 / s_cnt)).otherwise(F.lit(0.0))
+        ranks0 = base.select("id", "dangling", tp.alias("tp"), tp.alias("score"))
+        tp_col = F.col("tp")
 
-        step = _edges_step(contribs, alpha, teleport, state)
-        # the convergence metrics (L1 delta, total mass, next dangling
-        # mass) are built once and ride each round's checkpoint
-        observed = {
-            "delta": F.sum(F.abs(F.col("score") - F.col("old_score"))),
-            "total": F.sum("score"),
-            "dm": dm,
-        }
-        carried = [F.col(c) for c in state + ["score"]]
-        metrics: list[IterationMetrics] = list(prior_metrics or [])
-        converged = False
-        it = start_iteration
-        while it < max_iter:
-            # ONE job per iteration: the convergence metrics ride the
-            # checkpoint materialization itself via observe() — they
-            # cost zero extra stages. Checksum analog of
-            # CheckSumPageRank.java:44-55; side-file analog per SURVEY
-            # §2.1 S8.
-            with run_round(spark, "pr", it, "pagerank iteration") as rnd:
-                new_ranks = rnd.checkpoint(step(ranks, missing), **observed)
-            delta = float(rnd["delta"])
-            it += 1
-            metrics.append(
-                IterationMetrics(
-                    iteration=it,
-                    delta_l1=delta,
-                    total_mass=float(rnd["total"]),
-                    missing_mass=missing,
-                    edges_processed=n_edges,
-                    num_partitions=num_partitions,
-                    wall_sec=rnd["wall_sec"],
-                    shuffle_read_bytes=rnd["shuffle_read_bytes"],
-                    shuffle_write_bytes=rnd["shuffle_write_bytes"],
-                )
+        def teleport(mass: float) -> Column:
+            return F.lit(mass) * tp_col
+    state = [c for c in ranks0.columns if c != "score"]
+    if start_ranks is not None:
+        ranks = (
+            moved(start_ranks, loop).join(ranks0.select(*state), "id", "inner")
+            .select(*state, "score")
+            .repartition(num_partitions, "id")
+        )
+    else:
+        ranks = ranks0
+    # missing mass for the first step: Σ score over dangling vertices,
+    # observed on the start checkpoint; afterwards each iteration's
+    # checkpoint hands back the NEXT iteration's dangling mass for free —
+    # replaces the reference's per-reducer side files + driver fold.
+    dm = F.sum(F.when(F.col("dangling"), F.col("score")).otherwise(0.0))
+    start = Observation()
+    ranks = ranks.observe(start, dm.alias("dm")).localCheckpoint(eager=True)
+    missing = start.get["dm"] or 0.0
+
+    # at most P rows: sorted here, not by a range-partitioned orderBy
+    part_lineage = sorted(
+        (r["part"], r["edge_count"])
+        for r in partition_lineage(contribs, num_partitions).collect()
+    )
+
+    # p' = teleport(α) + (1-α)(p_recv + teleport(missing)); the old score
+    # is carried through so the convergence aggregate needs no second join
+    step = spmv(contribs, SRC, DST, "weight")
+    fixed = teleport(alpha)
+    keep = F.lit(1.0 - alpha)
+    received = F.coalesce(F.col("recv"), F.lit(0.0))
+    old_score = F.col("score").alias("old_score")
+    carried = [F.col(c) for c in state]
+    # the convergence metrics (L1 delta, total mass, next dangling mass)
+    # are built once and ride each round's checkpoint
+    observed = {
+        "delta": F.sum(F.abs(F.col("score") - F.col("old_score"))),
+        "total": F.sum("score"),
+        "dm": dm,
+    }
+    kept = carried + [F.col("score")]
+    metrics: list[IterationMetrics] = list(prior_metrics or [])
+    converged = False
+    it = start_iteration
+    while it < max_iter:
+        # ONE job per iteration: the convergence metrics ride the
+        # checkpoint materialization itself via observe() — they cost
+        # zero extra stages. Checksum analog of CheckSumPageRank.java:44-55;
+        # side-file analog per SURVEY §2.1 S8.
+        with run_round(spark, "pr", it, "pagerank iteration") as rnd:
+            new_score = fixed + keep * (received + teleport(missing))
+            new_ranks = rnd.checkpoint(
+                step(ranks, [*carried, new_score.alias("score"), old_score]),
+                **observed,
             )
-            ranks = new_ranks.select(*carried)
-            missing = float(rnd["dm"])
-            converged = delta <= tol
-            if converged or it == max_iter:
-                break  # the final snapshot below covers this round
-            if checkpoint_dir and it % checkpoint_interval == 0:
-                _write_snapshot(ranks, metrics, it, checkpoint_dir, part_lineage)
-        if checkpoint_dir:
-            _write_snapshot(ranks, metrics, it, checkpoint_dir, part_lineage,
-                            final=True)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-        spark.conf.set("spark.sql.join.preferSortMergeJoin", smj_before)
+        delta = float(rnd["delta"])
+        it += 1
+        metrics.append(
+            IterationMetrics(
+                iteration=it,
+                delta_l1=delta,
+                total_mass=float(rnd["total"]),
+                missing_mass=missing,
+                edges_processed=n_edges,
+                num_partitions=num_partitions,
+                wall_sec=rnd["wall_sec"],
+                shuffle_read_bytes=rnd["shuffle_read_bytes"],
+                shuffle_write_bytes=rnd["shuffle_write_bytes"],
+            )
+        )
+        ranks = new_ranks.select(*kept)
+        missing = float(rnd["dm"])
+        converged = delta <= tol
+        if converged or it == max_iter:
+            break  # the final snapshot below covers this round
+        if checkpoint_dir and it % checkpoint_interval == 0:
+            _write_snapshot(ranks, metrics, it, checkpoint_dir, part_lineage)
+    if checkpoint_dir:
+        _write_snapshot(ranks, metrics, it, checkpoint_dir, part_lineage,
+                        final=True)
     base.unpersist()
     contribs.unpersist()
-    return PageRankResult(ranks.select("id", "score"), it, converged, metrics,
-                          part_lineage)
+    return PageRankResult(moved(ranks.select("id", "score"), spark), it,
+                          converged, metrics, part_lineage)
 
 
 # ---------------------------------------------------------------- snapshots

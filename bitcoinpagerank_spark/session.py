@@ -96,7 +96,6 @@ def get_spark(
     app_name: str = "bitcoinpagerank_spark",
     master: str | None = None,
     shuffle_partitions: int = DEFAULT_SHUFFLE_PARTITIONS,
-    adaptive: bool = True,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build a SparkSession with engine defaults, or return the active
@@ -104,9 +103,11 @@ def get_spark(
     is never overwritten by these defaults.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, fallback
-    ``local[*]``). AQE is on by default — the PageRank loop pins its own
-    partitioning per-stage and disables AQE coalescing locally where a
-    stable layout matters (SURVEY.md §4.2 R3).
+    ``local[*]``). AQE is on: the iterate loops of the PageRank family
+    run their rounds in a private clone of the session with AQE off
+    (``operators.power.loop_session``), and the caller's session keeps
+    it on, because AQE off as the session default made the near-dup
+    workload slower (``loop_session`` has the numbers).
     """
     active = SparkSession.getActiveSession()
     if active is not None:
@@ -120,8 +121,8 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true" if adaptive else "false")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true" if adaptive else "false")
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", heap))

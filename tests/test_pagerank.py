@@ -6,7 +6,18 @@ import pytest
 from conftest import G_CYCLE, G_LINE, G_STAR, G_TRI, G_TWO_CC, edges_df
 from oracles import pagerank_oracle
 
-from bitcoinpagerank_spark.operators.pagerank import checksum, pagerank, top_k
+from bitcoinpagerank_spark.operators.centrality import (
+    eigenvector_centrality,
+    hits,
+    katz_centrality,
+    salsa,
+)
+from bitcoinpagerank_spark.operators.pagerank import (
+    checksum,
+    pagerank,
+    personalized_pagerank,
+    top_k,
+)
 
 GRAPHS = {
     "line": G_LINE,
@@ -259,3 +270,75 @@ def test_weighted_pagerank_rejects_bad_weights(spark):
             pagerank(spark, e, max_iter=2, weight_col="w")
 
 
+
+
+LOOP_OPS = {
+    "pagerank": lambda s, e: pagerank(s, e, tol=0.0, max_iter=2).ranks,
+    "personalized_pagerank": lambda s, e: personalized_pagerank(
+        s, e, [1], tol=0.0, max_iter=2).ranks,
+    "hits": lambda s, e: hits(s, e, max_iter=2).scores,
+    "salsa": lambda s, e: salsa(s, e, max_iter=2).scores,
+    "katz_centrality": lambda s, e: katz_centrality(s, e, max_iter=2).scores,
+    "eigenvector_centrality": lambda s, e: eigenvector_centrality(
+        s, e, max_iter=2).scores,
+}
+
+
+@pytest.mark.parametrize("op", sorted(LOOP_OPS))
+def test_loop_leaves_the_callers_conf_alone(spark, monkeypatch, op):
+    """The PageRank-family loops run their rounds in a private session:
+    inside every round the caller's session still has its own AQE and
+    join settings, and the result is a frame of the caller's session."""
+    from contextlib import contextmanager
+
+    from bitcoinpagerank_spark.operators import centrality, lineage
+    from bitcoinpagerank_spark.operators import pagerank as pagerank_mod
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.join.preferSortMergeJoin")
+    want = [spark.conf.get(k) for k in keys]
+    seen = []
+    real = lineage.run_round
+
+    @contextmanager
+    def spied(*args, **kwargs):
+        with real(*args, **kwargs) as rnd:
+            seen.append([spark.conf.get(k) for k in keys])
+            yield rnd
+            seen.append([spark.conf.get(k) for k in keys])
+
+    monkeypatch.setattr(pagerank_mod, "run_round", spied)
+    monkeypatch.setattr(centrality, "run_round", spied)
+    out = LOOP_OPS[op](spark, edges_df(spark, G_TRI + [(3, 4)]))
+    assert len(seen) == 4
+    assert all(s == want for s in seen), seen
+    assert out.sparkSession is spark
+    assert out.count() == 4
+
+
+def _node_names(plan) -> list[str]:
+    names = [plan.nodeName()]
+    children = plan.children()
+    for i in range(children.size()):
+        names += _node_names(children.apply(i))
+    return names
+
+
+def test_pagerank_round_is_one_exchange_and_no_sort_merge_join(
+        spark, monkeypatch):
+    """A PageRank round's executed plan shuffles once, the sums by
+    destination; both joins are hash joins, so no side is sorted."""
+    from bitcoinpagerank_spark.operators import lineage
+
+    plans = []
+    real = lineage.checkpoint
+
+    def spied(df):
+        plans.append(_node_names(df._jdf.queryExecution().executedPlan()))
+        return real(df)
+
+    monkeypatch.setattr(lineage, "checkpoint", spied)
+    pagerank(spark, edges_df(spark, G_TWO_CC + G_STAR), tol=0.0, max_iter=3)
+    assert len(plans) == 3
+    for names in plans:
+        assert "SortMergeJoin" not in names, names
+        assert names.count("Exchange") == 1, names

@@ -17,7 +17,7 @@ synthesized outside the provided tables).
 
 from __future__ import annotations
 
-from typing import Callable
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -228,72 +228,113 @@ def q_triangle_count(spark, sf_dir):
     return spark.createDataFrame([(n,)], "n_triangles long")
 
 
-def _pagerank_iter_sql(
-    iters: int,
-    edges_name: str = "edges",
-    verts_name: str = "verts",
-    extra_cte: str = "",
-    teleport_sql: str | None = None,
-    round_digits: int | None = 9,
-) -> str:
-    """Unrolled damped PageRank (§2.12 semantics) as chained CTEs.
+class _Half(NamedTuple):
+    """One half-step x → x' of an unrolled power iteration, the SQL twin
+    of ``operators/power.py:spmv``: recv(v) = Σ ``mass`` over
+    ``edges ⋈ x`` on ``frm``, grouped by ``to``; then x'(v) = ``update``
+    over the vertex CTE left-joined to recv (NULL where v received
+    nothing).
 
-    ``teleport_sql``: expression in terms of ``v.id`` giving the teleport
-    weight per vertex (default uniform 1.0/cnt); dangling mass is
-    redistributed through the same vector — covers both standard and
-    personalized PageRank. ``edges_name`` lets the multigraph variant
-    iterate over the non-deduplicated edge CTE."""
-    # keep single-rounding float expressions on the uniform path (matches
-    # the Spark side's alpha/n and missing/n literals exactly)
-    init_tp = teleport_sql if teleport_sql else "1.0/cnt"
-    if teleport_sql:
+    ``name`` prefixes this half's score CTEs (``{name}{round}``), and the
+    next half reads them under the alias ``name``, so ``mass`` names the
+    previous half (``r.score / deg.d``). ``join`` adds the table of the
+    per-edge weight. ``scalar`` is an optional one-row CTE cross-joined
+    into the update; it reads the previous scores as ``{prev}``
+    (PageRank's dangling mass) or the sums as ``{sums}`` (an L1 norm)."""
+
+    name: str
+    mass: str
+    update: str
+    frm: str = "src_id"
+    to: str = "dst_id"
+    join: str = ""
+    scalar: str = ""
+
+
+def _power_sql(
+    iters: int,
+    init: str,
+    halves: list[_Half],
+    select: str,
+    ctes: tuple[str, ...] = (),
+    edges: str = "edges",
+    verts: str = "verts",
+    consts: tuple[str, ...] = ("vn",),
+) -> str:
+    """Unrolled power iteration as chained plain CTEs: ``EDGES_CTE``, the
+    extra ``ctes``, ``vn`` (N = count(*) of ``verts``, as ``cnt``), the
+    initial scores ``init`` per ``v.id``, then per round each of
+    ``halves``. ``consts`` are the one-row CTEs cross-joined into the init
+    and every update. ``select`` ends the query: ``{x}`` in it is the last
+    score CTE, ``{name}`` the last one of that half.
+
+    Only ``vn`` is MATERIALIZED: DuckDB inlines a plain CTE at every
+    reference, so a plain ``vn`` re-derives ``verts`` in every update
+    (twice the oracle time); it is one integer, so no float sum changes
+    order."""
+    cross = "".join(f" CROSS JOIN {c}" for c in consts)
+    alias = halves[-1].name
+    prev = f"{alias}0"
+    parts = [
+        EDGES_CTE.strip(),
+        *ctes,
+        f"vn AS MATERIALIZED (SELECT count(*) AS cnt FROM {verts})",
+        f"{prev} AS (SELECT v.id, {init} AS score FROM {verts} v{cross})",
+    ]
+    for i in range(1, iters + 1):
+        for h in halves:
+            sums, scalar = f"{h.name}recv{i}", ""
+            join = f"\n  {h.join}" if h.join else ""
+            parts.append(f"""{sums} AS (
+  SELECT e.{h.to} AS id, sum({h.mass}) AS recv
+  FROM {edges} e JOIN {prev} {alias} ON e.{h.frm} = {alias}.id{join}
+  GROUP BY 1
+)""")
+            if h.scalar:
+                scalar = f" CROSS JOIN {h.name}scal{i}"
+                sc = h.scalar.format(prev=prev, sums=sums)
+                parts.append(f"{h.name}scal{i} AS ({sc})")
+            prev, alias = f"{h.name}{i}", h.name
+            parts.append(f"""{prev} AS (
+  SELECT v.id, {h.update} AS score
+  FROM {verts} v{cross}{scalar}
+  LEFT JOIN {sums} rc ON v.id = rc.id
+)""")
+    last = {"x": prev} | {h.name: f"{h.name}{iters}" for h in halves}
+    return "WITH " + ",\n".join(parts) + "\n" + select.format(**last)
+
+
+def _pr_half(
+    teleport: str | None = None, deg: str = "deg", mass: str = "r.score / deg.d"
+) -> _Half:
+    """Damped PageRank's step (§2.12 semantics): ``mass`` over the
+    out-edges, plus the dangling mass ``miss`` of the previous scores
+    (vertices absent from ``deg``) sent back through the teleport vector.
+    ``teleport`` is an expression in ``v.id`` (personalized PageRank,
+    TrustRank); None is uniform, which keeps the single-rounding ``/cnt``
+    form that matches the Spark side's alpha/n and missing/n literals."""
+    if teleport:
         update = (
-            f"0.15*({teleport_sql}) + 0.85*(coalesce(recv, 0.0) "
-            f"+ miss*({teleport_sql}))"
+            f"0.15*({teleport}) + 0.85*(coalesce(recv, 0.0) "
+            f"+ miss*({teleport}))"
         )
     else:
         update = "0.15/cnt + 0.85*(coalesce(recv, 0.0) + miss/cnt)"
-    parts = [
-        f"WITH {EDGES_CTE},",
-    ]
-    if extra_cte:
-        parts.append(extra_cte.rstrip().rstrip(",") + ",")
-    parts += [
-        f"deg AS (SELECT src_id, count(*) AS d FROM {edges_name} GROUP BY 1),",
-        f"r0 AS (SELECT v.id, {init_tp} AS score FROM {verts_name} v, n),",
-    ]
-    for i in range(iters):
-        prev, cur = f"r{i}", f"r{i+1}"
-        parts.append(
-            f"""m{i} AS (
-  SELECT coalesce(sum(score), 0.0) AS miss FROM {prev}
-  WHERE id NOT IN (SELECT src_id FROM deg)
-),
-recv{i} AS (
-  SELECT e.dst_id AS id, sum(r.score / deg.d) AS recv
-  FROM {edges_name} e JOIN {prev} r ON e.src_id = r.id
-  JOIN deg ON e.src_id = deg.src_id
-  GROUP BY e.dst_id
-),
-{cur} AS (
-  SELECT v.id,
-         {update} AS score
-  FROM {verts_name} v CROSS JOIN n CROSS JOIN m{i}
-  LEFT JOIN recv{i} rc ON v.id = rc.id
-),"""
-        )
-    body = "\n".join(parts).rstrip(",\n") + "\n"
-    # strip the trailing comma of the final CTE
-    body = body.rstrip()
-    if body.endswith(","):
-        body = body[:-1]
-    score = (
-        "score" if round_digits is None else f"round(score, {round_digits})"
+    return _Half(
+        "r", mass, update,
+        join=f"JOIN {deg} ON e.src_id = {deg}.src_id",
+        scalar="SELECT coalesce(sum(score), 0.0) AS miss FROM {prev}"
+        f" WHERE id NOT IN (SELECT src_id FROM {deg})",
     )
-    return body + f"\nSELECT id, {score} AS score FROM r{iters}"
 
 
-@register("g_pagerank_iter3", _pagerank_iter_sql(3))
+_ROUND9 = "SELECT id, round(score, 9) AS score FROM {x}"
+_RAW = "SELECT id, score FROM {x}"
+_DEG = "deg AS (SELECT src_id, count(*) AS d FROM edges GROUP BY 1)"
+_PR3_SQL = _power_sql(3, "1.0/cnt", [_pr_half()], _ROUND9, ctes=(_DEG,))
+
+
+@register("g_pagerank_iter3", _PR3_SQL)
 def q_pagerank_iter3(spark, sf_dir):
     e = doc_edges(spark, sf_dir)
     res = pagerank(spark, e, tol=0.0, max_iter=3)
@@ -302,7 +343,7 @@ def q_pagerank_iter3(spark, sf_dir):
 
 @register(
     "g_pagerank_summary",
-    f"""WITH pr AS ({_pagerank_iter_sql(3)})
+    f"""WITH pr AS ({_PR3_SQL})
     SELECT round(quantile_cont(score, 0.5), 9) AS p50,
            round(quantile_cont(score, 0.9), 9) AS p90,
            round(max(score), 9) AS max_score,
@@ -326,7 +367,7 @@ def q_pagerank_summary(spark, sf_dir):
 @register(
     "g_vertex_features",
     f"""WITH {EDGES_CTE},
-    pr AS ({_pagerank_iter_sql(3)}),
+    pr AS ({_PR3_SQL}),
     outd AS (SELECT src_id AS id, count(*) AS out_degree FROM edges GROUP BY 1),
     ind AS (SELECT dst_id AS id, count(*) AS in_degree FROM edges GROUP BY 1),
     und AS (
@@ -391,9 +432,8 @@ _PPR_CTE = "s AS (SELECT count(*) AS scnt FROM verts WHERE id % 10 = 0)"
 
 @register(
     "g_pagerank_personalized_iter2",
-    _pagerank_iter_sql(2, extra_cte=_PPR_CTE, teleport_sql=_PPR_TP)
-    .replace("FROM verts v, n)", "FROM verts v, n, s)")
-    .replace("FROM verts v CROSS JOIN n", "FROM verts v CROSS JOIN n CROSS JOIN s"),
+    _power_sql(2, _PPR_TP, [_pr_half(_PPR_TP)], _ROUND9,
+               ctes=(_DEG, _PPR_CTE), consts=("vn", "s")),
 )
 def q_pagerank_personalized_iter2(spark, sf_dir):
     """Personalized PageRank, teleport set = vertices with id % 10 == 0,
@@ -413,18 +453,12 @@ _TRUST_TP = "CASE WHEN v.id % 7 = 0 THEN 1.0/tcnt ELSE 0.0 END"
 _TRUST_CTE = "t AS (SELECT count(*) AS tcnt FROM verts WHERE id % 7 = 0)"
 
 
-def _trustrank_sql(iters: int, round_digits: int | None = 9) -> str:
-    return (
-        _pagerank_iter_sql(iters, extra_cte=_TRUST_CTE,
-                           teleport_sql=_TRUST_TP, round_digits=round_digits)
-        .replace("FROM verts v, n)", "FROM verts v, n, t)")
-        .replace(
-            "FROM verts v CROSS JOIN n", "FROM verts v CROSS JOIN n CROSS JOIN t"
-        )
-    )
+def _trustrank_sql(select: str) -> str:
+    return _power_sql(2, _TRUST_TP, [_pr_half(_TRUST_TP)], select,
+                      ctes=(_DEG, _TRUST_CTE), consts=("vn", "t"))
 
 
-@register("g_trustrank_iter2", _trustrank_sql(2))
+@register("g_trustrank_iter2", _trustrank_sql(_ROUND9))
 def q_trustrank_iter2(spark, sf_dir):
     """TrustRank: trust-biased PageRank from seed set id % 7 == 0
     (teleport + dangling mass both target the seeds), 2 fixed iterations
@@ -440,14 +474,14 @@ def q_trustrank_iter2(spark, sf_dir):
 # the ratio divides a difference of two ~1/n-scale vectors by one of
 # them, amplifying the engines' float-sum-order flutter (~1e-15 on raw
 # scores) into the ~1e-12 range on the ratio — so the ratio is computed
-# from UNROUNDED scores (round_digits=None) and rounded at 6, where a
-# 1e-12 perturbation cannot cross a rounding boundary; pre-rounding the
-# inputs at 9 made the entry flaky (a 1e-9 input flip moved the ratio by
-# 1e-6, exactly the compare tolerance)
+# from UNROUNDED scores and rounded at 6, where a 1e-12 perturbation
+# cannot cross a rounding boundary; pre-rounding the inputs at 9 made the
+# entry flaky (a 1e-9 input flip moved the ratio by 1e-6, exactly the
+# compare tolerance)
 @register(
     "g_spam_mass",
-    f"""WITH pr AS ({_pagerank_iter_sql(2, round_digits=None)}),
-    tr AS ({_trustrank_sql(2, round_digits=None)})
+    f"""WITH pr AS ({_power_sql(2, "1.0/cnt", [_pr_half()], _RAW, ctes=(_DEG,))}),
+    tr AS ({_trustrank_sql(_RAW)})
     SELECT pr.id,
            round(pr.score, 9) AS pagerank,
            round(tr.score, 9) AS trustrank,
@@ -467,10 +501,11 @@ def q_spam_mass(spark, sf_dir):
 
 @register(
     "g_inverse_pagerank_seeds",
-    f"""WITH rpr AS ({_pagerank_iter_sql(
-        2,
-        edges_name="redges",
-        extra_cte="redges AS (SELECT dst_id AS src_id, src_id AS dst_id FROM edges)",
+    f"""WITH rpr AS ({_power_sql(
+        2, "1.0/cnt", [_pr_half()], _ROUND9, edges="redges", ctes=(
+            "redges AS (SELECT dst_id AS src_id, src_id AS dst_id FROM edges)",
+            "deg AS (SELECT src_id, count(*) AS d FROM redges GROUP BY 1)",
+        ),
     )})
     SELECT id, score, rank FROM (
       SELECT id, score,
@@ -499,12 +534,10 @@ mverts AS (
 
 @register(
     "g_pagerank_multi_iter2",
-    _pagerank_iter_sql(
-        2, edges_name="em", verts_name="mverts", extra_cte=_MULTI_CTE
-    ).replace("1.0/cnt AS score FROM mverts v, n",
-              "1.0/(SELECT count(*) FROM mverts) AS score FROM mverts v, n")
-    .replace("0.15/cnt", "0.15/(SELECT count(*) FROM mverts)")
-    .replace("miss/cnt", "miss/(SELECT count(*) FROM mverts)"),
+    _power_sql(
+        2, "1.0/cnt", [_pr_half()], _ROUND9, edges="em", verts="mverts",
+        ctes=(_MULTI_CTE, "deg AS (SELECT src_id, count(*) AS d FROM em GROUP BY 1)"),
+    ),
 )
 def q_pagerank_multi_iter2(spark, sf_dir):
     """Multigraph PageRank (BuildTextMultigraph.java:76-92 semantics):
@@ -636,106 +669,12 @@ def q_rectangle_count(spark, sf_dir):
     return rectangle_count(doc_edges(spark, sf_dir))
 
 
-def _louvain_sql(rounds: int = 2) -> str:
-    """Unrolled synchronous Louvain move rounds (parity-gated, integer
-    score2 — mirrors operators/community.py:louvain_communities exactly)."""
-    parts = [
-        f"WITH {EDGES_CTE},",
-        "lund AS (SELECT DISTINCT least(src_id, dst_id) AS u,"
-        " greatest(src_id, dst_id) AS v FROM edges),",
-        "lsym AS (SELECT u AS a, v AS b FROM lund UNION ALL SELECT v, u FROM lund),",
-        "ldeg AS (SELECT a AS id, count(*) AS k FROM lsym GROUP BY a),",
-        "lm AS (SELECT CAST(count(*) / 2 AS BIGINT) AS m FROM lsym),",
-        "cm0 AS (SELECT id, id AS community FROM ldeg),",
-    ]
-    for r in range(rounds):
-        parts.append(
-            f"""csum{r} AS (
-  SELECT community, sum(k) AS ctot
-  FROM cm{r} JOIN ldeg USING (id) GROUP BY community
-),
-kic{r} AS (
-  SELECT s.a AS id, c.community AS c, count(*) AS kic
-  FROM lsym s JOIN cm{r} c ON c.id = s.b GROUP BY 1, 2
-),
-kc{r} AS (
-  SELECT k.id, k.c, k.kic, cm.community AS cur
-  FROM kic{r} k JOIN cm{r} cm USING (id)
-),
-stay{r} AS (
-  SELECT cm.id, cm.community AS c, 0 AS kic, cm.community AS cur
-  FROM cm{r} cm
-  WHERE NOT EXISTS (
-    SELECT 1 FROM kc{r} x WHERE x.id = cm.id AND x.c = cm.community
-  )
-),
-cand{r} AS (SELECT * FROM kc{r} UNION ALL SELECT * FROM stay{r}),
-sc{r} AS (
-  SELECT cd.id, cd.c, cd.cur,
-         2 * lm.m * cd.kic
-           - d.k * (cs.ctot - CASE WHEN cd.c = cd.cur THEN d.k ELSE 0 END)
-           AS score2
-  FROM cand{r} cd
-  JOIN ldeg d ON d.id = cd.id
-  JOIN csum{r} cs ON cs.community = cd.c
-  CROSS JOIN lm
-),
-pick{r} AS (
-  SELECT id, c, cur,
-         row_number() OVER (
-           PARTITION BY id
-           ORDER BY score2 DESC,
-                    CASE WHEN c = cur THEN 0 ELSE 1 END, c) AS rn
-  FROM sc{r}
-),
-cm{r + 1} AS (
-  SELECT id,
-         CASE WHEN (id + {r}) % 2 = 0 THEN c ELSE cur END AS community
-  FROM pick{r} WHERE rn = 1
-),"""
-        )
-    body = "\n".join(parts).rstrip().rstrip(",")
-    return body + f"\nSELECT id, community FROM cm{rounds}"
-
-
-@register("g_louvain_r2", _louvain_sql(2))
-def q_louvain_r2(spark, sf_dir):
-    """Two parity-gated synchronous Louvain move rounds (exact
-    integer-arithmetic contract; convergence run is g_louvain_converged)."""
-    from ..operators.community import louvain_communities
-
-    res = louvain_communities(spark, doc_edges(spark, sf_dir), max_rounds=2)
-    return res.communities
-
-
-@register("g_louvain_converged", None)
-def q_louvain_converged(spark, sf_dir):
-    """Louvain to the two-quiet-rounds fixpoint (unbounded rounds —
-    rows-only here; exact python-replay oracle in pytest)."""
-    from ..operators.community import louvain_communities
-
-    return louvain_communities(spark, doc_edges(spark, sf_dir)).communities
-
-
-@register("g_louvain_levels", None)
-def q_louvain_levels(spark, sf_dir):
-    """Multi-level Louvain (move loop → weighted quotient contraction →
-    repeat): the full Blondel hierarchy. Unbounded inner convergence →
-    rows-only here; the exact python-replay oracle plus the
-    modularity-non-decreasing and clique-separation properties are
-    pytest-asserted (tests/test_louvain.py). Fixed-work hash-verified
-    sibling: g_louvain_levels_l2."""
-    from ..operators.community import louvain_levels
-
-    return louvain_levels(spark, doc_edges(spark, sf_dir), max_levels=2).communities
-
-
 def _weighted_louvain_rounds_sql(lv: str, rounds: int) -> str:
-    """Unrolled WEIGHTED synchronous move rounds over ``sym{lv}`` (a, b, w)
-    — the weighted generalization of ``_louvain_sql``'s integer score2
-    contract (mirrors operators/community.py:_weighted_move_loop: kic
-    excludes self-loops, degrees include doubled self-loops, parity gate
-    (id + r) % 2, ties → stay then lower community id)."""
+    """Unrolled weighted synchronous move rounds over ``sym{lv}`` (a, b, w),
+    integer score2 contract (mirrors operators/community.py:
+    _weighted_move_loop: kic excludes self-loops, degrees include doubled
+    self-loops, parity gate (id + r) % 2, ties → stay then lower community
+    id); ``_louvain_sql`` is its unit-weight case."""
     parts = [
         f"deg{lv} AS MATERIALIZED (SELECT a AS id, CAST(sum(w) AS BIGINT) AS k"
         f" FROM sym{lv} GROUP BY a),",
@@ -795,6 +734,62 @@ cm{lv}_{r + 1} AS MATERIALIZED (
     return "\n".join(parts)
 
 
+# lund/syma MATERIALIZED: DuckDB inlines plain CTEs per reference, and the
+# Louvain oracles reference the symmetric edge set once per unrolled CTE —
+# un-materialized, every reference re-expands to a parquet scan and the
+# process runs out of file descriptors
+_LOUVAIN_SYM_CTE = """lund AS MATERIALIZED (
+      SELECT DISTINCT least(src_id, dst_id) AS u, greatest(src_id, dst_id) AS v
+      FROM edges
+    ),
+    syma AS MATERIALIZED (
+      SELECT u AS a, v AS b, CAST(1 AS BIGINT) AS w FROM lund
+      UNION ALL SELECT v, u, CAST(1 AS BIGINT) FROM lund
+    ),"""
+
+
+def _louvain_sql(rounds: int = 2) -> str:
+    """Unrolled synchronous Louvain move rounds (parity-gated, integer
+    score2 — mirrors operators/community.py:louvain_communities exactly)."""
+    lvl0 = _weighted_louvain_rounds_sql("a", rounds).rstrip().rstrip(",")
+    return f"""WITH {EDGES_CTE},
+    {_LOUVAIN_SYM_CTE}
+    {lvl0}
+    SELECT id, community FROM cma_{rounds}"""
+
+
+@register("g_louvain_r2", _louvain_sql(2))
+def q_louvain_r2(spark, sf_dir):
+    """Two parity-gated synchronous Louvain move rounds (exact
+    integer-arithmetic contract; convergence run is g_louvain_converged)."""
+    from ..operators.community import louvain_communities
+
+    res = louvain_communities(spark, doc_edges(spark, sf_dir), max_rounds=2)
+    return res.communities
+
+
+@register("g_louvain_converged", None)
+def q_louvain_converged(spark, sf_dir):
+    """Louvain to the two-quiet-rounds fixpoint (unbounded rounds —
+    rows-only here; exact python-replay oracle in pytest)."""
+    from ..operators.community import louvain_communities
+
+    return louvain_communities(spark, doc_edges(spark, sf_dir)).communities
+
+
+@register("g_louvain_levels", None)
+def q_louvain_levels(spark, sf_dir):
+    """Multi-level Louvain (move loop → weighted quotient contraction →
+    repeat): the full Blondel hierarchy. Unbounded inner convergence →
+    rows-only here; the exact python-replay oracle plus the
+    modularity-non-decreasing and clique-separation properties are
+    pytest-asserted (tests/test_louvain.py). Fixed-work hash-verified
+    sibling: g_louvain_levels_l2."""
+    from ..operators.community import louvain_levels
+
+    return louvain_levels(spark, doc_edges(spark, sf_dir), max_levels=2).communities
+
+
 def _louvain_levels_sql(rounds: int = 2) -> str:
     """Two full Louvain levels, fixed work: ``rounds`` weighted move
     rounds from singletons, quotient contraction (intra edges →
@@ -802,19 +797,8 @@ def _louvain_levels_sql(rounds: int = 2) -> str:
     quotient, then the composed original-vertex → final-community map."""
     lvl0 = _weighted_louvain_rounds_sql("a", rounds)
     lvl1 = _weighted_louvain_rounds_sql("b", rounds).rstrip().rstrip(",")
-    # lund/syma MATERIALIZED: DuckDB inlines plain CTEs per reference, and
-    # this oracle references the symmetric edge set once per unrolled CTE —
-    # un-materialized, every reference re-expands to a parquet scan and the
-    # process runs out of file descriptors
     return f"""WITH {EDGES_CTE},
-    lund AS MATERIALIZED (
-      SELECT DISTINCT least(src_id, dst_id) AS u, greatest(src_id, dst_id) AS v
-      FROM edges
-    ),
-    syma AS MATERIALIZED (
-      SELECT u AS a, v AS b, CAST(1 AS BIGINT) AS w FROM lund
-      UNION ALL SELECT v, u, CAST(1 AS BIGINT) FROM lund
-    ),
+    {_LOUVAIN_SYM_CTE}
     {lvl0}
     qund AS MATERIALIZED (
       SELECT least(ca.community, cb.community) AS u,
@@ -964,40 +948,16 @@ def q_top_out_degree(spark, sf_dir):
     )
 
 
-def _weighted_pr_sql(iters: int = 2) -> str:
-    """Unrolled weighted PageRank: per-edge weight (src+dst)%7+1,
-    contribution = score · (w / Σw(src))."""
-    parts = [
-        f"WITH {EDGES_CTE},",
-        "we AS (SELECT src_id, dst_id, (src_id + dst_id) % 7 + 1 AS w FROM edges),",
-        "sw AS (SELECT src_id, sum(w) AS tw FROM we GROUP BY 1),",
-        "r0 AS (SELECT id, 1.0/cnt AS score FROM verts, n),",
-    ]
-    for i in range(iters):
-        prev, cur = f"r{i}", f"r{i+1}"
-        parts.append(
-            f"""m{i} AS (
-  SELECT coalesce(sum(score), 0.0) AS miss FROM {prev}
-  WHERE id NOT IN (SELECT src_id FROM sw)
-),
-recv{i} AS (
-  SELECT e.dst_id AS id, sum(r.score * (e.w / sw.tw)) AS recv
-  FROM we e JOIN {prev} r ON e.src_id = r.id
-  JOIN sw ON e.src_id = sw.src_id
-  GROUP BY 1
-),
-{cur} AS (
-  SELECT v.id,
-         0.15/cnt + 0.85*(coalesce(recv, 0.0) + miss/cnt) AS score
-  FROM verts v CROSS JOIN n CROSS JOIN m{i}
-  LEFT JOIN recv{i} rc ON v.id = rc.id
-),"""
-        )
-    body = "\n".join(parts).rstrip().rstrip(",")
-    return body + f"\nSELECT id, round(score, 9) AS score FROM r{iters}"
-
-
-@register("g_pagerank_weighted_iter2", _weighted_pr_sql(2))
+@register(
+    "g_pagerank_weighted_iter2",
+    _power_sql(
+        2, "1.0/cnt", [_pr_half(deg="sw", mass="r.score * (e.w / sw.tw)")],
+        _ROUND9, edges="we", ctes=(
+            "we AS (SELECT src_id, dst_id, (src_id + dst_id) % 7 + 1 AS w FROM edges)",
+            "sw AS (SELECT src_id, sum(w) AS tw FROM we GROUP BY 1)",
+        ),
+    ),
+)
 def q_pagerank_weighted_iter2(spark, sf_dir):
     """Weighted PageRank: explicit per-edge weight column, contributions
     proportional to w/Σw(src)."""
@@ -1008,42 +968,23 @@ def q_pagerank_weighted_iter2(spark, sf_dir):
     return res.ranks.select("id", F.round("score", 9).alias("score"))
 
 
-def _hits_iter_sql(iters: int = 2) -> str:
-    """Unrolled L1-normalized HITS."""
-    parts = [
-        f"WITH {EDGES_CTE},",
-        "h0 AS (SELECT id, 1.0/cnt AS score FROM verts, n),",
-    ]
-    for i in range(1, iters + 1):
-        parts.append(
-            f"""araw{i} AS (
-  SELECT e.dst_id AS id, sum(h.score) AS raw
-  FROM edges e JOIN h{i-1} h ON e.src_id = h.id GROUP BY 1
-),
-sa{i} AS (SELECT sum(raw) AS s FROM araw{i}),
-a{i} AS (
-  SELECT v.id, coalesce(raw, 0.0) / s AS score
-  FROM verts v CROSS JOIN sa{i} LEFT JOIN araw{i} ar ON v.id = ar.id
-),
-hraw{i} AS (
-  SELECT e.src_id AS id, sum(a.score) AS raw
-  FROM edges e JOIN a{i} a ON e.dst_id = a.id GROUP BY 1
-),
-sh{i} AS (SELECT sum(raw) AS s FROM hraw{i}),
-h{i} AS (
-  SELECT v.id, coalesce(raw, 0.0) / s AS score
-  FROM verts v CROSS JOIN sh{i} LEFT JOIN hraw{i} hr ON v.id = hr.id
-),"""
-        )
-    body = "\n".join(parts).rstrip().rstrip(",")
-    return body + (
-        f"\nSELECT h.id, round(h.score, 9) AS hub,"
-        f" round(a.score, 9) AS authority"
-        f"\nFROM h{iters} h JOIN a{iters} a ON h.id = a.id"
-    )
+# HITS, SALSA and eigenvector centrality: L1-normalized half-steps
+_NORM = "SELECT sum(recv) AS s FROM {sums}"
+_L1 = "coalesce(recv, 0.0) / s"
+_HUB_AUTH = (
+    "SELECT h.id, round(h.score, 9) AS hub, round(a.score, 9) AS authority"
+    "\nFROM {h} h JOIN {a} a ON h.id = a.id"
+)
+_HITS_HALVES = [
+    _Half("a", "h.score", _L1, scalar=_NORM),
+    _Half("h", "a.score", _L1, frm="dst_id", to="src_id", scalar=_NORM),
+]
 
 
-@register("g_hits_iter2", _hits_iter_sql(2))
+@register(
+    "g_hits_iter2",
+    _power_sql(2, "1.0/cnt", _HITS_HALVES, _HUB_AUTH),
+)
 def q_hits_iter2(spark, sf_dir):
     """HITS hubs/authorities, 2 L1-normalized iterations."""
     from ..operators.centrality import hits
@@ -1055,28 +996,13 @@ def q_hits_iter2(spark, sf_dir):
     )
 
 
-def _katz_iter_sql(iters: int = 3, alpha: float = 0.05, beta: float = 1.0) -> str:
-    """Unrolled Katz fixed point: c' = beta + alpha * A^T c, c0 = beta."""
-    parts = [
-        f"WITH {EDGES_CTE},",
-        f"c0 AS (SELECT id, CAST({beta} AS DOUBLE) AS score FROM verts),",
-    ]
-    for i in range(1, iters + 1):
-        parts.append(
-            f"""krecv{i} AS (
-  SELECT e.dst_id AS id, sum(c.score) AS recv
-  FROM edges e JOIN c{i-1} c ON e.src_id = c.id GROUP BY 1
-),
-c{i} AS (
-  SELECT v.id, CAST({beta} AS DOUBLE) + {alpha} * coalesce(recv, 0.0) AS score
-  FROM verts v LEFT JOIN krecv{i} r ON v.id = r.id
-),"""
-        )
-    body = "\n".join(parts).rstrip().rstrip(",")
-    return body + f"\nSELECT id, round(score, 9) AS score FROM c{iters}"
-
-
-@register("g_katz_iter3", _katz_iter_sql(3))
+# Katz fixed point c' = beta + alpha · Aᵀc, c0 = beta (alpha=0.05, beta=1)
+@register(
+    "g_katz_iter3",
+    _power_sql(3, "CAST(1.0 AS DOUBLE)", [
+        _Half("c", "c.score", "CAST(1.0 AS DOUBLE) + 0.05 * coalesce(recv, 0.0)"),
+    ], _ROUND9),
+)
 def q_katz_iter3(spark, sf_dir):
     """Katz centrality (alpha=0.05, beta=1), 3 fixed iterations."""
     from ..operators.centrality import katz_centrality
@@ -1085,29 +1011,10 @@ def q_katz_iter3(spark, sf_dir):
     return res.scores.select("id", F.round("score", 9).alias("score"))
 
 
-def _eigen_iter_sql(iters: int = 3) -> str:
-    """Unrolled L1-normalized power iteration on A^T."""
-    parts = [
-        f"WITH {EDGES_CTE},",
-        "x0 AS (SELECT id, 1.0/cnt AS score FROM verts, n),",
-    ]
-    for i in range(1, iters + 1):
-        parts.append(
-            f"""xraw{i} AS (
-  SELECT e.dst_id AS id, sum(x.score) AS raw
-  FROM edges e JOIN x{i-1} x ON e.src_id = x.id GROUP BY 1
-),
-xs{i} AS (SELECT sum(raw) AS s FROM xraw{i}),
-x{i} AS (
-  SELECT v.id, coalesce(raw, 0.0) / s AS score
-  FROM verts v CROSS JOIN xs{i} LEFT JOIN xraw{i} r ON v.id = r.id
-),"""
-        )
-    body = "\n".join(parts).rstrip().rstrip(",")
-    return body + f"\nSELECT id, round(score, 9) AS score FROM x{iters}"
-
-
-@register("g_eigenvector_iter3", _eigen_iter_sql(3))
+@register(
+    "g_eigenvector_iter3",
+    _power_sql(3, "1.0/cnt", [_Half("x", "x.score", _L1, scalar=_NORM)], _ROUND9),
+)
 def q_eigenvector_iter3(spark, sf_dir):
     """Eigenvector centrality: 3 L1-normalized power-iteration steps."""
     from ..operators.centrality import eigenvector_centrality
@@ -1116,46 +1023,18 @@ def q_eigenvector_iter3(spark, sf_dir):
     return res.scores.select("id", F.round("score", 9).alias("score"))
 
 
-def _salsa_iter_sql(iters: int = 2) -> str:
-    """Unrolled SALSA: HITS over the degree-stochastic adjacency."""
-    parts = [
-        f"WITH {EDGES_CTE},",
-        "sod AS (SELECT src_id, count(*) AS d FROM edges GROUP BY 1),",
-        "sind AS (SELECT dst_id, count(*) AS d FROM edges GROUP BY 1),",
-        "sh0 AS (SELECT id, 1.0/cnt AS score FROM verts, n),",
-    ]
-    for i in range(1, iters + 1):
-        parts.append(
-            f"""saraw{i} AS (
-  SELECT e.dst_id AS id, sum(h.score / sod.d) AS raw
-  FROM edges e JOIN sh{i-1} h ON e.src_id = h.id
-  JOIN sod ON e.src_id = sod.src_id GROUP BY 1
-),
-sas{i} AS (SELECT sum(raw) AS s FROM saraw{i}),
-sa{i} AS (
-  SELECT v.id, coalesce(raw, 0.0) / s AS score
-  FROM verts v CROSS JOIN sas{i} LEFT JOIN saraw{i} ar ON v.id = ar.id
-),
-shraw{i} AS (
-  SELECT e.src_id AS id, sum(a.score / sind.d) AS raw
-  FROM edges e JOIN sa{i} a ON e.dst_id = a.id
-  JOIN sind ON e.dst_id = sind.dst_id GROUP BY 1
-),
-shs{i} AS (SELECT sum(raw) AS s FROM shraw{i}),
-sh{i} AS (
-  SELECT v.id, coalesce(raw, 0.0) / s AS score
-  FROM verts v CROSS JOIN shs{i} LEFT JOIN shraw{i} hr ON v.id = hr.id
-),"""
-        )
-    body = "\n".join(parts).rstrip().rstrip(",")
-    return body + (
-        f"\nSELECT h.id, round(h.score, 9) AS hub,"
-        f" round(a.score, 9) AS authority"
-        f"\nFROM sh{iters} h JOIN sa{iters} a ON h.id = a.id"
-    )
-
-
-@register("g_salsa_iter2", _salsa_iter_sql(2))
+@register(
+    "g_salsa_iter2",
+    _power_sql(2, "1.0/cnt", [
+        _Half("a", "h.score / sod.d", _L1, scalar=_NORM,
+              join="JOIN sod ON e.src_id = sod.src_id"),
+        _Half("h", "a.score / sind.d", _L1, frm="dst_id", to="src_id",
+              scalar=_NORM, join="JOIN sind ON e.dst_id = sind.dst_id"),
+    ], _HUB_AUTH, ctes=(
+        "sod AS (SELECT src_id, count(*) AS d FROM edges GROUP BY 1)",
+        "sind AS (SELECT dst_id, count(*) AS d FROM edges GROUP BY 1)",
+    )),
+)
 def q_salsa_iter2(spark, sf_dir):
     """SALSA hubs/authorities over the stochastic adjacency, 2 iterations."""
     from ..operators.centrality import salsa
@@ -1681,10 +1560,13 @@ def q_sssp_r8(spark, sf_dir):
     return res.distances.select("id", "dist")
 
 
-_SEED_BFS_CTE = """
+def _seed_bfs_cte(residue: int) -> str:
+    """Labeled multi-source BFS from the seeds id % 50 == ``residue``,
+    at most 40 hops: ``d`` holds (src, id, dist) for every reached pair."""
+    return f"""
     r AS (
       SELECT id AS src, id, CAST(0 AS BIGINT) AS dist
-      FROM verts WHERE id % 50 = 0
+      FROM verts WHERE id % 50 = {residue}
       UNION
       SELECT r.src, e.dst_id, r.dist + 1
       FROM r JOIN edges e ON e.src_id = r.id WHERE r.dist < 40
@@ -1694,7 +1576,7 @@ _SEED_BFS_CTE = """
 
 @register(
     "g_eccentricity",
-    f"""WITH RECURSIVE {EDGES_CTE},{_SEED_BFS_CTE}
+    f"""WITH RECURSIVE {EDGES_CTE},{_seed_bfs_cte(0)}
     SELECT src, max(dist) AS eccentricity, count(*) - 1 AS n_reached
     FROM d GROUP BY src""",
 )
@@ -1712,7 +1594,7 @@ def q_eccentricity(spark, sf_dir):
 
 @register(
     "g_effective_diameter",
-    f"""WITH RECURSIVE {EDGES_CTE},{_SEED_BFS_CTE}
+    f"""WITH RECURSIVE {EDGES_CTE},{_seed_bfs_cte(0)}
     SELECT count(*) AS n_pairs, max(dist) AS diameter_lb,
            round(quantile_cont(dist, 0.9), 6) AS effective_diameter
     FROM d WHERE dist > 0""",
@@ -3703,15 +3585,7 @@ def q_ktruss3_r2(spark, sf_dir):
 
 @register(
     "g_harmonic",
-    f"""WITH RECURSIVE {EDGES_CTE},
-    seeds AS (SELECT id FROM verts WHERE id % 50 = 1),
-    r AS (
-      SELECT id AS src, id, CAST(0 AS BIGINT) AS dist FROM seeds
-      UNION
-      SELECT r.src, e.dst_id, r.dist + 1
-      FROM r JOIN edges e ON e.src_id = r.id WHERE r.dist < 40
-    ),
-    d AS (SELECT src, id, min(dist) AS dist FROM r GROUP BY 1, 2)
+    f"""WITH RECURSIVE {EDGES_CTE},{_seed_bfs_cte(1)}
     SELECT id, round(sum(1.0 / dist), 9) AS harmonic,
            count(*) AS n_sources
     FROM d WHERE dist > 0 GROUP BY id""",
@@ -3734,15 +3608,7 @@ def q_harmonic(spark, sf_dir):
 # reciprocal-sum (the two standard geodesic centralities side by side)
 @register(
     "g_closeness",
-    f"""WITH RECURSIVE {EDGES_CTE},
-    seeds AS (SELECT id FROM verts WHERE id % 50 = 1),
-    r AS (
-      SELECT id AS src, id, CAST(0 AS BIGINT) AS dist FROM seeds
-      UNION
-      SELECT r.src, e.dst_id, r.dist + 1
-      FROM r JOIN edges e ON e.src_id = r.id WHERE r.dist < 40
-    ),
-    d AS (SELECT src, id, min(dist) AS dist FROM r GROUP BY 1, 2)
+    f"""WITH RECURSIVE {EDGES_CTE},{_seed_bfs_cte(1)}
     SELECT id,
            round(CAST(count(*) AS DOUBLE) / sum(dist), 9) AS closeness,
            CAST(sum(dist) AS BIGINT) AS sum_dist,
@@ -4307,52 +4173,31 @@ def q_ev_stream_followup(spark, sf_dir):
 
 
 # --------------------------------------- host-level composition pipelines
-def _host_pr_sql(iters: int = 3) -> str:
-    """Weighted PageRank over the cross-host quotient graph (weight =
-    underlying page-edge count; intra-host links dropped — nav-link mass
-    must not self-boost a host)."""
-    parts = [
-        f"WITH {EDGES_CTE},",
-        "hm AS (SELECT doc_id, CAST(substr(source, 4) AS BIGINT) AS hid"
-        " FROM documents),",
-        """he AS (
+# weighted PageRank over the cross-host quotient graph (weight =
+# underlying page-edge count; intra-host links dropped — nav-link mass
+# must not self-boost a host)
+@register(
+    "g_host_pagerank_iter3",
+    _power_sql(
+        3, "1.0/cnt", [_pr_half(deg="sw", mass="r.score * (e.w / sw.tw)")],
+        "SELECT id AS host_id, round(score, 9) AS score FROM {x}",
+        edges="he", verts="hv", ctes=(
+            "hm AS (SELECT doc_id, CAST(substr(source, 4) AS BIGINT) AS hid"
+            " FROM documents)",
+            """he AS (
   SELECT s.hid AS src_id, d.hid AS dst_id, count(*) AS w
   FROM edges e
   JOIN hm s ON s.doc_id = e.src_id
   JOIN hm d ON d.doc_id = e.dst_id
   WHERE s.hid <> d.hid
   GROUP BY 1, 2
-),""",
-        "hv AS (SELECT DISTINCT hid AS id FROM ("
-        "SELECT src_id AS hid FROM he UNION ALL SELECT dst_id FROM he)),",
-        "hn AS (SELECT count(*) AS cnt FROM hv),",
-        "sw AS (SELECT src_id, sum(w) AS tw FROM he GROUP BY 1),",
-        "r0 AS (SELECT id, 1.0/cnt AS score FROM hv, hn),",
-    ]
-    for i in range(iters):
-        prev, cur = f"r{i}", f"r{i+1}"
-        parts.append(
-            f"""m{i} AS (
-  SELECT coalesce(sum(score), 0.0) AS miss FROM {prev}
-  WHERE id NOT IN (SELECT src_id FROM sw)
-),
-recv{i} AS (
-  SELECT e.dst_id AS id, sum(r.score * (e.w / sw.tw)) AS recv
-  FROM he e JOIN {prev} r ON e.src_id = r.id
-  JOIN sw ON e.src_id = sw.src_id
-  GROUP BY 1
-),
-{cur} AS (
-  SELECT v.id, 0.15/cnt + 0.85*(coalesce(recv, 0.0) + miss/cnt) AS score
-  FROM hv v CROSS JOIN hn CROSS JOIN m{i}
-  LEFT JOIN recv{i} rc ON v.id = rc.id
-),"""
-        )
-    body = "\n".join(parts).rstrip().rstrip(",")
-    return body + f"\nSELECT id AS host_id, round(score, 9) AS score FROM r{iters}"
-
-
-@register("g_host_pagerank_iter3", _host_pr_sql(3))
+)""",
+            "hv AS (SELECT DISTINCT hid AS id FROM ("
+            "SELECT src_id AS hid FROM he UNION ALL SELECT dst_id FROM he))",
+            "sw AS (SELECT src_id, sum(w) AS tw FROM he GROUP BY 1)",
+        ),
+    ),
+)
 def q_host_pagerank_iter3(spark, sf_dir):
     """End-to-end web composition: page edges → cross-host quotient graph
     → weighted PageRank on hosts (the production shape of 'rank the
@@ -4443,7 +4288,7 @@ def q_host_modularity(spark, sf_dir):
 
 @register(
     "g_host_top_pages",
-    f"""WITH pr AS ({_pagerank_iter_sql(3)}),
+    f"""WITH pr AS ({_PR3_SQL}),
     hm AS (SELECT doc_id, source FROM documents),
     ranked AS (
       SELECT hm.source AS host, pr.id, pr.score,

@@ -8,10 +8,12 @@ from __future__ import annotations
 import math
 
 import duckdb
+import numpy as np
 import pyarrow as pa
 import pytest
 
 from bitcoinpagerank_spark.plans import catalog
+from oracles import pagerank_oracle, ppr_oracle
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = [
@@ -89,6 +91,57 @@ def test_oracle_output_types_are_hashable(con, name):
         f"{name}: oracle columns {bad} surface as decimal128 (DuckDB "
         f"HUGEINT/DECIMAL promotion) — wrap with CAST(... AS BIGINT/DOUBLE)"
     )
+
+
+def test_power_sql_matches_numpy(con):
+    """The unrolled power-iteration SQL, unrounded, against numpy at
+    iteration counts no registered oracle uses, so an off-by-one in the
+    unroll cannot hide behind the fixed 2 or 3."""
+    edges = con.execute(
+        f"WITH {catalog.EDGES_CTE} SELECT src_id, dst_id FROM edges"
+    ).fetchall()
+    raw = "SELECT id, score FROM {x}"
+
+    def close(sql, want):
+        got = dict(con.execute(sql).fetchall())
+        assert got.keys() == want.keys()
+        assert max(abs(got[v] - want[v]) for v in want) <= 1e-12
+
+    for k in (1, 5):
+        close(
+            catalog._power_sql(
+                k, "1.0/cnt", [catalog._pr_half()], raw, ctes=(catalog._DEG,)
+            ),
+            pagerank_oracle(edges, tol=0, max_iter=k),
+        )
+    seeds = {v for e in edges for v in e if v % 10 == 0}
+    close(
+        catalog._power_sql(
+            5, catalog._PPR_TP, [catalog._pr_half(catalog._PPR_TP)], raw,
+            ctes=(catalog._DEG, catalog._PPR_CTE), consts=("vn", "s"),
+        ),
+        ppr_oracle(edges, seeds, tol=0, max_iter=5),
+    )
+
+    nodes = sorted({v for e in edges for v in e})
+    idx = {v: i for i, v in enumerate(nodes)}
+    adj = np.zeros((len(nodes), len(nodes)))
+    for s, d in edges:
+        adj[idx[s], idx[d]] = 1.0
+    hub = np.full(len(nodes), 1.0 / len(nodes))
+    for _ in range(2):
+        auth = adj.T @ hub
+        auth /= auth.sum()
+        hub = adj @ auth
+        hub /= hub.sum()
+    rows = con.execute(catalog._power_sql(
+        2, "1.0/cnt", catalog._HITS_HALVES,
+        "SELECT h.id, h.score, a.score FROM {h} h JOIN {a} a ON h.id = a.id",
+    )).fetchall()
+    assert sorted(r[0] for r in rows) == nodes
+    for v, h, a in rows:
+        assert abs(h - hub[idx[v]]) <= 1e-12
+        assert abs(a - auth[idx[v]]) <= 1e-12
 
 
 def test_driver_window_spends_no_slot_on_rows_only():
